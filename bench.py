@@ -131,7 +131,7 @@ COMPACT_SUBSET = [
 ]
 
 
-def steal_ticks() -> int:
+def steal_ticks(stat_path: str = "/proc/stat") -> int:
     """Cumulative hypervisor steal ticks (summed over CPUs) — the host
     is a VM with documented 0-25% bursty steal; recording the delta
     around every timed region makes each BENCH artifact carry per-query
@@ -139,8 +139,9 @@ def steal_ticks() -> int:
     (VERDICT r14 #2: "auto-record controls + steal per slot").  Returns
     0 when /proc/stat is unavailable so the bench runs anywhere."""
     try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[9])
+        with open(stat_path) as f:
+            # cpu user nice system idle iowait irq softirq steal guest ...
+            return int(f.readline().split()[8])
     except Exception:
         return 0
 

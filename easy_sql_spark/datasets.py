@@ -41,6 +41,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def input_file_lengths(spark: SparkSession, files: list[str]):
+    """Yield each file's length in bytes, one driver-side
+    ``getFileStatus`` per file as the caller asks for it, so a caller
+    that has seen enough stops stat-ing."""
+    sc = spark.sparkContext
+    hconf = sc._jsc.hadoopConfiguration()
+    for f in files:
+        path = sc._jvm.org.apache.hadoop.fs.Path(f)
+        yield path.getFileSystem(hconf).getFileStatus(path).getLen()
+
+
 def spread(
     df: DataFrame, parallelism: int | None = None, min_bytes: int = 0
 ) -> DataFrame:
@@ -75,19 +86,14 @@ def spread(
     if not files:
         # non-file source (inline/local relation): these are tiny; spread.
         return df.repartition(target)
-    jvm = sc._jvm
-    hconf = sc._jsc.hadoopConfiguration()
     max_bytes = int(
-        jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
         )
     )
     splits = 0
     total = 0
-    for f in files:
-        path = jvm.org.apache.hadoop.fs.Path(f)
-        fs = path.getFileSystem(hconf)
-        size = fs.getFileStatus(path).getLen()
+    for size in input_file_lengths(spark, files):
         total += size
         splits += max(1, -(-size // max_bytes))
         if splits * 2 > target:  # already parallel enough; stop stat-ing

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..datasets import input_file_lengths
+
 
 def _bucket_tree(x: F.Column, boundaries: list[float], offset: int) -> F.Column:
     """Balanced CASE-WHEN binary search over sorted boundary literals —
@@ -71,7 +73,7 @@ ZPROBE_SAMPLE_TARGET_BYTES = 2 << 20
 
 def _probe_fraction(df: DataFrame) -> float:
     """Sampling fraction for the quantile probe, from driver-side scan
-    metadata (same inputFiles technique as datasets.spread — no job).
+    metadata (``inputFiles`` lengths, as in datasets.spread — no job).
     1.0 when the plan's leaf bytes are small or unknowable."""
     import os
 
@@ -91,14 +93,11 @@ def _probe_fraction(df: DataFrame) -> float:
         files = df.inputFiles()
         if not files:
             return 1.0
-        spark = df.sparkSession
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
         total = 0
-        for f in files:
-            path = jvm.org.apache.hadoop.fs.Path(f)
-            fs = path.getFileSystem(hconf)
-            total += fs.getFileStatus(path).getLen()
+        for size in input_file_lengths(df.sparkSession, files):
+            total += size
+            if total > 100 * target:  # the 1% floor decides from here
+                break
     except Exception:  # pragma: no cover - exotic sources; just don't sample
         return 1.0
     if total <= target:

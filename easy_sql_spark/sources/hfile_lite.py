@@ -1,4 +1,4 @@
-"""HBase HFile v2/v3 codec — pure stdlib, for Hudi HFILE payloads.
+"""HBase HFile v2/v3 codec, for Hudi HFILE payloads.
 
 Hudi stores METADATA TABLE file groups (and ``HFILE_DATA_BLOCK``s,
 ``HoodieLogBlockType`` ordinal 4) as HBase HFiles: row key = record
@@ -7,8 +7,12 @@ the public HFile specification (HBase book appendix "HFile format",
 ``org.apache.hadoop.hbase.io.hfile`` — FixedFileTrailer, HFileBlock,
 HFileWriterImpl) restricted to the subset Hudi's own HBase-free native
 reader pins down in RFC-84 ("HFile format for Hudi"): v2/v3 trailers,
-NONE/GZ compression, no encryption, no data-block encoding, cells in
-``KeyValue`` layout.
+NONE/GZ/SNAPPY/LZ4 compression, no encryption, no data-block encoding,
+cells in ``KeyValue`` layout.  SNAPPY and LZ4 blocks carry Hadoop's
+block framing (below) around chunks coded by pyarrow's ``snappy`` and
+``lz4_raw`` codecs; that framing is cross-checked in both directions
+against Hadoop's ``SnappyCodec`` / ``Lz4Codec`` inside Spark's JVM
+(tests/test_snappy_lite.py, tests/test_lz4_lite.py).
 
 File layout (write order)::
 
@@ -49,7 +53,7 @@ under real HBase readers.  No HBase/Hudi jars exist in this container
 tests/test_hfile_lite.py plus adversarial corruption cases; the CRC32C
 is validated against published check vectors.
 
-Pure picklable Python over bytes — decode runs inside executor tasks.
+Picklable Python over bytes — decode runs inside executor tasks.
 """
 
 from __future__ import annotations
@@ -312,6 +316,135 @@ def _write_trailer(
     )
 
 
+# ------------------------------------------------ hadoop block framing
+#
+# HBase snappy/lz4 blocks are written through Hadoop's SnappyCodec /
+# Lz4Codec, whose BlockCompressorStream frames raw codec chunks::
+#
+#     repeat:
+#       int32 BE   uncompressed length of this block
+#       repeat until the block's bytes are produced:
+#         int32 BE   compressed chunk length
+#         bytes      one raw snappy / raw lz4 block
+#
+# The chunks themselves go through pyarrow's codecs.  pyarrow's
+# ``Codec.decompress`` returns exactly ``decompressed_size`` bytes,
+# zero-padding a chunk that decodes to less, so every chunk is decoded
+# at the size it declares itself: snappy's varint header, or for raw
+# lz4 (which stores no length) the sum of its sequence lengths.
+
+_CHUNK_CODECS = {"snappy": "snappy", "lz4": "lz4_raw"}
+
+
+def _snappy_size(chunk: bytes) -> int:
+    """Uncompressed length from a raw snappy block's varint header."""
+    size = 0
+    for i, b in enumerate(chunk[:5]):
+        size |= (b & 0x7F) << (7 * i)
+        if not b & 0x80:
+            return size
+    raise HFileError("bad snappy length varint")
+
+
+def _lz4_ext(chunk: bytes, i: int, n: int) -> tuple[int, int]:
+    """An lz4 length extension: 255-bytes until the first non-255."""
+    ext = 0
+    while True:
+        if i >= n:
+            raise HFileError("truncated lz4 length")
+        ext += chunk[i]
+        i += 1
+        if chunk[i - 1] != 255:
+            return ext, i
+
+
+def _lz4_raw_size(chunk: bytes) -> int:
+    """Uncompressed length of a raw lz4 block (lz4_Block_format.md):
+    the literal and match lengths of its sequences, summed without
+    copying anything."""
+    size = i = 0
+    n = len(chunk)
+    while i < n:
+        token = chunk[i]
+        lit = token >> 4
+        i += 1
+        if lit == 15:
+            ext, i = _lz4_ext(chunk, i, n)
+            lit += ext
+        i += lit
+        size += lit
+        if i >= n:  # the last sequence carries no match
+            break
+        match = (token & 0x0F) + 4
+        i += 2  # match offset
+        if match == 19:
+            ext, i = _lz4_ext(chunk, i, n)
+            match += ext
+        size += match
+    if i != n:
+        raise HFileError("lz4 sequence overruns its chunk")
+    return size
+
+
+def hadoop_block_decompress(data: bytes, codec: str = "snappy") -> bytes:
+    """Decode Hadoop block framing around ``codec`` ("snappy" or "lz4")
+    chunks."""
+    import pyarrow as pa
+
+    chunk_size = _snappy_size if codec == "snappy" else _lz4_raw_size
+    pa_codec = pa.Codec(_CHUNK_CODECS[codec])
+    out = bytearray()
+    pos, n = 0, len(data)
+    while pos < n:
+        if pos + 4 > n:
+            raise HFileError("truncated hadoop block header")
+        (orig,) = struct.unpack_from(">i", data, pos)
+        pos += 4
+        if orig < 0:
+            raise HFileError("negative hadoop block length %d" % orig)
+        produced = 0
+        while produced < orig:
+            if pos + 4 > n:
+                raise HFileError("truncated hadoop chunk header")
+            (clen,) = struct.unpack_from(">i", data, pos)
+            pos += 4
+            if clen < 0 or pos + clen > n:
+                raise HFileError("hadoop chunk overruns input")
+            chunk = data[pos : pos + clen]
+            pos += clen
+            size = chunk_size(chunk)
+            if produced + size > orig:
+                raise HFileError(
+                    "hadoop block chunks exceed its %d-byte header" % orig
+                )
+            try:
+                out += pa_codec.decompress(
+                    chunk, decompressed_size=size, asbytes=True
+                )
+            except OSError as e:
+                raise HFileError("corrupt %s chunk: %s" % (codec, e)) from e
+            produced += size
+    return bytes(out)
+
+
+def hadoop_block_compress(
+    data: bytes, codec: str = "snappy", block_size: int = 256 * 1024
+) -> bytes:
+    """Encode with Hadoop block framing, one ``codec`` chunk per block
+    (the shape every Hadoop-ecosystem decompressor accepts)."""
+    import pyarrow as pa
+
+    if not data:
+        return struct.pack(">i", 0)
+    pa_codec = pa.Codec(_CHUNK_CODECS[codec])
+    out = bytearray()
+    for start in range(0, len(data), block_size):
+        block = data[start : start + block_size]
+        comp = pa_codec.compress(block, asbytes=True)
+        out += struct.pack(">ii", len(block), len(comp)) + comp
+    return bytes(out)
+
+
 # --------------------------------------------------------------- blocks
 
 
@@ -347,24 +480,11 @@ def _read_block(data: bytes, offset: int, compression: str):
     body = checked[HEADER_SIZE:]
     if compression == "gz":
         body = gzip.decompress(body)
-    elif compression == "snappy":
-        # HBase snappy = Hadoop SnappyCodec = block framing over raw
-        # snappy chunks (sources/snappy_lite.py, JVM-cross-checked)
-        from .snappy_lite import hadoop_block_decompress
-
-        body = hadoop_block_decompress(bytes(body))
-    elif compression == "lz4":
-        # HBase lz4 = Hadoop Lz4Codec = the SAME block framing over raw
-        # lz4 block chunks (lz4_lite supplies the chunk codec)
-        from .lz4_lite import lz4_block_decompress
-        from .snappy_lite import hadoop_block_decompress
-
-        body = hadoop_block_decompress(
-            bytes(body), chunk_codec=lz4_block_decompress
-        )
+    elif compression in _CHUNK_CODECS:
+        body = hadoop_block_decompress(bytes(body), compression)
     elif compression != "none":
-        # zstd/lzo/bzip2 stay loud refusals: no stdlib codec exists and
-        # guessing bytes is exactly what this module refuses to do
+        # zstd/lzo/bzip2 stay loud refusals: guessing bytes is exactly
+        # what this module refuses to do
         raise HFileUnsupportedError(
             "hfile compression codec %r" % compression
         )
@@ -514,17 +634,8 @@ def _build_block(
 ) -> bytes:
     if compression == "gz":
         stored = gzip.compress(body, mtime=0)
-    elif compression == "snappy":
-        from .snappy_lite import hadoop_block_compress
-
-        stored = hadoop_block_compress(body)
-    elif compression == "lz4":
-        from .lz4_lite import lz4_block_compress
-        from .snappy_lite import hadoop_block_compress
-
-        stored = hadoop_block_compress(
-            body, chunk_codec=lz4_block_compress
-        )
+    elif compression in _CHUNK_CODECS:
+        stored = hadoop_block_compress(body, compression)
     else:
         stored = body
     on_disk_data_with_header = HEADER_SIZE + len(stored)

@@ -1,4 +1,4 @@
-"""Puffin file format + Iceberg v3 deletion-vector blobs — pure stdlib.
+"""Puffin file format + Iceberg v3 deletion-vector blobs.
 
 Puffin is Iceberg's container for index/statistics blobs (the public
 format spec, iceberg docs "Puffin spec"); Iceberg v3 stores DELETION
@@ -13,10 +13,10 @@ File layout::
     4  bytes  magic ``PFA1``
     blobs     concatenated, byte-addressed by the footer / manifest
     4  bytes  magic ``PFA1``          (footer start)
-    payload   FileMetadata JSON (optionally lz4-compressed)
+    payload   FileMetadata JSON (optionally one lz4 frame)
     4  bytes  int32 LE payload length
-    4  bytes  flags (bit 0 of byte 0: payload compressed -> refused,
-              lz4 is not in the stdlib)
+    4  bytes  flags (bit 0 of byte 0: payload lz4-compressed; read
+              through pyarrow's lz4 frame codec, never written)
     4  bytes  magic ``PFA1``          (file end)
 
 ``deletion-vector-v1`` blob layout (Iceberg spec §Deletion vectors)::
@@ -35,7 +35,7 @@ tests/test_puffin.py) — the 32-bit container codec is shared with the
 Delta deletion-vector reader (delta_dv.py), which uses the same
 RoaringFormatSpec containers under a different outer framing.
 
-Everything is picklable pure Python over bytes: DV expansion to
+Everything is picklable Python over bytes: DV expansion to
 (file, position) rows runs inside executor tasks; the driver ships
 only (path, offset, length) descriptors.
 """
@@ -146,10 +146,10 @@ def write_puffin(
     properties: dict | None = None,
     snapshot_id: int = 1,
     sequence_number: int = 1,
-    compress_footer: bool = False,
 ) -> tuple[bytes, list[dict]]:
     """(blob_type, blob_bytes, blob_properties) -> (file bytes, blob
-    metadata dicts with offset/length as written)."""
+    metadata dicts with offset/length as written).  The footer is
+    always written uncompressed."""
     out = [MAGIC]
     at = 4
     metas = []
@@ -170,17 +170,11 @@ def write_puffin(
     payload = json.dumps(
         {"blobs": metas, "properties": properties or {}}
     ).encode()
-    flags = b"\x00\x00\x00\x00"
-    if compress_footer:
-        from .lz4_lite import lz4_frame_compress
-
-        payload = lz4_frame_compress(payload)
-        flags = b"\x01\x00\x00\x00"
     out += [
         MAGIC,
         payload,
         struct.pack("<i", len(payload)),
-        flags,
+        b"\x00\x00\x00\x00",
         MAGIC,
     ]
     return b"".join(out), metas
@@ -191,8 +185,9 @@ def read_puffin_footer(data: bytes) -> dict:
 
     Compressed footers (flags bit 0 of byte 0 — the spec's only footer
     codec, "lz4: single LZ4 compression frame with content size
-    present") decode through the pure-Python frame reader in
-    ``lz4_lite`` (JVM-cross-validated against ``net.jpountz.lz4``).
+    present") decode through pyarrow's lz4 frame codec, which also reads
+    frames without a content size (lz4-java writes none) and frames
+    with linked blocks.
     """
     if data[:4] != MAGIC or data[-4:] != MAGIC:
         raise PuffinError("not a puffin file (bad magic)")
@@ -203,10 +198,14 @@ def read_puffin_footer(data: bytes) -> dict:
         raise PuffinError("puffin footer framing corrupt")
     payload = data[pstart : pstart + psize]
     if flags[0] & 0x01:
-        from .lz4_lite import Lz4Error, lz4_frame_decompress
+        import pyarrow as pa
 
         try:
-            payload = lz4_frame_decompress(payload)
-        except Lz4Error as e:
-            raise PuffinError("puffin footer lz4 payload corrupt: %s" % e)
+            payload = pa.input_stream(
+                pa.py_buffer(payload), compression="lz4"
+            ).read()
+        except OSError as e:
+            raise PuffinError(
+                "puffin footer lz4 payload corrupt: %s" % e
+            ) from e
     return json.loads(payload)

@@ -70,3 +70,14 @@ def test_headline_families_consistent():
     assert list(bench.HEADLINE) == [
         q for fam in bench.FAMILIES.values() for q in fam
     ]
+
+
+def test_steal_ticks_reads_the_steal_field(tmp_path):
+    """/proc/stat's cpu line is ``cpu user nice system idle iowait irq
+    softirq steal guest guest_nice``: steal is the 8th counter, not the
+    guest time after it."""
+    stat = tmp_path / "stat"
+    stat.write_text("cpu  10 20 30 40 50 60 70 2129 0 0\ncpu0 1 2 3\n")
+    bench = _load_bench()
+    assert bench.steal_ticks(str(stat)) == 2129
+    assert bench.steal_ticks(str(tmp_path / "absent")) == 0

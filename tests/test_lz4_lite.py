@@ -1,27 +1,35 @@
-"""lz4_lite vs the real LZ4 inside Spark's JVM (net.jpountz.lz4).
+"""LZ4 here vs the real LZ4 inside Spark's JVM (net.jpountz.lz4).
 
-Same discipline as the Roaring64/Kryo work: the pure-Python codec is
-cross-validated against the battle-tested implementation Spark already
-ships (lz4-java, Spark's own shuffle/broadcast codec), in BOTH
-directions — our frames decode under ``LZ4FrameInputStream``, JVM
-frames decode here — plus published xxHash32 vectors and adversarial
-truncation/corruption cases.
+Two places read LZ4: HFile lz4 blocks (raw lz4 chunks inside Hadoop's
+block framing, ``hfile_lite.hadoop_block_decompress``) and compressed
+Puffin footers (one lz4 frame, ``puffin.read_puffin_footer``).  Both
+decode through pyarrow's codecs.  They are cross-checked against
+lz4-java, Spark's own shuffle/broadcast codec, in both directions where
+this side writes, plus adversarial truncation/corruption cases.
 """
 
 from __future__ import annotations
 
 import json
 import random
+import struct
 
+import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
-from easy_sql_spark.sources.lz4_lite import (
-    Lz4Error,
-    lz4_block_compress,
-    lz4_block_decompress,
-    lz4_frame_compress,
-    lz4_frame_decompress,
-    xxh32,
+from easy_sql_spark.sources.hfile_lite import (
+    HFileError,
+    hadoop_block_compress,
+    hadoop_block_decompress,
+)
+from easy_sql_spark.sources.puffin import (
+    MAGIC,
+    PuffinError,
+    encode_dv_blob,
+    read_puffin_footer,
+    write_puffin,
 )
 
 
@@ -41,63 +49,168 @@ def _corpus():
         big += rng.choice([b"alpha", b"beta", b"gamma", b"delta-delta"])
         if rng.random() < 0.1:
             big += bytes(rng.randrange(256) for _ in range(rng.randrange(20)))
-    yield bytes(big)  # > one 64KB block at code 4
+    yield bytes(big)  # > one 64KB block
 
 
-# ------------------------------------------------------------ pure python
+# ------------------------------------------------------------ raw blocks
 
 
-def test_xxh32_published_vectors():
-    # reference vectors from the xxHash repository README/spec
-    assert xxh32(b"") == 0x02CC5D05
-    assert xxh32(b"", seed=1) == 0x0B2CB792
-    assert xxh32(b"a") == 0x550D7456
-    assert xxh32(b"abc") == 0x32D153FF
-    assert xxh32(b"Nobody inspects the spammish repetition") == 0xE2293B2F
+def _lz4_block(data: bytes) -> bytes:
+    """pyarrow's raw lz4 block of ``data`` (the chunk hfile_lite writes)."""
+    return pa.Codec("lz4_raw").compress(data, asbytes=True)
+
+
+def _decode_block(block: bytes, size: int) -> bytes:
+    """Decode one raw lz4 block the way HFile lz4 chunks decode: as the
+    only chunk of a ``size``-byte Hadoop block."""
+    framed = struct.pack(">ii", size, len(block)) + block
+    return hadoop_block_decompress(framed, "lz4")
 
 
 def test_block_roundtrip():
     for data in _corpus():
-        comp = lz4_block_compress(data)
-        assert lz4_block_decompress(comp) == data
-
-
-def test_frame_roundtrip_all_block_sizes():
-    for data in _corpus():
-        for code in (4, 5, 6, 7):
-            frame = lz4_frame_compress(data, block_max_code=code)
-            assert lz4_frame_decompress(frame) == data
-
-
-def test_frame_rejects_corruption():
-    frame = bytearray(lz4_frame_compress(b"hello world " * 100))
-    with pytest.raises(Lz4Error):
-        lz4_frame_decompress(bytes(frame[:10]))  # truncated
-    bad = bytes(frame[:4]) + b"\xff" + bytes(frame[5:])
-    with pytest.raises(Lz4Error):
-        lz4_frame_decompress(bad)  # header checksum / version
-    flipped = bytearray(frame)
-    flipped[-1] ^= 0xFF  # content checksum byte
-    with pytest.raises(Lz4Error):
-        lz4_frame_decompress(bytes(flipped))
-    with pytest.raises(Lz4Error):
-        lz4_frame_decompress(b"\x00" * 16)  # bad magic
+        if data:
+            assert _decode_block(_lz4_block(data), len(data)) == data
 
 
 def test_block_rejects_bad_offsets():
-    with pytest.raises(Lz4Error):
-        lz4_block_decompress(b"\x10A\x05\x00")  # offset beyond output
-    with pytest.raises(Lz4Error):
-        lz4_block_decompress(b"\x10A\x00\x00")  # offset zero
+    with pytest.raises(HFileError):
+        _decode_block(b"\x10A\x05\x00", 5)  # offset beyond output
+    with pytest.raises(HFileError):
+        _decode_block(b"\x10A\x00\x00", 5)  # offset zero
+    with pytest.raises(HFileError):
+        _decode_block(b"\xf0", 15)  # literal length runs off the block
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.one_of(
+        st.binary(min_size=1, max_size=5000),
+        # repetitive payloads give long, overlapping, extended matches
+        st.builds(
+            lambda w, n, tail: w * n + tail,
+            st.binary(min_size=1, max_size=12),
+            st.integers(min_value=1, max_value=400),
+            st.binary(max_size=50),
+        ),
+    )
+)
+def test_block_roundtrip_property(data):
+    """The token walk that sizes each lz4 chunk sums exactly what the
+    chunk decodes to."""
+    assert _decode_block(_lz4_block(data), len(data)) == data
+
+
+# ------------------------------------------------------------ footers
+
+
+def _puffin_with_footer(frame: bytes) -> bytes:
+    """A Puffin file whose footer payload is ``frame``, flagged lz4."""
+    return (
+        MAGIC
+        + b"XXXXXXXXX"  # fake blob region
+        + MAGIC
+        + frame
+        + struct.pack("<i", len(frame))
+        + b"\x01\x00\x00\x00"
+        + MAGIC
+    )
+
+
+def _footer_payload(data: bytes) -> bytes:
+    """Footer JSON carrying arbitrary ``data`` (latin-1 in a property)."""
+    return json.dumps(
+        {"blobs": [], "properties": {"data": data.decode("latin-1")}}
+    ).encode()
+
+
+def _footer_data(footer: dict) -> bytes:
+    return footer["properties"]["data"].encode("latin-1")
+
+
+def _pa_frame(payload: bytes) -> bytes:
+    """pyarrow's lz4 frame: independent blocks up to 64 KB of input."""
+    return pa.Codec("lz4").compress(payload, asbytes=True)
+
+
+def test_frame_rejects_corruption():
+    frame = _pa_frame(_footer_payload(b"hello world " * 100))
+    assert read_puffin_footer(_puffin_with_footer(frame))
+    bad_frames = [
+        frame[:10],  # truncated header
+        frame[: len(frame) // 2],  # truncated block
+        frame[:-2],  # truncated EndMark
+        frame[:4] + b"\xff" + frame[5:],  # FLG: reserved bits, bad version
+        frame[:-1] + b"\xff",  # EndMark -> bogus block size
+        b"\x00" * 16,  # bad magic
+    ]
+    for bad in bad_frames:
+        with pytest.raises(PuffinError):
+            read_puffin_footer(_puffin_with_footer(bad))
+
+
+def _lz4_length(n: int) -> bytes:
+    """Bytes extending a token length nibble that reached 15."""
+    if n < 15:
+        return b""
+    return b"\xff" * ((n - 15) // 255) + bytes([(n - 15) % 255])
+
+
+def _lz4_sequence(literals: bytes, offset: int = 0, match: int = 0) -> bytes:
+    """One lz4 sequence: literals, then a match unless ``offset`` is 0."""
+    m = match - 4 if offset else 0
+    out = bytes([(min(len(literals), 15) << 4) | min(m, 15)])
+    out += _lz4_length(len(literals)) + literals
+    if offset:
+        out += struct.pack("<H", offset) + _lz4_length(m)
+    return out
+
+
+def test_puffin_footer_linked_block_frame():
+    """A valid frame with LINKED blocks (FLG 0x40): block 2 copies 20
+    bytes out of block 1.  Frame decoders must keep the previous block
+    as history; a block-at-a-time decoder sees an offset outside its
+    window."""
+    value = b"0123456789abcdefghij"
+    payload = (
+        b'{"blobs": [], "properties": {"a": "' + value
+        + b'", "b": "' + value + b'", "c": "the end of the footer"}}'
+    )
+    p1 = payload.index(value)
+    split = p1 + len(value)  # block 1 ends after the first copy
+    p2 = payload.index(value, split)
+    block1 = payload[:split]
+    block2 = _lz4_sequence(
+        payload[split:p2], p2 - p1, len(value)  # reaches into block 1
+    ) + _lz4_sequence(payload[p2 + len(value) :])  # literals only
+    frame = (
+        struct.pack("<I", 0x184D2204)
+        # FLG 0x40: version 01, linked blocks; BD 0x40: 64 KB blocks;
+        # 0xC0 = (xxh32(FLG BD) >> 8) & 0xFF, the header checksum
+        + bytes([0x40, 0x40, 0xC0])
+        + struct.pack("<I", 0x80000000 | len(block1))  # stored block
+        + block1
+        + struct.pack("<I", len(block2))
+        + block2
+        + struct.pack("<I", 0)  # EndMark
+    )
+    footer = read_puffin_footer(_puffin_with_footer(frame))
+    assert footer["properties"]["b"] == value.decode()
+    assert json.dumps(footer).encode() == payload
 
 
 # ------------------------------------------------------------------- JVM
 
 
-def _jvm_frame_compress(spark, data: bytes) -> bytes:
+def _jvm_frame_compress(spark, data: bytes, block_size: str | None = None) -> bytes:
     jvm = spark.sparkContext._jvm
+    lz4 = jvm.net.jpountz.lz4
     baos = jvm.java.io.ByteArrayOutputStream()
-    out = jvm.net.jpountz.lz4.LZ4FrameOutputStream(baos)
+    if block_size is None:
+        out = lz4.LZ4FrameOutputStream(baos)
+    else:
+        sizes = getattr(lz4, "LZ4FrameOutputStream$BLOCKSIZE")
+        out = lz4.LZ4FrameOutputStream(baos, getattr(sizes, block_size))
     out.write(data)
     out.close()
     return bytes(baos.toByteArray())
@@ -114,15 +227,33 @@ def _jvm_frame_decompress(spark, data: bytes) -> bytes:
 
 def test_jvm_frames_decode_here(spark):
     for data in _corpus():
-        frame = _jvm_frame_compress(spark, data)
-        assert lz4_frame_decompress(frame) == data
+        frame = _jvm_frame_compress(spark, _footer_payload(data))
+        footer = read_puffin_footer(_puffin_with_footer(frame))
+        assert _footer_data(footer) == data
+
+
+def test_frame_roundtrip_all_block_sizes(spark):
+    """JVM frames at every block size, so long footers span many
+    blocks, read back through the Puffin footer reader."""
+    data = max(_corpus(), key=len)
+    for size in ("SIZE_64KB", "SIZE_256KB", "SIZE_1MB", "SIZE_4MB"):
+        frame = _jvm_frame_compress(spark, _footer_payload(data), size)
+        footer = read_puffin_footer(_puffin_with_footer(frame))
+        assert _footer_data(footer) == data
 
 
 def test_our_frames_decode_in_jvm(spark):
+    """The pyarrow frames these tests put in compressed footers are
+    readable by lz4-java up to 64 KB of input.  Above that pyarrow links
+    its blocks (FLG 0x40), which lz4-java refuses — the reason
+    ``write_puffin`` writes no compressed footer."""
     for data in _corpus():
-        for code in (4, 6):
-            frame = lz4_frame_compress(data, block_max_code=code)
-            assert _jvm_frame_decompress(spark, frame) == data
+        if len(data) <= 64 * 1024:
+            assert _jvm_frame_decompress(spark, _pa_frame(data)) == data
+    linked = _pa_frame(b"\x00" * 100_000)
+    assert linked[4] == 0x40
+    with pytest.raises(Exception, match="Dependent block stream"):
+        _jvm_frame_decompress(spark, linked)
 
 
 def test_block_codec_matches_jvm_safe_decompressor(spark):
@@ -133,145 +264,49 @@ def test_block_codec_matches_jvm_safe_decompressor(spark):
     for data in _corpus():
         if not data:
             continue
-        # JVM compress -> python decompress
-        jcomp = bytes(comp.compress(data))
-        assert lz4_block_decompress(jcomp) == data
-        # python compress -> JVM decompress
-        pcomp = lz4_block_compress(data)
-        assert bytes(dec.decompress(pcomp, len(data))) == data
-
-
-def test_xxh32_matches_jvm(spark):
-    jvm = spark.sparkContext._jvm
-    fac = jvm.net.jpountz.xxhash.XXHashFactory.fastestInstance()
-    for data in _corpus():
-        for seed in (0, 0x2B2C3A97):  # int32-range so py4j passes Integer
-            h = fac.hash32().hash(data, 0, len(data), seed)
-            assert (h & 0xFFFFFFFF) == xxh32(data, seed)
+        # JVM compress -> decompress here
+        assert _decode_block(bytes(comp.compress(data)), len(data)) == data
+        # compress here -> JVM decompress
+        ours = hadoop_block_compress(data, "lz4")[8:]  # the single chunk
+        assert bytes(dec.decompress(ours, len(data))) == data
 
 
 # ---------------------------------------------------------------- puffin
 
 
 def test_puffin_compressed_footer_roundtrip():
-    from easy_sql_spark.sources.puffin import (
-        encode_dv_blob,
-        read_puffin_footer,
-        write_puffin,
-    )
-
     blob = encode_dv_blob([1, 5, 9, 1 << 33])
     data, metas = write_puffin(
-        [("deletion-vector-v1", blob, {"referenced-data-file": "f.parquet"})],
-        compress_footer=True,
+        [("deletion-vector-v1", blob, {"referenced-data-file": "f.parquet"})]
     )
-    assert data[-8] & 0x01  # compressed flag set
-    footer = read_puffin_footer(data)
+    plain = read_puffin_footer(data)
+    assert not data[-8] & 0x01  # written uncompressed
+    frame = _pa_frame(json.dumps(plain).encode())
+    footer = read_puffin_footer(_puffin_with_footer(frame))
+    assert footer == plain
     assert footer["blobs"][0]["type"] == "deletion-vector-v1"
     assert footer["blobs"][0]["offset"] == metas[0]["offset"]
 
 
 def test_puffin_footer_compressed_by_jvm_lz4(spark):
     """A third-party writer that compresses the footer with the real
-    lz4 frame codec (content size present, per the Puffin spec) must
-    read here — the exact case the pre-r11 reader refused."""
-    import struct
-
-    from easy_sql_spark.sources.puffin import MAGIC, read_puffin_footer
-
+    lz4 frame codec (LZ4FrameOutputStream: FLG 0x60, independent
+    blocks, no content size) must read here — the exact case the
+    pre-r11 reader refused."""
     payload = json.dumps(
         {"blobs": [{"type": "deletion-vector-v1", "offset": 4, "length": 9}],
          "properties": {}}
     ).encode()
     comp = _jvm_frame_compress(spark, payload)
-    data = (
-        MAGIC
-        + b"XXXXXXXXX"  # fake blob region
-        + MAGIC
-        + comp
-        + struct.pack("<i", len(comp))
-        + b"\x01\x00\x00\x00"
-        + MAGIC
-    )
-    footer = read_puffin_footer(data)
+    assert comp[4] == 0x60
+    footer = read_puffin_footer(_puffin_with_footer(comp))
     assert footer["blobs"][0]["length"] == 9
 
 
 def test_puffin_corrupt_compressed_footer_raises():
-    import struct
-
-    from easy_sql_spark.sources.puffin import (
-        MAGIC,
-        PuffinError,
-        read_puffin_footer,
-        write_puffin,
-    )
-
-    data, _ = write_puffin([("t", b"x", {})], compress_footer=True)
-    # flip a byte inside the compressed payload
-    body = bytearray(data)
-    body[len(MAGIC) + 1 + 6] ^= 0xFF
+    payload = json.dumps({"blobs": [], "properties": {}}).encode()
+    data = bytearray(_puffin_with_footer(_pa_frame(payload)))
+    # flip a byte of the frame magic inside the footer payload
+    data[len(MAGIC) + 9 + len(MAGIC) + 2] ^= 0xFF
     with pytest.raises(PuffinError):
-        read_puffin_footer(bytes(body))
-
-
-# ------------------------------------------------------------- hypothesis
-
-try:
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    _HYP = True
-except ImportError:  # pragma: no cover
-    _HYP = False
-
-if _HYP:
-
-    @settings(max_examples=80, deadline=None)
-    @given(
-        data=st.one_of(
-            st.binary(max_size=3000),
-            # repetitive payloads exercise real matches + overlaps
-            st.builds(
-                lambda w, n, tail: w * n + tail,
-                st.binary(min_size=1, max_size=12),
-                st.integers(min_value=0, max_value=400),
-                st.binary(max_size=50),
-            ),
-        ),
-        code=st.sampled_from([4, 5, 6, 7]),
-        checksum=st.booleans(),
-    )
-    def test_frame_roundtrip_property(data, code, checksum):
-        frame = lz4_frame_compress(
-            data, block_max_code=code, content_checksum=checksum
-        )
-        assert lz4_frame_decompress(frame) == data
-
-    @settings(max_examples=100, deadline=None)
-    @given(st.binary(max_size=5000))
-    def test_block_roundtrip_property(data):
-        assert lz4_block_decompress(lz4_block_compress(data)) == data
-
-
-def test_truncated_block_checksum_raises_lz4error():
-    """r11 review fix: a frame cut inside a trailing block checksum must
-    raise Lz4Error (not struct.error) so PuffinError wrapping holds."""
-    import struct as _struct
-
-    from easy_sql_spark.sources.lz4_lite import FRAME_MAGIC
-
-    body = b"hello world, hello world"
-    comp = lz4_block_compress(body)
-    flg = (0b01 << 6) | 0x20 | 0x10  # block checksums, no content size
-    header = bytes([flg, 6 << 4])
-    frame = (
-        _struct.pack("<I", FRAME_MAGIC)
-        + header
-        + bytes([(xxh32(header) >> 8) & 0xFF])
-        + _struct.pack("<I", len(comp))
-        + comp
-        + _struct.pack("<I", xxh32(comp))[:2]  # TRUNCATED checksum
-    )
-    with pytest.raises(Lz4Error, match="truncated block checksum"):
-        lz4_frame_decompress(frame)
+        read_puffin_footer(bytes(data))

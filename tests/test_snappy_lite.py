@@ -1,21 +1,22 @@
-"""snappy_lite: raw-Snappy block codec + Hadoop block framing, the
-lz4_lite discipline — stdlib round-trips, malformed-input rejection,
-hypothesis fuzz, and BOTH-DIRECTION cross-checks against the real
-implementations inside Spark's JVM (org.xerial.snappy for the raw
-format; Hadoop SnappyCodec / Lz4Codec for the framing HBase writes)."""
+"""HFile's snappy/lz4 block compression: Hadoop's block framing
+(``hfile_lite.hadoop_block_compress`` / ``hadoop_block_decompress``)
+around pyarrow's raw snappy and raw lz4 chunk codecs — round-trips,
+malformed-input rejection, hypothesis fuzz of the framing, and
+BOTH-DIRECTION cross-checks against the real implementations inside
+Spark's JVM (org.xerial.snappy for the raw format; Hadoop SnappyCodec /
+Lz4Codec for the framing HBase writes)."""
 
 import random
+import struct
 
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from easy_sql_spark.sources.snappy_lite import (
-    SnappyError,
+from easy_sql_spark.sources.hfile_lite import (
+    HFileError,
     hadoop_block_compress,
     hadoop_block_decompress,
-    snappy_compress,
-    snappy_decompress,
 )
 
 
@@ -38,43 +39,87 @@ def _corpus():
     ]
 
 
+def _one_chunk(chunk: bytes, size: int) -> bytes:
+    """Frame a single raw chunk as one Hadoop block of ``size`` bytes."""
+    return struct.pack(">ii", size, len(chunk)) + chunk
+
+
+def _raw_chunk(data: bytes) -> bytes:
+    """The raw snappy chunk inside a single-block framing of ``data``."""
+    return hadoop_block_compress(data)[8:]
+
+
 def test_raw_roundtrip():
+    """Single raw snappy chunks decode at their varint-declared size."""
     for data in _corpus():
-        assert snappy_decompress(snappy_compress(data)) == data
+        if data:
+            framed = _one_chunk(_raw_chunk(data), len(data))
+            assert hadoop_block_decompress(framed) == data
 
 
 def test_hadoop_framing_roundtrip():
-    for data in _corpus():
-        assert hadoop_block_decompress(hadoop_block_compress(data)) == data
-    # multi-block framing: force a small block size
-    big = bytes(random.Random(7).randbytes(300_000))
-    framed = hadoop_block_compress(big, block_size=64 * 1024)
-    assert hadoop_block_decompress(framed) == big
+    for codec in ("snappy", "lz4"):
+        for data in _corpus():
+            assert (
+                hadoop_block_decompress(
+                    hadoop_block_compress(data, codec), codec
+                )
+                == data
+            )
+        # multi-block framing: force a small block size
+        big = bytes(random.Random(7).randbytes(300_000))
+        framed = hadoop_block_compress(big, codec, block_size=64 * 1024)
+        assert hadoop_block_decompress(framed, codec) == big
 
 
 def test_raw_rejects_corruption():
-    good = snappy_compress(b"abcdefgh" * 100)
-    with pytest.raises(SnappyError):
-        snappy_decompress(good[:-3])  # truncated
-    with pytest.raises(SnappyError):
+    good = _raw_chunk(b"abcdefgh" * 100)
+    with pytest.raises(HFileError):
+        hadoop_block_decompress(_one_chunk(good[:-3], 800))  # truncated
+    with pytest.raises(HFileError):
         # copy before any output: offset outside window
-        snappy_decompress(bytes([8, 0b00000101, 1]))
-    with pytest.raises(SnappyError):
-        snappy_decompress(b"\xff\xff\xff\xff\xff\xff")  # varint runs off
+        hadoop_block_decompress(_one_chunk(bytes([8, 0b00000101, 1]), 8))
+    with pytest.raises(HFileError):
+        # varint runs off
+        hadoop_block_decompress(_one_chunk(b"\xff\xff\xff\xff\xff\xff", 8))
+
+
+def test_snappy_varint_claiming_too_much_raises():
+    """A snappy chunk whose varint header claims more bytes than its
+    elements produce is corrupt — it must not come back zero-padded."""
+    data = b"hello world " * 50
+    chunk = _raw_chunk(data)
+    assert chunk[:2] == bytes([0xD8, 0x04])  # varint 600
+    liar = bytes([0xD8 + 10]) + chunk[1:]  # varint 610
+    with pytest.raises(HFileError):
+        hadoop_block_decompress(_one_chunk(liar, 610))
+
+
+def test_lz4_block_header_claiming_too_much_raises():
+    """A Hadoop lz4 block whose header claims more bytes than its chunk
+    decodes to must fail, not return padded bytes."""
+    data = b"hello world " * 50
+    framed = bytearray(hadoop_block_compress(data, "lz4"))
+    struct.pack_into(">i", framed, 0, len(data) + 100)
+    with pytest.raises(HFileError):
+        hadoop_block_decompress(bytes(framed), "lz4")
 
 
 def test_framing_rejects_corruption():
-    framed = hadoop_block_compress(b"hello world" * 50)
-    with pytest.raises(SnappyError):
-        hadoop_block_decompress(framed[:-2])
-    with pytest.raises(SnappyError):
-        hadoop_block_decompress(b"\x00\x00\x00\x05")  # block, no chunks
+    for codec in ("snappy", "lz4"):
+        framed = hadoop_block_compress(b"hello world" * 50, codec)
+        with pytest.raises(HFileError):
+            hadoop_block_decompress(framed[:-2], codec)
+        with pytest.raises(HFileError):
+            # block, no chunks
+            hadoop_block_decompress(b"\x00\x00\x00\x05", codec)
 
 
 @settings(max_examples=200, deadline=None)
-@given(st.binary(max_size=4096))
-def test_raw_roundtrip_fuzz(data):
-    assert snappy_decompress(snappy_compress(data)) == data
+@given(st.binary(max_size=4096), st.sampled_from(["snappy", "lz4"]))
+def test_raw_roundtrip_fuzz(data, codec):
+    framed = hadoop_block_compress(data, codec, block_size=1024)
+    assert hadoop_block_decompress(framed, codec) == data
 
 
 @settings(max_examples=100, deadline=None)
@@ -82,11 +127,15 @@ def test_raw_roundtrip_fuzz(data):
     st.lists(
         st.sampled_from([b"ab", b"abcabc", b"x" * 40, b"q", b"zzzzzzzz"]),
         max_size=200,
-    )
+    ),
+    st.sampled_from(["snappy", "lz4"]),
 )
-def test_raw_roundtrip_fuzz_repetitive(parts):
+def test_raw_roundtrip_fuzz_repetitive(parts, codec):
+    """Repetitive payloads give chunks with long and overlapping
+    matches, the sequences the lz4 size walk has to sum."""
     data = b"".join(parts)
-    assert snappy_decompress(snappy_compress(data)) == data
+    framed = hadoop_block_compress(data, codec, block_size=1024)
+    assert hadoop_block_decompress(framed, codec) == data
 
 
 # ------------------------------------------------------ JVM cross-checks
@@ -100,14 +149,18 @@ def test_raw_matches_xerial_snappy(spark):
         if not data:
             continue  # xerial raw compress of empty is fine but trivial
         theirs = bytes(Snappy.compress(data))
-        assert snappy_decompress(theirs) == data
-        ours = snappy_compress(data)
-        assert bytes(Snappy.uncompress(ours)) == data
+        assert hadoop_block_decompress(_one_chunk(theirs, len(data))) == data
+        assert bytes(Snappy.uncompress(_raw_chunk(data))) == data
 
 
-def _hadoop_codec(spark, cls_name):
+def _hadoop_codec(spark, cls_name, buffer_size=None):
     jvm = spark.sparkContext._jvm
     conf = jvm.org.apache.hadoop.conf.Configuration()
+    if buffer_size is not None:
+        key = "io.compression.codec.%s.buffersize" % (
+            "snappy" if cls_name == "SnappyCodec" else "lz4"
+        )
+        conf.set(key, str(buffer_size))
     codec = getattr(jvm.org.apache.hadoop.io.compress, cls_name)()
     codec.setConf(conf)
     return jvm, codec
@@ -144,11 +197,7 @@ def test_framing_matches_hadoop_snappy_multiblock(spark):
     """Force the JVM codec's internal buffer small so its stream carries
     MULTIPLE framed blocks — the path our single-block-emitting encoder
     never produces but real long streams contain."""
-    jvm = spark.sparkContext._jvm
-    conf = jvm.org.apache.hadoop.conf.Configuration()
-    conf.set("io.compression.codec.snappy.buffersize", "4096")
-    codec = jvm.org.apache.hadoop.io.compress.SnappyCodec()
-    codec.setConf(conf)
+    jvm, codec = _hadoop_codec(spark, "SnappyCodec", buffer_size=4096)
     data = bytes(random.Random(11).randbytes(50_000)) + b"tail" * 5_000
     theirs = _jvm_codec_compress(jvm, codec, data)
     assert hadoop_block_decompress(theirs) == data
@@ -156,25 +205,27 @@ def test_framing_matches_hadoop_snappy_multiblock(spark):
 
 def test_framing_matches_hadoop_lz4_codec(spark):
     """Same framing, lz4 chunks (HBase lz4 HFiles): Hadoop Lz4Codec
-    streams decode here via lz4_lite, and vice versa."""
-    from easy_sql_spark.sources.lz4_lite import (
-        lz4_block_compress,
-        lz4_block_decompress,
-    )
-
+    streams decode here, and ours decode there."""
     jvm, codec = _hadoop_codec(spark, "Lz4Codec")
     for data in _corpus():
         if not data:
             continue
         theirs = _jvm_codec_compress(jvm, codec, data)
-        assert (
-            hadoop_block_decompress(
-                theirs, chunk_codec=lz4_block_decompress
-            )
-            == data
-        )
-        ours = hadoop_block_compress(data, chunk_codec=lz4_block_compress)
+        assert hadoop_block_decompress(theirs, "lz4") == data
+        ours = hadoop_block_compress(data, "lz4")
         assert _jvm_codec_decompress(jvm, codec, ours) == data
+
+
+def test_framing_matches_hadoop_lz4_multichunk(spark):
+    """A 4096-byte Lz4Codec buffer makes each framed block hold SEVERAL
+    chunks, each decoded at the size its own sequences sum to."""
+    jvm, codec = _hadoop_codec(spark, "Lz4Codec", buffer_size=4096)
+    data = bytes(random.Random(12).randbytes(50_000)) + b"tail" * 5_000
+    theirs = _jvm_codec_compress(jvm, codec, data)
+    # one write() -> one block of every byte, cut into <=4 KB chunks
+    block_len, first_chunk = struct.unpack_from(">ii", theirs, 0)
+    assert block_len == len(data) and first_chunk < 8192
+    assert hadoop_block_decompress(theirs, "lz4") == data
 
 
 # ------------------------------------------------- HFile integration

@@ -371,3 +371,47 @@ def test_probe_sampling_gate_and_layout(spark, tmp_path, monkeypatch):
 
     with _pytest.raises(ValueError, match="EASY_SQL_ZPROBE_SAMPLE_BYTES"):
         _probe_fraction(pdf)
+
+
+def test_probe_fraction_stops_stat_ing_past_the_floor(monkeypatch):
+    """The probe stops asking for file lengths once the total passes
+    100x the target, where the 1% floor already fixes the fraction; the
+    fraction itself is the one the full total gives."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from easy_sql_spark.operators import zorder
+
+    class _Scan:
+        sparkSession = None
+
+        def __init__(self, n):
+            self.files = ["f%d" % i for i in range(n)]
+
+        def inputFiles(self):
+            return self.files
+
+    @settings(max_examples=200, deadline=None)
+    @given(
+        st.lists(st.integers(0, 1 << 30), min_size=1, max_size=40),
+        st.integers(1, 4 << 20),
+    )
+    def check(sizes, target):
+        statted = []
+
+        def lengths(_spark, files):
+            for size in sizes:
+                statted.append(size)
+                yield size
+
+        monkeypatch.setattr(zorder, "input_file_lengths", lengths)
+        monkeypatch.setenv("EASY_SQL_ZPROBE_SAMPLE_BYTES", str(target))
+        total = sum(sizes)
+        expect = 1.0 if total <= target else max(0.01, target / total)
+        assert zorder._probe_fraction(_Scan(len(sizes))) == expect
+        if sum(statted) <= 100 * target:
+            assert statted == sizes
+        else:  # stopped at the first file that crossed 100x
+            assert sum(statted[:-1]) <= 100 * target
+
+    check()

@@ -29,10 +29,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def steal() -> int:
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[9])
+from bench import steal_ticks  # noqa: E402
 
 
 def noop(df) -> None:
@@ -65,9 +62,9 @@ def main() -> None:
     ticks: dict[str, list[int]] = {}
 
     def timed(name, fn):
-        s0, t0 = steal(), time.time()
+        s0, t0 = steal_ticks(), time.time()
         fn()
-        dt, ds = time.time() - t0, steal() - s0
+        dt, ds = time.time() - t0, steal_ticks() - s0
         best[name] = min(best.get(name, float("inf")), dt)
         ticks.setdefault(name, []).append(ds)
 

@@ -22,6 +22,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import steal_ticks  # noqa: E402
+
 
 def main():
     ns = [int(a) for a in sys.argv[1:]] or [2000, 20000, 200000, 1000000]
@@ -45,10 +47,6 @@ def main():
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
 
-    def steal():
-        with open("/proc/stat") as fh:
-            return int(fh.readline().split()[8])
-
     print(
         f"{'n':>8} {'k':>4} {'fold_min':>9} {'kernel_min':>10} "
         f"{'ratio':>6} {'exact':>6} {'steal_dt':>8}"
@@ -68,7 +66,7 @@ def main():
         )
         for k in ks:
             cents = [r["v"] for r in base.limit(k).collect()]
-            s0 = steal()
+            s0 = steal_ticks()
             f_best = kern_best = float("inf")
             for _ in range(runs):
                 t0 = time.time()
@@ -81,7 +79,7 @@ def main():
                     "overwrite"
                 ).save()
                 kern_best = min(kern_best, time.time() - t0)
-            s1 = steal()
+            s1 = steal_ticks()
             mism = (
                 _assign_fold(base, cents, "v", "cluster")
                 .select("vec_id", F.col("cluster").alias("a"))

@@ -28,10 +28,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def steal() -> int:
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[9])
+from bench import steal_ticks  # noqa: E402
 
 
 def noop(df) -> None:
@@ -69,9 +66,9 @@ def main() -> None:
     ticks: dict[tuple[str, str], list[int]] = {}
 
     def timed(codec: str, phase: str, fn) -> None:
-        s0, t0 = steal(), time.time()
+        s0, t0 = steal_ticks(), time.time()
         fn()
-        dt, ds = time.time() - t0, steal() - s0
+        dt, ds = time.time() - t0, steal_ticks() - s0
         key = (codec, phase)
         best[key] = min(best.get(key, float("inf")), dt)
         ticks.setdefault(key, []).append(ds)
