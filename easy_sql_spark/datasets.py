@@ -9,17 +9,17 @@ column pruning and (on partitioned layouts) partition pruning for free.  At
 cluster scale the same entry points accept directories of parquet files; no
 code here assumes a single file.
 
-The schema is read on the driver from one parquet footer and handed to
-``spark.read.schema(...)``, so loading a table launches no Spark job (left
-to itself, ``spark.read.parquet`` runs a one-task job just to read that
-footer).  The footer is converted by Spark's own
-``ParquetFileFormat.readSchemaFromFooter`` and
+A table stored as one file gets its schema from that file's footer, read
+on the driver and handed to ``spark.read.schema(...)``, so loading it
+launches no Spark job (left to itself, ``spark.read.parquet`` runs a
+one-task job just to read that footer).  The footer is converted by
+Spark's own ``ParquetFileFormat.readSchemaFromFooter`` and
 ``ParquetToSparkSchemaConverter`` under the session's SQL conf, so the
-result is the schema Spark would infer: the stored Spark-schema key,
-``nanosAsLong``, NTZ inference and ``binaryAsString`` all apply.  Like
-Spark with ``mergeSchema`` off, a directory contributes the footer of its
-first data file only and the other part files are assumed to agree.  The
-schema is read fresh on every call.
+result is the schema Spark would infer for that file: the stored
+Spark-schema key, ``nanosAsLong``, NTZ inference and ``binaryAsString``
+all apply.  A directory of part files is left to Spark's own listing and
+inference, so its summary files, ``mergeSchema`` and partition columns
+behave as Spark defines them.  The schema is read fresh on every call.
 """
 
 from __future__ import annotations
@@ -45,52 +45,21 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``{sf_dir}/{name}.parquet`` as a DataFrame, its schema read from the
-    file's footer on the driver (see :func:`parquet_schema`): no Spark job
-    runs.  Some testdata generations store ``events.ts`` as
+    """``{sf_dir}/{name}.parquet`` as a DataFrame.  When that path is one
+    file, its schema is read from the file's footer on the driver (see
+    :func:`parquet_file_schema`) and handed to ``spark.read.schema``, so no
+    Spark job runs.  A directory of part files (or a missing path) goes
+    through Spark's own listing and inference, as ``spark.read.parquet``
+    does.  Some testdata generations store ``events.ts`` as
     TIMESTAMP(NANOS), which Spark's vectorized reader rejects; reading
     nanos as bigint is ordering-equivalent and a no-op on timestamp[us]
     data, so the conf is set unconditionally (a cheap runtime conf that
     covers the driver's own session) and before the footer is converted."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` with the schema supplied from
-    :func:`parquet_schema`, so Spark skips its schema-inference job.
-    Partition columns of a ``k=v/`` layout still come from the path."""
-    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
-
-
-def _hidden(name: str) -> bool:
-    # the names Spark's file index leaves out of a listing
-    return (
-        (name.startswith("_") and "=" not in name)
-        or name.startswith(".")
-        or name.endswith("._COPYING_")
-    )
-
-
-def _first_data_file(fs, listing):
-    """The first data file in ``listing`` (Hadoop ``FileStatus``es) and
-    the directories under it, in the full-path order Spark's schema
-    inference picks from; None if there is none.  A directory sorts by
-    its path plus ``/``, which is where its files' full paths sort."""
-    entries = []
-    for st in listing:
-        path = st.getPath().toString()
-        if _hidden(path.rsplit("/", 1)[-1]):
-            continue
-        is_dir = st.isDirectory()
-        entries.append((path + "/" if is_dir else path, is_dir, st))
-    for _key, is_dir, st in sorted(entries, key=lambda e: e[0]):
-        if not is_dir:
-            return st
-        found = _first_data_file(fs, fs.listStatus(st.getPath()))
-        if found is not None:
-            return found
-    return None
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = parquet_file_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def _jclass(spark: SparkSession, name: str):
@@ -101,47 +70,37 @@ def _jclass(spark: SparkSession, name: str):
     return JavaClass(name, spark._jvm._gateway_client)
 
 
-def parquet_schema(spark: SparkSession, path: str):
-    """The Spark schema of the parquet data at ``path`` (a file, a
-    directory of part files, or a glob), read from one footer on the
-    driver with Spark's own footer reader and schema converter.
+def parquet_file_schema(spark: SparkSession, path: str):
+    """The Spark schema of the single parquet file at ``path``, read from
+    its footer on the driver with Spark's own footer reader and schema
+    converter under the session's SQL conf.  For one file this is the
+    schema Spark's inference gives, ``mergeSchema`` on or off.  Read fresh
+    on every call.
 
-    Like Spark's inference with ``mergeSchema`` off, only the first data
-    file is read (``_``/``.``-prefixed names skipped, partition
-    directories entered) and the rest are assumed to match.  A path that
-    does not exist, or holds no data file, raises the AnalysisException
-    Spark's inference raises."""
-    from pyspark.errors.exceptions.captured import convert_exception
+    None when ``path`` is not a regular file (a directory, or missing), or
+    when its name is one Spark's file listing hides (a leading ``_`` or
+    ``.``, a ``._COPYING_`` suffix): the caller leaves those to Spark."""
     from pyspark.sql.types import _parse_datatype_json_string
 
+    name = path.rstrip("/").rsplit("/", 1)[-1]
+    if name.startswith(("_", ".")) or name.endswith("._COPYING_"):
+        return None
     state = spark._jsparkSession.sessionState()
     hconf = state.newHadoopConf()
-    errors = _jclass(
-        spark, "org.apache.spark.sql.errors.QueryCompilationErrors")
     jpath = _jclass(spark, "org.apache.hadoop.fs.Path")(path)
-    fs = jpath.getFileSystem(hconf)
-    roots = fs.globStatus(jpath)
-    if not roots:  # None for a missing path, empty for an unmatched glob
-        raise convert_exception(
-            errors.dataPathNotExistError(fs.makeQualified(jpath).toString()))
-    # a root file lists as itself (and is skipped if hidden, as in Spark);
-    # a root directory lists its children, whatever its own name
-    first = _first_data_file(
-        fs, [st for root in roots for st in fs.listStatus(root.getPath())])
-    if first is None:
-        raise convert_exception(errors.dataSchemaNotSpecifiedError("Parquet"))
+    if not jpath.getFileSystem(hconf).isFile(jpath):
+        return None
     spark_pq = "org.apache.spark.sql.execution.datasources.parquet."
     parquet_mr = "org.apache.parquet."
     input_file = _jclass(
-        spark, parquet_mr + "hadoop.util.HadoopInputFile").fromStatus(
-            first, hconf)
+        spark, parquet_mr + "hadoop.util.HadoopInputFile").fromPath(
+            jpath, hconf)
     skip_row_groups = _jclass(
         spark, parquet_mr + "format.converter.ParquetMetadataConverter"
     ).SKIP_ROW_GROUPS
     metadata = _jclass(spark, spark_pq + "ParquetFooterReader").readFooter(
         input_file, skip_row_groups)
-    footer = _jclass(spark, parquet_mr + "hadoop.Footer")(
-        first.getPath(), metadata)
+    footer = _jclass(spark, parquet_mr + "hadoop.Footer")(jpath, metadata)
     converter = _jclass(
         spark, spark_pq + "ParquetToSparkSchemaConverter")(state.conf())
     file_format = _jclass(spark, spark_pq + "ParquetFileFormat")

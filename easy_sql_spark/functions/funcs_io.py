@@ -78,12 +78,7 @@ def build(processor):
         backend.create_temp_view(spark.read.json(path), view)
 
     def read_parquet(path: str, view: str):
-        """Register a parquet file/dir as a temp view, its schema read
-        from the first data file's footer on the driver (no Spark job;
-        see ``datasets.parquet_schema``)."""
-        from ..datasets import read_parquet as read_with_footer_schema
-
-        backend.create_temp_view(read_with_footer_schema(spark, path), view)
+        backend.create_temp_view(spark.read.parquet(path), view)
 
     def read_orc(path: str, view: str):
         backend.create_temp_view(spark.read.orc(path), view)

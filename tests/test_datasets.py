@@ -1,6 +1,7 @@
-"""Table loading takes each input's schema from one parquet footer read on
-the driver: no Spark job runs, the schema equals what Spark's own
-inference gives, and it is read fresh on every call."""
+"""Table loading takes a single-file input's schema from its parquet footer,
+read on the driver: no Spark job runs, the schema equals what Spark's own
+inference gives, and it is read fresh on every call.  Directories keep
+Spark's own listing and inference."""
 
 import contextlib
 import os
@@ -12,7 +13,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import types as T
 
 from easy_sql_spark import datasets
-from easy_sql_spark.runtime.processor import SqlProcessor
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BENCH_DATA = os.path.join(REPO, "perfbench", "data")
@@ -101,62 +101,41 @@ def test_timestamp_nanos_read_as_bigint(spark, tmp_path):
     _assert_same_as_inference(spark, df, path)
 
 
+def test_single_file_with_merge_schema_on(spark, tmp_path):
+    # one file merges with nothing, so the footer schema still holds
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", None]}), path)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        df = datasets.load_table(spark, str(tmp_path), "t")
+        _assert_same_as_inference(spark, df, path)
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
 def test_spark_written_directory(spark, tmp_path):
-    path = str(tmp_path / "plain")
+    # a directory of part files keeps Spark's own listing and inference
+    path = str(tmp_path / "plain.parquet")
     spark.range(40).selectExpr(
         "id", "cast(id as string) s", "id / 4 d"
     ).repartition(3).write.parquet(path)
     listed = os.listdir(path)
     assert "_SUCCESS" in listed
     assert sum(f.startswith("part-") for f in listed) == 3
-    with job_group(spark, "test_datasets_spark_dir") as jobs:
-        df = datasets.read_parquet(spark, path)
-        assert jobs() == []
+    df = datasets.load_table(spark, str(tmp_path), "plain")
     _assert_same_as_inference(spark, df, path)
 
 
 def test_hive_partitioned_directory(spark, tmp_path):
-    path = str(tmp_path / "part")
+    path = str(tmp_path / "part.parquet")
     spark.range(30).selectExpr(
         "id", "id % 3 k", "cast(id % 2 as string) j"
     ).write.partitionBy("k", "j").parquet(path)
-    with job_group(spark, "test_datasets_partitioned") as jobs:
-        df = datasets.read_parquet(spark, path)
-        assert jobs() == []
+    df = datasets.load_table(spark, str(tmp_path), "part")
     # partition columns come from the path, typed as Spark infers them
     assert df.schema.names == ["id", "k", "j"]
     assert df.schema["k"].dataType == T.IntegerType()
     _assert_same_as_inference(spark, df, path)
-
-
-def test_first_data_file_in_full_path_order(spark, tmp_path):
-    # "b=1.5/..." sorts before "b=1/..." as a full path ('.' < '/'),
-    # though the directory name "b=1" sorts first; Spark reads b=1.5
-    for part, table in (("b=1", {"x": [1]}), ("b=1.5", {"y": [2.0]})):
-        os.makedirs(tmp_path / "mixed" / part)
-        pq.write_table(pa.table(table),
-                       str(tmp_path / "mixed" / part / "f.parquet"))
-    path = str(tmp_path / "mixed")
-    df = datasets.read_parquet(spark, path)
-    assert df.schema.names == ["y", "b"]
-    assert df.schema == spark.read.parquet(path).schema
-
-
-def test_hidden_names_skipped_except_a_root_directory(spark, tmp_path):
-    # Spark lists a root directory whatever its name, but skips hidden
-    # names inside it, and a hidden root file
-    root = tmp_path / "_staging"
-    root.mkdir()
-    pq.write_table(pa.table({"x": [1]}), str(root / "_x.parquet"))
-    pq.write_table(pa.table({"y": [2]}), str(root / "part-0.parquet"))
-    df = datasets.read_parquet(spark, str(root))
-    assert df.schema.names == ["y"]
-    _assert_same_as_inference(spark, df, str(root))
-    with pytest.raises(AnalysisException) as ours:
-        datasets.read_parquet(spark, str(root / "_x.parquet"))
-    assert ours.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
-    with pytest.raises(AnalysisException):
-        spark.read.parquet(str(root / "_x.parquet"))
 
 
 def test_rewritten_file_returns_new_schema(spark, tmp_path):
@@ -170,32 +149,15 @@ def test_rewritten_file_returns_new_schema(spark, tmp_path):
     _assert_same_as_inference(spark, second, path)
 
 
-def test_path_without_data_raises_as_inference_does(spark, tmp_path):
-    empty = tmp_path / "empty"
-    empty.mkdir()
-    (empty / "_SUCCESS").write_text("")
-    (empty / ".hidden.parquet").write_text("")
-    for path, condition in ((str(empty), "UNABLE_TO_INFER_SCHEMA"),
-                            (str(tmp_path / "missing"), "PATH_NOT_FOUND")):
+def test_hidden_or_missing_file_raises_as_inference_does(spark, tmp_path):
+    # Spark's listing hides a "_"-prefixed file even when it is named
+    # directly; a schema from its footer would read as an empty table
+    pq.write_table(pa.table({"x": [1]}), str(tmp_path / "_x.parquet"))
+    for name, condition in (("_x", "UNABLE_TO_INFER_SCHEMA"),
+                            ("missing", "PATH_NOT_FOUND")):
         with pytest.raises(AnalysisException) as ours:
-            datasets.read_parquet(spark, path)
+            datasets.load_table(spark, str(tmp_path), name)
         with pytest.raises(AnalysisException) as spark_own:
-            spark.read.parquet(path)
+            spark.read.parquet(str(tmp_path / f"{name}.parquet"))
         assert ours.value.getCondition() == condition
         assert spark_own.value.getCondition() == condition
-
-
-def test_read_parquet_step_launches_no_job(spark, tmp_path):
-    path = str(tmp_path / "src")
-    spark.range(10).selectExpr("id", "id * 2 v").write.parquet(path)
-    sql = f"""-- backend: spark
-
--- target=func.read_parquet({path}, read_parquet_src)
-"""
-    try:
-        with job_group(spark, "test_datasets_read_parquet_step") as jobs:
-            SqlProcessor(spark, sql, logger=lambda m: None).run()
-            assert jobs() == []
-        _assert_same_as_inference(spark, spark.table("read_parquet_src"), path)
-    finally:
-        spark.catalog.dropTempView("read_parquet_src")
