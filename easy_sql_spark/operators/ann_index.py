@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..runtime.snapshots import SnapshotTable
-from .kmeans import assign_clusters, lloyd_kmeans
+from .kmeans import assign_clusters, centroids_sql, l2_norm, lloyd_kmeans
 
 _CENTROIDS_FILE = "ivf_centroids.json"
 
@@ -146,8 +146,7 @@ class IVFIndex:
 
     # -------------------------------------------------------------- search
     def search(
-        self, queries: DataFrame, topk: int = 10, nprobe: int = 4,
-        arrow: bool = False,
+        self, queries: DataFrame, topk: int = 10, nprobe: int = 4
     ) -> DataFrame:
         """Per query (``query_id``, ``qv``): the ``topk`` nearest indexed
         vectors by cosine among the ``nprobe`` closest cells.  Returns
@@ -157,40 +156,27 @@ class IVFIndex:
         literal (K x dim — bytes); the candidate scan is an equi-join on
         ``cell`` against the broadcast probe list, and because the store
         is partitioned by cell, Spark's partition pruning drops every
-        unprobed cell's files before reading a byte.
-
-        ``arrow=True`` scores candidates with numpy row-wise dot
-        products in ``mapInPandas`` instead of interpreted JVM folds
-        (~an order of magnitude on the scoring stage); float-sum
-        reordering can flip NEAR-TIED ranks, so keep the default fold
-        path where a bit-pinned oracle replay matters (same contract as
-        operators/kmeans.py's arrow paths)."""
+        unprobed cell's files before reading a byte.  Candidates score
+        with the JVM cosine fold, the order the oracle replay pins."""
         cents = self.centroids()
         # one posexplode over a single-row literal, NOT
         # createDataFrame(local rows): parallelize slices local data to
         # cluster width, so every broadcast build of the centroid frame
         # would run a 32-task job for 16 rows
-        cent_lit = "array(" + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")"
-            for c in cents
-        ) + ")"
         cent_df = self.spark.range(0, 1, 1, 1).select(
-            F.posexplode(F.expr(cent_lit)).alias("cell", "cv")
+            F.posexplode(F.expr(centroids_sql(cents))).alias("cell", "cv")
         ).select(F.col("cell").cast("int").alias("cell"), "cv")
-        norm = lambda c: F.sqrt(F.expr(
-            f"aggregate(transform({c}, t -> t * t), 0D, (acc, z) -> acc + z)"
-        ))
         qdot_c = F.expr(
             "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D, (a, z) -> a + z)"
         )
         pw = Window.partitionBy("query_id").orderBy(
-            (qdot_c / (norm("qv") * norm("cv"))).desc(), "cell"
+            (qdot_c / (l2_norm("qv") * l2_norm("cv"))).desc(), "cell"
         )
         probe = (
             queries.crossJoin(F.broadcast(cent_df))
             .withColumn("__pr", F.row_number().over(pw))
             .where(F.col("__pr") <= int(nprobe))
-            .select("query_id", "qv", norm("qv").alias("qnrm"), "cell")
+            .select("query_id", "qv", l2_norm("qv").alias("qnrm"), "cell")
         )
 
         # ONE bounded collect of the whole probe (|queries| x nprobe
@@ -209,42 +195,20 @@ class IVFIndex:
         corpus = (
             self.table.read(partitions={"cell": cells})
             .where(F.col("cell").isin(cells))
-            .withColumn("nrm", norm("v"))  # once per vector, not per pair
+            .withColumn("nrm", l2_norm("v"))  # once per vector, not per pair
         )
         dot = F.expr(
             "aggregate(zip_with(qv, v, (x, y) -> x * y), 0D, (a, z) -> a + z)"
         )
-        cand = corpus.join(F.broadcast(probe), "cell").where(
-            F.col("vec_id") != F.col("query_id")
-        )
-        if arrow:
-            def _score(batches):
-                import numpy as np
-                import pandas as pd
-
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    V = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-                    Q = np.asarray(pdf["qv"].tolist(), dtype=np.float64)
-                    cos = (V * Q).sum(axis=1) / (
-                        pdf["qnrm"].to_numpy() * pdf["nrm"].to_numpy()
-                    )
-                    yield pd.DataFrame({
-                        "query_id": pdf["query_id"],
-                        "neighbor_id": pdf["vec_id"],
-                        "cos_sim": cos,
-                    })
-
-            scored = cand.mapInPandas(
-                _score, "query_id long, neighbor_id long, cos_sim double"
-            )
-        else:
-            scored = cand.select(
+        scored = (
+            corpus.join(F.broadcast(probe), "cell")
+            .where(F.col("vec_id") != F.col("query_id"))
+            .select(
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 (dot / (F.col("qnrm") * F.col("nrm"))).alias("cos_sim"),
             )
+        )
         w = Window.partitionBy("query_id").orderBy(
             F.col("cos_sim").desc(), "neighbor_id"
         )

@@ -22,12 +22,8 @@ corpus size.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from .iterate import iter_checkpoint
 
 #: assignment dispatch (r14, guide §4.2): at/above this many centroid
 #: CELLS (K x dim) the interpreted JVM fold — K aggregates x dim lambda
@@ -42,11 +38,10 @@ from .iterate import iter_checkpoint
 #: wins 2.6-4.8x (21.8→8.3 s at n=200k).  Production K follows the
 #: corpus (k ~ n/500 — see semantic_dedup), so large-K IS the
 #: at-scale regime; fixture-sized K (8/16 → 512/1024 cells) stays on
-#: the fold path with a byte-identical plan.  Override via
-#: ``EASY_SQL_ASSIGN_KERNEL_MIN_CELLS``.
+#: the fold path with a byte-identical plan.
 ASSIGN_KERNEL_MIN_CELLS = 2048
 
-#: skew guard for the per-cluster pairwise kernels (VERDICT r14 #5):
+#: skew guard for the per-cluster pairwise kernel (VERDICT r14 #5):
 #: the n_c x n_c similarity matrix is computed in row BLOCKS of at most
 #: this many CELLS (~128 MB of doubles at the default), so a degenerate
 #: clustering (one giant cluster — exactly what near-duplicate corpora
@@ -55,23 +50,30 @@ ASSIGN_KERNEL_MIN_CELLS = 2048
 #: performs (identical per-cell op sequence, identical bits — pinned by
 #: test_semantic_dedup_blocked_kernel_exact); clusters whose full
 #: matrix fits run exactly one block, i.e. the pre-guard code path.
-#: Override via ``EASY_SQL_PAIRWISE_BLOCK_CELLS``.
 PAIRWISE_BLOCK_CELLS = 1 << 24
 
 
-def _env_int(name: str, default: int) -> int:
-    """Env-var integer override with a descriptive error — a malformed
-    value must fail as a configuration error naming the variable, not
-    as a bare ValueError deep inside a query plan (ADVICE r14)."""
-    raw = os.environ.get(name)
-    if raw is None or raw == "":
-        return default
-    try:
-        return int(raw)
-    except ValueError:
-        raise ValueError(
-            f"environment variable {name} must be an integer, got {raw!r}"
-        ) from None
+def centroids_sql(centroids: list[list[float]]) -> str:
+    """The K x dim matrix as ONE parsed SQL literal
+    ``array(array(..D), ..)``, not K*dim nested ``F.lit`` Column objects:
+    each Column constructor is a py4j round-trip, and at k=16 x 64 dims
+    that form cost ~1000 driver<->JVM calls per use (measured via
+    cProfile: socket.recv_into).  ``repr(float)`` is
+    shortest-round-trip, so the parsed doubles are bit-identical to the
+    originals."""
+    return "array(" + ",".join(
+        "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")"
+        for c in centroids
+    ) + ")"
+
+
+def l2_norm(col: str) -> Column:
+    """Euclidean norm of the array<double> column ``col`` as a JVM
+    fold (squares accumulated left to right from 0D, then ``sqrt``) —
+    the operand order the pairwise kernel and oracle replays pin."""
+    return F.sqrt(F.expr(
+        f"aggregate(transform({col}, t -> t * t), 0D, (acc, z) -> acc + z)"
+    ))
 
 
 def assign_clusters(
@@ -91,10 +93,7 @@ def assign_clusters(
         # threshold can never change behavior (ADVICE r14)
         raise ValueError(f"column {out_col!r} already exists")
     cells = len(centroids) * (len(centroids[0]) if centroids else 0)
-    gate = _env_int(
-        "EASY_SQL_ASSIGN_KERNEL_MIN_CELLS", ASSIGN_KERNEL_MIN_CELLS
-    )
-    if cells >= gate:
+    if cells >= ASSIGN_KERNEL_MIN_CELLS:
         return _assign_fold_kernel(df, centroids, vec_col, out_col)
     return _assign_fold(df, centroids, vec_col, out_col)
 
@@ -103,21 +102,9 @@ def _assign_fold(
     df: DataFrame, centroids: list[list[float]], vec_col: str,
     out_col: str,
 ) -> DataFrame:
-    """The JVM fold formulation (the oracle-replay reference).
-
-    The K x dim literal is built as ONE parsed SQL expression, not
-    K*dim nested ``F.lit`` Column objects: each Column constructor is a
-    py4j round-trip, and at k=16 x 64 dims the old form cost ~1000
-    driver<->JVM calls PER assignment — the dominant constant of the
-    kmeans lifecycle queries (measured via cProfile: socket.recv_into).
-    ``repr(float)`` is shortest-round-trip, so the parsed doubles are
-    bit-identical to the originals."""
-    lit = F.expr(
-        "array(" + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")"
-            for c in centroids
-        ) + ")"
-    )
+    """The JVM fold formulation (the oracle-replay reference); the
+    centroids ride as one parsed literal (:func:`centroids_sql`)."""
+    lit = F.expr(centroids_sql(centroids))
     dists = F.expr(
         f"transform(__cents, c -> aggregate("
         f"zip_with({vec_col}, c, (x, y) -> (x - y) * (x - y)), "
@@ -157,9 +144,13 @@ def _assign_fold_kernel(
     production-sized K (see ASSIGN_KERNEL_MIN_CELLS) at the price of
     one ArrowEvalPython stage."""
     import numpy as np
+    from pyspark.sql import types as T
 
     C = np.asarray(centroids, dtype=np.float64)
-    out_schema = _with_out_col(df, out_col)
+    # ``out_col`` is absent — see the guard in :func:`assign_clusters`
+    out_schema = T.StructType(
+        list(df.schema.fields) + [T.StructField(out_col, T.IntegerType())]
+    )
 
     def _assign(batches):
         for pdf in batches:
@@ -177,55 +168,12 @@ def _assign_fold_kernel(
     return df.mapInPandas(_assign, out_schema)
 
 
-def _with_out_col(df: DataFrame, out_col: str):
-    """Output schema for the assignment kernels: ``df``'s fields plus
-    ``out_col`` (int).  Callers guarantee ``out_col`` is absent — see
-    the guard in :func:`assign_clusters`."""
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.IntegerType())]
-    )
-
-
-def assign_clusters_arrow(
-    df: DataFrame, centroids: list[list[float]], vec_col: str = "v",
-    out_col: str = "cluster",
-) -> DataFrame:
-    """Vectorized assignment: one BLAS distance matrix per Arrow
-    batch (||v||^2 - 2 v.C^T + ||c||^2, argmin with first-index
-    tie-break — same tie rule as :func:`assign_clusters`).  BLAS may
-    reorder float sums, so a NEAR-TIED pair of centroids can flip
-    relative to the fold path; use for production scale, keep the fold
-    path for bit-pinned oracle replays."""
-    import numpy as np
-
-    if out_col in df.columns:
-        raise ValueError(f"column {out_col!r} already exists")
-    C = np.asarray(centroids, dtype=np.float64)
-    c2 = (C * C).sum(axis=1)
-    out_schema = _with_out_col(df, out_col)
-
-    def _assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + c2[None, :]
-            pdf = pdf.copy()
-            pdf[out_col] = d2.argmin(axis=1).astype("int32")
-            yield pdf
-
-    return df.mapInPandas(_assign, out_schema)
-
-
 def lloyd_kmeans(
     df: DataFrame,
     k: int,
     iters: int,
     id_col: str = "vec_id",
     vec_col: str = "v",
-    arrow: bool = False,
 ) -> list[list[float]]:
     """Train centroids; returns the K x dim matrix (driver-side floats,
     tiny).  ``df`` needs a unique numeric ``id_col`` (seed selection =
@@ -239,9 +187,8 @@ def lloyd_kmeans(
     if len(seeds) < k:
         raise ValueError(f"need at least k={k} vectors, got {len(seeds)}")
     cents = [list(r[vec_col]) for r in seeds]
-    assign = assign_clusters_arrow if arrow else assign_clusters
     for _ in range(iters):
-        assigned = assign(df, cents, vec_col=vec_col)
+        assigned = assign_clusters(df, cents, vec_col=vec_col)
         cd = (
             assigned.select("cluster", F.posexplode(vec_col).alias("dim", "x"))
             .groupBy("cluster", "dim")
@@ -272,90 +219,39 @@ def semantic_dedup(
     tau: float,
     id_col: str = "vec_id",
     vec_col: str = "v",
-    arrow: bool = False,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means the embedding space, then
     drop any vector with a more-senior (smaller id) cluster-mate above
     cosine ``tau``.  Returns (id, cluster, kept 0/1).
 
-    SIZE K WITH THE CORPUS: the pairwise stage is an equi-join on
-    cluster id, so per-cluster work is (n/k)^2 — the recipe keeps the
-    expected cluster size CONSTANT (k ~ n/500..n/5000, as the paper
-    does with k=11k for 600M docs).  A fixed k at growing n is
-    quadratic; tests/SCALE.md measure exactly that cliff.  Norms are
-    computed once per vector before the join.
+    SIZE K WITH THE CORPUS: the pairwise stage runs per cluster id, so
+    per-cluster work is (n/k)^2 — the recipe keeps the expected cluster
+    size CONSTANT (k ~ n/500..n/5000, as the paper does with k=11k for
+    600M docs).  A fixed k at growing n is quadratic; tests/SCALE.md
+    measure exactly that cliff.  Norms are computed once per vector
+    before the grouping.
 
-    The default path is BIT-PINNED: the per-cluster kernel reproduces
+    The pairwise stage is BIT-PINNED: the per-cluster kernel reproduces
     the JVM fold chain's IEEE op sequence exactly (see the comment at
     ``_cluster_flags``), so a DuckDB oracle replay matches to the last
-    ulp.  ``arrow=True`` runs the pairwise stage as one BLAS matmul per
-    cluster instead (fastest; memory per task is cluster_size^2 floats,
-    bounded by the k ~ n/500 sizing) — BLAS may reorder float
-    summations, so a cosine EXACTLY at ``tau`` could flip relative to
-    the default path (flag-equality between the paths is pinned on the
-    fixture in tests/test_operators.py)."""
-    norm = F.sqrt(F.expr(
-        f"aggregate(transform({vec_col}, t -> t * t), 0D, (acc, z) -> acc + z)"
-    ))
-    cents = lloyd_kmeans(
-        df, k, iters, id_col=id_col, vec_col=vec_col, arrow=arrow
-    )
-    assign = assign_clusters_arrow if arrow else assign_clusters
-    # no checkpoint: each branch below consumes ``af`` exactly once
-    # (the default branch no longer joins the drop set back), so a
+    ulp."""
+    cents = lloyd_kmeans(df, k, iters, id_col=id_col, vec_col=vec_col)
+    # no checkpoint: ``af`` is consumed exactly once below, so a
     # materialization barrier would only add a job
-    af = assign(df, cents, vec_col=vec_col).withColumn("nrm", norm)
-    # skew guard (VERDICT r14 #5): both pairwise kernels compute the
+    af = assign_clusters(df, cents, vec_col=vec_col).withColumn(
+        "nrm", l2_norm(vec_col)
+    )
+    # skew guard (VERDICT r14 #5): the pairwise kernel computes the
     # n_c x n_c similarity matrix in row blocks of <= block_cells cells,
     # so one degenerate giant cluster costs block_rows x n_c memory per
     # pass instead of n_c^2 (the join formulation this kernel replaced
     # would have spilled there; an applyInPandas task cannot).  A
     # cluster whose full matrix fits runs exactly one block == the
     # unblocked computation.
-    block_cells = max(1, _env_int(
-        "EASY_SQL_PAIRWISE_BLOCK_CELLS", PAIRWISE_BLOCK_CELLS
-    ))
-    if arrow:
-        af = af.transform(iter_checkpoint)  # consumed twice below
-        tau_f = float(tau)
+    block_cells = PAIRWISE_BLOCK_CELLS
 
-        def _cluster_dropped(pdf):
-            import numpy as np
-            import pandas as _pd
-
-            ids = pdf[id_col].to_numpy()
-            order = np.argsort(ids)
-            ids = ids[order]
-            V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)[order]
-            nrm = np.sqrt((V * V).sum(axis=1))
-            n = len(ids)
-            blk = max(1, block_cells // max(n, 1))
-            dropped = np.zeros(n, dtype=bool)
-            j_idx = np.arange(n)
-            for i0 in range(0, n, blk):
-                i1 = min(n, i0 + blk)
-                S = (V[i0:i1] @ V.T) / (nrm[i0:i1, None] * nrm[None, :])
-                senior = j_idx[None, :] > np.arange(i0, i1)[:, None]
-                dropped |= ((S > tau_f) & senior).any(axis=0)
-            return _pd.DataFrame({id_col: ids[dropped]})
-
-        dropped = (
-            af.select(id_col, vec_col, "cluster")
-            .groupBy("cluster")
-            .applyInPandas(_cluster_dropped, f"{id_col} long")
-        )
-        return (
-            af.join(dropped.withColumn("__dropped", F.lit(1)), id_col, "left")
-            .select(
-                id_col,
-                "cluster",
-                F.when(F.col("__dropped").isNull(), 1).otherwise(0)
-                .cast("int").alias("kept"),
-            )
-        )
-
-    # Default (bit-pinned) pairwise stage: ONE applyInPandas per cluster
-    # computing the kept flag directly, replacing the former
+    # The pairwise stage: ONE applyInPandas per cluster computing the
+    # kept flag directly, replacing the former
     # x JOIN y ON cluster + distinct + LEFT JOIN chain (three exchanges
     # and their AQE stage jobs) AND its interpreted per-pair JVM folds
     # (|cluster|^2 x dim lambda evaluations).  Bit-identical to that
@@ -367,8 +263,8 @@ def semantic_dedup(
     # numpy elementwise op is a separately rounded IEEE double op, so
     # the comparison against tau sees the identical bits the fold path
     # produced (pinned by test_semantic_dedup_pairwise_kernel_exact).
-    # Memory per task is cluster_size^2 doubles — bounded by the
-    # K ~ n/500 sizing exactly like the arrow path above.
+    # A task holds one cluster's vectors plus one row block of the
+    # similarity matrix (<= block_cells doubles).
     tau_f = float(tau)
 
     def _cluster_flags(pdf):

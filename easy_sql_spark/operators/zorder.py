@@ -66,8 +66,7 @@ def _bucket_expr(col: str, boundaries: list[float]) -> F.Column:
 #: equal-mass for a layout (64 buckets = 1.56% mass each).  At 100 TB
 #: the probe would otherwise pay a full-corpus sketch pass per
 #: clustered write; the 1% fraction floor keeps the sampled row count
-#: growing with the corpus.  Env-overridable
-#: ``EASY_SQL_ZPROBE_SAMPLE_BYTES``; set <= 0 to disable sampling.
+#: growing with the corpus.
 ZPROBE_SAMPLE_TARGET_BYTES = 2 << 20
 
 
@@ -75,20 +74,7 @@ def _probe_fraction(df: DataFrame) -> float:
     """Sampling fraction for the quantile probe, from driver-side scan
     metadata (``inputFiles`` lengths, as in datasets.spread — no job).
     1.0 when the plan's leaf bytes are small or unknowable."""
-    import os
-
-    try:
-        target = int(
-            os.environ.get(
-                "EASY_SQL_ZPROBE_SAMPLE_BYTES", ZPROBE_SAMPLE_TARGET_BYTES
-            )
-        )
-    except ValueError as e:
-        raise ValueError(
-            "EASY_SQL_ZPROBE_SAMPLE_BYTES must be an int (bytes)"
-        ) from e
-    if target <= 0:
-        return 1.0
+    target = ZPROBE_SAMPLE_TARGET_BYTES
     try:
         files = df.inputFiles()
         if not files:

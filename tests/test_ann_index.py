@@ -103,19 +103,3 @@ def test_create_twice_refused(spark, root):
     idx.create(_vecs(spark, 0, 50), k=4, iters=1)
     with pytest.raises(ValueError, match="already exists"):
         IVFIndex(spark, root).create(_vecs(spark, 0, 50), k=4, iters=1)
-
-
-def test_search_arrow_path_matches_fold_path(spark, root):
-    from easy_sql_spark.operators.ann_index import IVFIndex
-
-    idx = IVFIndex(spark, root)
-    idx.create(_vecs(spark, 0, 300), k=6, iters=2)
-    queries = _vecs(spark, 0, 4).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    fold = {(r.query_id, r.neighbor_id, r.rank)
-            for r in idx.search(queries, topk=8, nprobe=3).collect()}
-    arrow = {(r.query_id, r.neighbor_id, r.rank)
-             for r in idx.search(queries, topk=8, nprobe=3,
-                                 arrow=True).collect()}
-    assert fold == arrow and len(fold) == 4 * 8

@@ -399,10 +399,11 @@ def test_assign_clusters_kernel_gate(spark, monkeypatch):
     """assign_clusters dispatches on K x dim cells: below
     ASSIGN_KERNEL_MIN_CELLS the plan is the pure JVM fold projection
     (no Python boundary — the fixture/oracle-replay shape); at/above
-    it (env-overridable) the assignment rides ONE MapInPandas node.
-    Results are identical either way (bit-exactness pinned above)."""
+    it the assignment rides ONE MapInPandas node.  Results are
+    identical either way (bit-exactness pinned above)."""
     from pyspark.sql import functions as F
 
+    from easy_sql_spark.operators import kmeans
     from easy_sql_spark.operators.kmeans import assign_clusters
 
     emb = (
@@ -415,12 +416,11 @@ def test_assign_clusters_kernel_gate(spark, monkeypatch):
     )
     cents = [r["v"] for r in emb.orderBy("vec_id").limit(4).collect()]
 
-    monkeypatch.delenv("EASY_SQL_ASSIGN_KERNEL_MIN_CELLS", raising=False)
     fold_df = assign_clusters(emb, cents)  # 4 x 64 = 256 cells < 2048
     fold_plan = fold_df._jdf.queryExecution().optimizedPlan().toString()
     assert "MapInPandas" not in fold_plan and "Python" not in fold_plan
 
-    monkeypatch.setenv("EASY_SQL_ASSIGN_KERNEL_MIN_CELLS", "256")
+    monkeypatch.setattr(kmeans, "ASSIGN_KERNEL_MIN_CELLS", 256)
     kern_df = assign_clusters(emb, cents)
     kern_plan = kern_df._jdf.queryExecution().optimizedPlan().toString()
     assert "MapInPandas" in kern_plan
@@ -430,29 +430,33 @@ def test_assign_clusters_kernel_gate(spark, monkeypatch):
     assert fold == kern and len(fold) == 500
 
 
-def test_semantic_dedup_arrow_path_matches_fold_path(spark):
-    """semantic_dedup(arrow=True) — BLAS matmul pairwise + vectorized
-    assignment — must produce the identical (id, cluster, kept) set as
-    the bit-pinned fold path on the fixture (the documented contract:
-    divergence is possible only on near-tied floats)."""
-    from pyspark.sql import functions as F
+def test_centroids_sql_and_l2_norm_bits(spark):
+    """The shared literal and norm helpers (assignment, SemDeDup and
+    IVF search all use them): the parsed centroid literal carries the
+    original doubles bit for bit, and ``l2_norm`` is the left-to-right
+    fold of squares from 0.0 followed by one sqrt."""
+    import math
+    import random
 
-    from easy_sql_spark.operators.kmeans import semantic_dedup
+    from easy_sql_spark.operators.kmeans import centroids_sql, l2_norm
 
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select(
-            "vec_id",
-            F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
-        )
-        .localCheckpoint(eager=True)
+    rng = random.Random(5)
+    cents = [[rng.uniform(-1, 1) * 10.0 ** rng.randint(-300, 300)
+              for _ in range(5)] for _ in range(4)]
+    cents.append([0.1, 1 / 3, 2.0 ** -1074, 1.7976931348623157e308, 1e-7])
+    row = spark.range(1).selectExpr(f"{centroids_sql(cents)} as c").first()
+    assert [list(c) for c in row.c] == cents
+
+    vecs = [[rng.uniform(-4, 4) for _ in range(9)] for _ in range(50)]
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "i long, v array<double>"
     )
-    fold = {(r.vec_id, r.cluster, r.kept)
-            for r in semantic_dedup(emb, 4, 2, 0.30).collect()}
-    arrow = {(r.vec_id, r.cluster, r.kept)
-             for r in semantic_dedup(emb, 4, 2, 0.30, arrow=True).collect()}
-    assert fold == arrow and len(fold) > 0
-    assert any(kept == 0 for _, _, kept in fold)  # drops something
+    got = {r.i: r.n for r in df.select("i", l2_norm("v").alias("n")).collect()}
+    for i, v in enumerate(vecs):
+        acc = 0.0
+        for x in v:
+            acc = acc + x * x
+        assert got[i] == math.sqrt(acc), i
 
 
 def test_semantic_dedup_pairwise_kernel_exact(spark):
@@ -720,17 +724,17 @@ def test_dedup_index_local_gate_is_exact_not_claimed(spark, tmp_path, monkeypatc
 
 
 def test_semantic_dedup_blocked_kernel_exact(spark, monkeypatch):
-    """Skew guard (VERDICT r14 #5): the pairwise kernels compute the
+    """Skew guard (VERDICT r14 #5): the pairwise kernel computes the
     per-cluster similarity matrix in row blocks bounded by
-    EASY_SQL_PAIRWISE_BLOCK_CELLS, so one degenerate giant cluster
+    PAIRWISE_BLOCK_CELLS, so one degenerate giant cluster
     (k=1: every row in cluster 0 — the near-duplicate-corpus shape)
     bounds task memory instead of OOMing on n^2 cells.  The blocks
     slice the same elementwise IEEE ops, so the kept flags must be
     IDENTICAL across the cap boundary — on the giant cluster and on a
-    normal multi-cluster run, for both the bit-pinned default path and
-    the arrow path."""
+    normal multi-cluster run."""
     from pyspark.sql import functions as F
 
+    from easy_sql_spark.operators import kmeans
     from easy_sql_spark.operators.kmeans import semantic_dedup
 
     emb = (
@@ -742,66 +746,41 @@ def test_semantic_dedup_blocked_kernel_exact(spark, monkeypatch):
         .localCheckpoint(eager=True)
     )
 
-    def run(k, arrow):
+    def run(k):
         return {
             (r.vec_id, r.cluster, r.kept)
-            for r in semantic_dedup(emb, k, 1, 0.30, arrow=arrow).collect()
+            for r in semantic_dedup(emb, k, 1, 0.30).collect()
         }
 
+    whole_cells = kmeans.PAIRWISE_BLOCK_CELLS
     for k in (1, 4):          # k=1: one giant cluster (n=500, 250k cells)
-        for arrow in (False, True):
-            monkeypatch.delenv(
-                "EASY_SQL_PAIRWISE_BLOCK_CELLS", raising=False
-            )
-            whole = run(k, arrow)
-            monkeypatch.setenv("EASY_SQL_PAIRWISE_BLOCK_CELLS", "1000")
-            blocked = run(k, arrow)  # ~2-row blocks over a 500-row cluster
-            assert blocked == whole and len(whole) == 500, (k, arrow)
+        monkeypatch.setattr(kmeans, "PAIRWISE_BLOCK_CELLS", whole_cells)
+        whole = run(k)
+        monkeypatch.setattr(kmeans, "PAIRWISE_BLOCK_CELLS", 1000)
+        blocked = run(k)  # ~2-row blocks over a 500-row cluster
+        assert blocked == whole and len(whole) == 500, k
     assert any(kept == 0 for _, _, kept in whole)  # drops something
 
 
-def test_assign_clusters_rejects_existing_out_col(spark):
+def test_assign_clusters_rejects_existing_out_col(spark, monkeypatch):
     """ADVICE r14: the fold path's withColumn would silently replace an
     existing out_col while the kernel path appends a duplicate field —
-    both entry points must refuse instead, so the dispatch threshold
-    can never change behavior."""
+    assign_clusters must refuse on both sides of the
+    ASSIGN_KERNEL_MIN_CELLS gate, so the dispatch threshold can never
+    change behavior."""
     import pytest as _pytest
 
-    from easy_sql_spark.operators.kmeans import (
-        assign_clusters,
-        assign_clusters_arrow,
-    )
+    from easy_sql_spark.operators import kmeans
+    from easy_sql_spark.operators.kmeans import assign_clusters
 
     df = spark.createDataFrame(
         [(1, [0.0, 1.0], 0)], "vec_id long, v array<double>, cluster int"
     )
-    for fn in (assign_clusters, assign_clusters_arrow):
+    # 1 x 2 = 2 centroid cells: the fold side, then the kernel side
+    for gate in (kmeans.ASSIGN_KERNEL_MIN_CELLS, 2):
+        monkeypatch.setattr(kmeans, "ASSIGN_KERNEL_MIN_CELLS", gate)
         with _pytest.raises(ValueError, match="already exists"):
-            fn(df, [[0.0, 0.0]])
-
-
-def test_env_int_malformed_is_descriptive():
-    """ADVICE r14: a malformed env override must raise a configuration
-    error naming the variable, not a bare int() ValueError deep inside
-    a query."""
-    import pytest as _pytest
-
-    from easy_sql_spark.operators.kmeans import _env_int
-
-    assert _env_int("EASY_SQL_NO_SUCH_VAR_XYZ", 7) == 7
-    import os as _os
-
-    _os.environ["EASY_SQL_ASSIGN_KERNEL_MIN_CELLS"] = "2k"
-    try:
-        with _pytest.raises(ValueError, match="EASY_SQL_ASSIGN_KERNEL_MIN_CELLS"):
-            _env_int("EASY_SQL_ASSIGN_KERNEL_MIN_CELLS", 2048)
-    finally:
-        del _os.environ["EASY_SQL_ASSIGN_KERNEL_MIN_CELLS"]
-    _os.environ["EASY_SQL_ASSIGN_KERNEL_MIN_CELLS"] = ""
-    try:
-        assert _env_int("EASY_SQL_ASSIGN_KERNEL_MIN_CELLS", 2048) == 2048
-    finally:
-        del _os.environ["EASY_SQL_ASSIGN_KERNEL_MIN_CELLS"]
+            assign_clusters(df, [[0.0, 0.0]])
 
 
 def test_dedup_index_pending_keys_auto_flush(spark, tmp_path):

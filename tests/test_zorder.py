@@ -321,6 +321,7 @@ def test_probe_sampling_gate_and_layout(spark, tmp_path, monkeypatch):
 
     import pyarrow.parquet as pq
 
+    from easy_sql_spark.operators import zorder
     from easy_sql_spark.operators.zorder import (
         _probe_fraction,
         write_zordered,
@@ -334,7 +335,7 @@ def test_probe_sampling_gate_and_layout(spark, tmp_path, monkeypatch):
     # non-file source: no leaf files -> never sampled
     assert _probe_fraction(df) == 1.0
 
-    # parquet-backed frame under the default 8 MB target: not sampled
+    # parquet-backed frame under the default 2 MiB target: not sampled
     src = str(tmp_path / "src")
     df.write.parquet(src)
     pdf = spark.read.parquet(src)
@@ -343,7 +344,7 @@ def test_probe_sampling_gate_and_layout(spark, tmp_path, monkeypatch):
     # force sampling (tiny byte target) and verify the layout contract
     # is unchanged: n_files files, each covering a contiguous,
     # non-overlapping Morton range under ITS OWN probe's boundaries
-    monkeypatch.setenv("EASY_SQL_ZPROBE_SAMPLE_BYTES", "1024")
+    monkeypatch.setattr(zorder, "ZPROBE_SAMPLE_TARGET_BYTES", 1024)
     assert 0.01 <= _probe_fraction(pdf) < 1.0
     path = str(tmp_path / "zsampled")
     write_zordered(pdf, path, ["x", "y"], n_files=16)
@@ -364,13 +365,6 @@ def test_probe_sampling_gate_and_layout(spark, tmp_path, monkeypatch):
     spans.sort()
     for (_lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
         assert hi1 <= lo2, (hi1, lo2)
-
-    # malformed env raises a configuration error naming the variable
-    monkeypatch.setenv("EASY_SQL_ZPROBE_SAMPLE_BYTES", "8mb")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="EASY_SQL_ZPROBE_SAMPLE_BYTES"):
-        _probe_fraction(pdf)
 
 
 def test_probe_fraction_stops_stat_ing_past_the_floor(monkeypatch):
@@ -405,7 +399,7 @@ def test_probe_fraction_stops_stat_ing_past_the_floor(monkeypatch):
                 yield size
 
         monkeypatch.setattr(zorder, "input_file_lengths", lengths)
-        monkeypatch.setenv("EASY_SQL_ZPROBE_SAMPLE_BYTES", str(target))
+        monkeypatch.setattr(zorder, "ZPROBE_SAMPLE_TARGET_BYTES", target)
         total = sum(sizes)
         expect = 1.0 if total <= target else max(0.01, target / total)
         assert zorder._probe_fraction(_Scan(len(sizes))) == expect

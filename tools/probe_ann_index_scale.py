@@ -25,7 +25,9 @@ Also measured per index size: one fixed 1,000-vector ``ingest`` batch
 (expected ~flat — a narrow frozen-centroid assignment + partitioned
 append never touches existing cells), and ``semantic_dedup`` with the
 paper's K ∝ n sizing on the same vectors (the r12 SCALE row extends to
-sf10 here).
+sf10 here).  Both run the operators' only paths: the JVM cosine fold for
+search scoring, the size-gated assignment and the bit-pinned pairwise
+kernel for SemDeDup.
 
 Usage:
     python tools/probe_ann_index_scale.py <sf_dir> [<sf_dir> ...]
@@ -101,7 +103,7 @@ def main() -> None:
             search_s = []
             for _ in range(RUNS):
                 t0 = time.time()
-                idx.search(queries, topk=10, nprobe=NPROBE, arrow=True) \
+                idx.search(queries, topk=10, nprobe=NPROBE) \
                     .write.format("noop").mode("overwrite").save()
                 search_s.append(time.time() - t0)
             t0 = time.time()
@@ -117,12 +119,12 @@ def main() -> None:
                 "ingest_1k_s": round(ingest_s, 2),
             }), flush=True)
 
-        # SemDeDup production path: K ∝ n (paper sizing), arrow/BLAS
+        # SemDeDup production path: K ∝ n (paper sizing)
         sd_k = max(8, n // 500)
         t0 = time.time()
         semantic_dedup(
             vecs, k=sd_k, iters=2, tau=0.99,
-            id_col="vec_id", vec_col="v", arrow=True,
+            id_col="vec_id", vec_col="v",
         ).write.format("noop").mode("overwrite").save()
         print(json.dumps({
             "probe": "semantic_dedup_production",
