@@ -474,6 +474,8 @@ def main() -> None:
         return best
 
     run("a1_pricing_summary")  # warmup: JVM/codegen/parquet footer caches
+    # the warm-up's steal deltas are not evidence for a measured timing
+    steal_q.clear()
     # warm the Python/Arrow worker pool so mapInPandas queries measure the
     # operator, not the one-time interpreter forks (32 workers ≈ seconds)
     spark.range(64).repartition(32).mapInPandas(

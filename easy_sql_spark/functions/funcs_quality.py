@@ -71,12 +71,14 @@ def build(processor):
 
     def _profile_read_data(table: str, query: str, max_count: int):
         """Reference _read_data_spark (funcs_common.py:428-453): count →
-        sample to ≤ max_count → cache → decimal→double cast and
+        sample to ≤ max_count → lineage cut → decimal→double cast and
         array/map→``<col>__size`` companion columns → toPandas.  The scan
         and the sampling run distributed; only the bounded sample crosses
         to the driver."""
         from pyspark.sql.functions import expr
         from pyspark.sql.types import ArrayType, DecimalType, MapType
+
+        from ..operators.iterate import cut_lineage
 
         condition_sql = f"where {query}" if query else ""
         count = spark.sql(f"select count(*) from {table} {condition_sql}").collect()[
@@ -86,7 +88,9 @@ def build(processor):
         sdf = spark.sql(f"select * from {table} {condition_sql}").sample(
             fraction=fraction
         )
-        sdf.cache()
+        # one sample for the emptiness check and the toPandas; lazy: the
+        # count is the full scan that materializes it
+        sdf = cut_lineage(sdf, eager=False)
         if sdf.count() == 0:
             processor.log(f"{table} is empty, no report generated")
             return None

@@ -15,7 +15,7 @@ Scale design — the working set is the VOCABULARY, not the corpus:
    the driver (one tiny action per round — the merge table is driver-
    sized by definition); applying the merge is a per-row JVM fold
    (``aggregate``), no Python, no shuffle.
-3. The sequence frame is localCheckpoint-ed each round so the plan stays
+3. The sequence frame's lineage is cut each round so the plan stays
    flat instead of stacking N fold projections.
 
 Symbols stay within ``[a-z]`` (tokens come from a lowercase letter
@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .iterate import iter_checkpoint
+from .iterate import cut_lineage
 
 _WORD_RE = "[a-z]+"
 
@@ -81,7 +81,7 @@ def bpe_train(
     vocab = word_frequencies(docs, text_col)
     seqs = vocab.select(
         "weight", F.split("word", "").alias("syms")
-    ).transform(iter_checkpoint)
+    ).transform(cut_lineage, eager=True)
 
     pair_expr = (
         "transform(slice(syms, 1, size(syms) - 1), "
@@ -102,7 +102,7 @@ def bpe_train(
         merges.append((rank, left, right, weight))
         seqs = seqs.select(
             "weight", F.expr(_merge_fold_expr("syms", left, right)).alias("syms")
-        ).transform(iter_checkpoint)
+        ).transform(cut_lineage, eager=True)
     return merges
 
 

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .iterate import iter_checkpoint, iter_checkpoint_lazy
+from .iterate import cut_lineage
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -94,13 +94,13 @@ def connected_components_star(
         edges.select(F.col(u).alias("u"), F.col(v).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .transform(iter_checkpoint_lazy)
+        .transform(cut_lineage, eager=False)
     )
     nodes = (
         e.select("u")
         .unionAll(e.select(F.col("v").alias("u")))
         .distinct()
-        .transform(iter_checkpoint_lazy)
+        .transform(cut_lineage, eager=False)
     )
     if max_rounds is None:
         n_nodes = nodes.count()
@@ -111,7 +111,7 @@ def connected_components_star(
     for _ in range(max_rounds):
         # lazy checkpoint: the checksum's full-scan aggregate is the
         # materializing action, so each round costs ONE job not two
-        e = _small_star(_large_star(e)).transform(iter_checkpoint_lazy)
+        e = _small_star(_large_star(e)).transform(cut_lineage, eager=False)
         cur = _checksum(e)
         if cur == prev:
             converged = True
@@ -253,7 +253,7 @@ def label_propagation_components(
     # distributed path: lazy checkpoint — iteration 1's fused
     # materialize+convergence job is the first full-scan action over the
     # edges; later iterations and the star escalation read cached blocks
-    edges = edges.transform(iter_checkpoint_lazy)
+    edges = edges.transform(cut_lineage, eager=False)
     # labels is a cheap distinct over the CHECKPOINTED edges — its two
     # consumers inside iteration 1 reuse the distinct's Exchange within
     # that one job, so a separate checkpoint here would only add a
@@ -309,7 +309,7 @@ def label_propagation_components(
                 "label",
                 (F.col("label") < F.col("__old")).alias("moved"),
             )
-        ).transform(iter_checkpoint_lazy)
+        ).transform(cut_lineage, eager=False)
         # full-scan aggregate (not limit(1)) ON PURPOSE: it is the lazy
         # checkpoint's materializing action, fusing ckpt + convergence
         # count into one job per iteration — and a partial action could

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..runtime.snapshots import SnapshotTable
+from .iterate import cut_lineage
 
 _BAND_COLS = ["doc_id", "band_id", "band"]
 
@@ -241,8 +242,8 @@ class MinHashDedupIndex:
                 frame = t._read_state(m, added, schema)
                 # materialize NOW: if the dirs were vacuumed the failure
                 # must surface here (-> fallback), not mid-join later
-                frame = frame.select("doc_id").distinct().localCheckpoint(
-                    eager=True
+                frame = cut_lineage(
+                    frame.select("doc_id").distinct(), eager=True
                 )
             except Exception:
                 return None
@@ -538,7 +539,7 @@ class MinHashDedupIndex:
                 # measured +4-7 jobs per lifecycle), so checkpoint it
                 # once.  ``isin``-filtered frames skip this: consumers
                 # re-apply a narrow predicate over cached blocks free.
-                admitted_bands = admitted_bands.localCheckpoint(eager=True)
+                admitted_bands = cut_lineage(admitted_bands, eager=True)
             self._pending.append(
                 (None if batch_id is None else int(batch_id), admitted_bands)
             )
@@ -691,7 +692,7 @@ class MinHashDedupIndex:
         # per consumer (measured 0.4-1.3 s/batch of repeated index scans
         # when this was left lazy); with it the index is read once per
         # ingest, which is the module's O(batch + matched bands) claim.
-        surv_bands = surv_bands.localCheckpoint(eager=True)
+        surv_bands = cut_lineage(surv_bands, eager=True)
 
         pairs = _lsh_capped_pairs(surv_bands, pre_materialized=True)
         dropped_ids = local_non_min_ids(

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .iterate import cut_lineage
+
 
 def interval_join(
     left: DataFrame,
@@ -70,11 +72,11 @@ def interval_join(
     if how == "inner":
         return inner_join(left)
 
-    # left outer: a synthetic row id (checkpointed so both passes see the
+    # left outer: a synthetic row id (cut so both passes see the
     # same values) identifies unmatched left rows exactly
     lid = left.withColumn(
         "__lid", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=True)
+    ).transform(cut_lineage, eager=True)
     inner = inner_join(lid)
     unmatched = lid.join(inner.select("__lid").distinct(), "__lid", "left_anti")
     for field in right.schema.fields:

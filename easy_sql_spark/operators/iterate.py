@@ -1,19 +1,25 @@
-"""Plan-truncation helper for ITERATIVE operators (connected
-components, PageRank, k-means, BPE): each round must cut lineage or the
-plan tree grows linearly in rounds and analysis time quadratically.
+"""The one lineage cut: every materialization the runtime, operators and
+registry queries decide on goes through :func:`cut_lineage`.
+
+A cut is needed where a plan would otherwise be recomputed or grow
+without bound: a driver decision reads the frame, a target table is
+read and then overwritten, a frame has several consumers, or an
+iterative operator (connected components, PageRank, BPE) must keep its
+plan tree from growing linearly in rounds and its analysis time
+quadratically.
 
 ``localCheckpoint`` (the default) materializes to executor block
 storage — free of HDFS round-trips, but blocks die with their executor,
 and Spark cannot recompute past a truncated lineage, so on a REAL
-cluster a lost executor mid-iteration kills the job.  On
-``local[...]`` this cannot happen (one JVM), which is why it is the
-right default for this repo's test/bench environment.
+cluster a lost executor kills the job.  On ``local[...]`` this cannot
+happen (one JVM), which is why it is the right default for this repo's
+test/bench environment.
 
 For cluster runs, set a RELIABLE checkpoint dir
 (``spark.sparkContext.setCheckpointDir("hdfs://…/ckpt")`` or the
-``spark.checkpoint.dir`` conf) and :func:`iter_checkpoint` switches to
+``spark.checkpoint.dir`` conf) and every cut switches to
 ``DataFrame.checkpoint`` — durable against executor loss, at the cost
-of one distributed-FS write per round.  That is the standard Pregel /
+of one distributed-FS write per cut.  That is the standard Pregel /
 GraphX trade (GraphX's own periodic-checkpoint guidance).
 """
 
@@ -22,32 +28,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def iter_checkpoint(df: DataFrame) -> DataFrame:
+def cut_lineage(df: DataFrame, *, eager: bool) -> DataFrame:
     """Materialize ``df`` and truncate its lineage — reliably when the
-    session has a checkpoint dir configured, executor-locally
-    otherwise.  Eager in both modes (iterative callers always consume
-    the result in the same round)."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir():
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+    session has a checkpoint dir configured, executor-locally otherwise.
 
-
-def iter_checkpoint_lazy(df: DataFrame) -> DataFrame:
-    """Lineage-truncating checkpoint whose materialization FUSES into the
-    caller's next full-scan action instead of paying a dedicated job.
-
-    Iterative loops that immediately follow each round's checkpoint with
-    an aggregate over the same frame (convergence counts, edge-set
-    checksums) pay two scheduler round-trips per round with the eager
-    form — at small data sizes the job-launch constant, not the scan,
-    dominates (SCALE.md, dedup-index lifecycle).  The lazy form
-    materializes the checkpoint inside the first action's job; every
-    later consumer reads the cached blocks exactly as with the eager
-    form.  Only safe when the caller GUARANTEES a full-scan action runs
+    ``eager=True`` runs a dedicated job now.  ``eager=False`` fuses the
+    materialization into the caller's next full-scan action; every later
+    consumer reads the stored blocks exactly as with the eager form.
+    Lazy is only safe when the caller GUARANTEES a full-scan action runs
     before the frame is consumed elsewhere (a limit/partial action may
     materialize a subset of partitions and defer the rest)."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir():
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)

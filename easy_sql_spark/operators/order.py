@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .iterate import cut_lineage
+
 
 def global_row_number(
     df: DataFrame,
@@ -36,11 +38,11 @@ def global_row_number(
     base = (
         df.repartitionByRange(n, *cols)
         .sortWithinPartitions(*cols)
-        # checkpointed so both passes see identical partitioning; lazy:
+        # cut so both passes see identical partitioning; lazy:
         # the per-partition count below is the materializing FULL scan
         # (every partition computes inside its job), so the eager form's
         # dedicated job was pure scheduler constant
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     counts = (
         base.groupBy(F.spark_partition_id().alias("pid"))

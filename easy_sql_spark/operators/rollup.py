@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..runtime.snapshots import SnapshotTable
+from .iterate import cut_lineage
 
 
 def maintain_rollup(
@@ -80,8 +81,9 @@ def maintain_rollup(
     sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
         F.lit(-1)
     )
-    delta = agg(ch.withColumn("__sign", sign), F.col("__sign")).localCheckpoint(
-        eager=True
+    # two consumers: its key set below and the summed union
+    delta = cut_lineage(
+        agg(ch.withColumn("__sign", sign), F.col("__sign")), eager=True
     )
     # old rollup rows for the delta's keys only (broadcast the delta's
     # bounded key set), summed with the delta

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .iterate import cut_lineage
+
 SALT_COL = "__salt__"
 
 #: Selection keys live in the first 15 hex chars (60 bits) of md5 — numeric
@@ -254,7 +256,9 @@ def first_occurrence_flag(
     hot_firsts = (
         hot.groupBy(key_col)
         .agg(F.min(o).alias("__first_focc"))
-        .localCheckpoint(eager=True)
+        # each action on the result broadcasts these stored rows instead
+        # of re-aggregating the hot side
+        .transform(cut_lineage, eager=True)
     )
     hot_out = (
         hot.join(F.broadcast(hot_firsts), [key_col])
@@ -347,7 +351,7 @@ def _salted_outer(
 ) -> DataFrame:
     """Right/full-outer as salted-inner ∪ null-extended remainders.
 
-    A row-id tags each small row (frozen by an eager localCheckpoint so
+    A row-id tags each small row (frozen by an eager lineage cut so
     ``monotonically_increasing_id`` cannot shift under recomputation); the
     matched side comes from the skew-protected salted inner join, the
     unmatched small rows from a row-id anti-join against the match set
@@ -360,9 +364,10 @@ def _salted_outer(
     rid = "__salted_rid__"
     if rid in small.columns:
         raise ValueError(f"{rid} already present")
+    # the row ids must not shift between the inner join and the anti-join
     tagged = small.withColumn(
         rid, F.monotonically_increasing_id()
-    ).localCheckpoint(eager=True)
+    ).transform(cut_lineage, eager=True)
     inner = salted_join(large, tagged, keys, "inner", salt, deterministic)
     large_rest = [c for c in large.columns if c not in keys]
     small_rest = [c for c in small.columns if c not in keys]

@@ -21,6 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..datasets import SPREAD_MODERATE, load_table, spread
+from ..operators.iterate import cut_lineage
 from . import query
 
 N_MINHASH = 8  # signature length
@@ -83,7 +84,7 @@ def minhash_bands(
         # materialize the narrow signature table before posexplode:
         # Generate re-evaluates its generator per emitted element, which
         # would run every signature fold n_bands× (measured 2× at sf0.1)
-        .localCheckpoint(eager=not with_count)
+        .transform(cut_lineage, eager=not with_count)
     )
     n_band_rows = sigs.count() * n_bands if with_count else None
     rows_per_band = n_hashes // n_bands
@@ -121,7 +122,7 @@ def _lsh_capped_pairs(
     Cost: one extra window over the same (band_id, band) key the join
     shuffles on, so no additional exchange at scale.
 
-    The band table is materialized once (localCheckpoint): it is
+    The band table is materialized once (``cut_lineage``): it is
     |docs| × n_bands NARROW rows (id + 2 small ints + one md5), while its
     lineage is a full-corpus shingle explode + n_hashes md5-min
     aggregation — without the checkpoint each self-join side recomputes
@@ -134,7 +135,7 @@ def _lsh_capped_pairs(
     internal checkpoint and its dedicated job.
     """
     if not pre_materialized:
-        bands = bands.localCheckpoint(eager=True)
+        bands = cut_lineage(bands, eager=True)
     bw = W.partitionBy("band_id", "band")
     sized = bands.select(
         "doc_id",
@@ -818,7 +819,7 @@ def dedup_components(spark, sf_dir):
     takes the min of its own label and its neighbors' labels; converged when
     no label changes.  Rounds needed = graph diameter (near-dup components
     are tiny, so a handful); every round is one broadcast-or-shuffle join +
-    aggregate, and ``localCheckpoint`` truncates the growing lineage — the
+    aggregate, and ``cut_lineage`` truncates the growing lineage — the
     standard Spark pattern for iterative algorithms (Pregel-style).  The
     oracle replays the same closure with a recursive CTE.  A component
     whose diameter exceeds the round cap no longer fails: the loop

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..datasets import SPREAD_MODERATE, load_table, spread
 from ..operators.skew import capped_per_key
+from ..operators.iterate import cut_lineage
 from . import query
 
 LSH_DIM = 64  # testdata embedding dimensionality (all sf dirs)
@@ -130,7 +131,7 @@ def sim_lsh_topk(spark, sf_dir):
     sigs = spread(emb).select(
         "vec_id",
         *[F.expr(_sig_expr(p)).alias(f"s{p}") for p in range(LSH_PLANES)],
-    ).localCheckpoint(eager=False)
+    ).transform(cut_lineage, eager=False)
     bucket_cols = [
         sum(
             F.when(F.col(f"s{t * LSH_BITS + i}") >= 0, 1 << i).otherwise(0)
@@ -249,7 +250,7 @@ def text_winnow_pairs(spark, sf_dir):
     # the one final action (the self-join's first exchange is the
     # materializing full scan), so the eager form's dedicated job was
     # pure scheduler constant.
-    e = fps.localCheckpoint(eager=False).select(
+    e = cut_lineage(fps, eager=False).select(
         "doc_id", F.explode("fps").alias("fp")
     )
     a = e.select(F.col("doc_id").alias("doc_a"), "fp")

@@ -12,6 +12,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..datasets import SPREAD_MODERATE, load_table, spread
+from ..operators.iterate import cut_lineage
 from . import query
 
 # Java regex and DuckDB's RE2 agree on this subset: character classes,
@@ -498,7 +499,7 @@ def dedup_incremental(spark, sf_dir):
         # lazy: both fingerprint consumers (ne/ce join sides) live inside
         # the one final action, so the eager form's dedicated
         # materialization job was pure scheduler constant
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     e = fps.select("doc_id", F.explode("fps").alias("fp"))
     is_new = F.col("doc_id") % INC_MOD == 7
@@ -662,7 +663,7 @@ def dedup_substring_spans(spark, sf_dir):
     # lazy: both self-join sides live inside the one final action (the
     # join's first exchange is the materializing full scan), so the
     # eager form's dedicated job was pure scheduler constant
-    e = hashes.localCheckpoint(eager=False).select(
+    e = cut_lineage(hashes, eager=False).select(
         "doc_id", F.explode("hs").alias("h")
     )
     a = e.select(F.col("doc_id").alias("doc_a"), "h")
@@ -886,7 +887,7 @@ def contamination_ngram(spark, sf_dir):
     # inside the final action is the materializing full scan (its mod
     # filter prunes rows, not partitions), so the eager form's dedicated
     # job was pure scheduler constant
-    e = grams.localCheckpoint(eager=False).select(
+    e = cut_lineage(grams, eager=False).select(
         "doc_id", F.explode("gs").alias("g")
     )
     ev = e.where(F.col("doc_id") % EVAL_MOD == 0).select(

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..datasets import inline_frame, load_table, spread
+from ..operators.iterate import cut_lineage
 from . import query
 
 try:  # generated by tools/gen_independent_oracles.py (committed artifact)
@@ -285,7 +286,7 @@ def text_lm_perplexity(spark, sf_dir):
     model = (
         bg.groupBy("b")
         .agg(F.count(F.lit(1)).alias("cbg"))
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     uni = model.groupBy(F.substring("b", 1, 1).alias("c")).agg(
         F.sum("cbg").alias("cuni")
@@ -941,7 +942,8 @@ def snapshot_time_travel(spark, sf_dir):
     out = per_version[0]
     for p in per_version[1:]:
         out = out.unionByName(p)
-    return out.orderBy("version").localCheckpoint(eager=True)
+    # materialize the result: later actions skip the temp table's files
+    return cut_lineage(out.orderBy("version"), eager=True)
 
 
 @query(
@@ -1017,7 +1019,8 @@ def snapshot_merge_delete(spark, sf_dir):
     out = per_version[0]
     for p in per_version[1:]:
         out = out.unionByName(p)
-    return out.orderBy("version").localCheckpoint(eager=True)
+    # materialize the result: later actions skip the temp table's files
+    return cut_lineage(out.orderBy("version"), eager=True)
 
 
 @query(
@@ -1359,7 +1362,8 @@ def snapshot_change_feed(spark, sf_dir):
         t.changes(v1, v3)
         .select("doc_id", F.col("_change_type").alias("change_type"))
         .orderBy("doc_id", "change_type")
-        .localCheckpoint(eager=True)
+        # materialize the result: later actions skip the temp table's files
+        .transform(cut_lineage, eager=True)
     )
 
 
@@ -1443,7 +1447,7 @@ def sim_semantic_dedup(spark, sf_dir):
         # lazy: the k-means seeds TakeOrderedAndProject (the first
         # consumer) scans every partition, so the eager form's dedicated
         # materialization job was pure scheduler constant
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     # K pinned at 8 for the fixed-size oracle fixture; at corpus scale
     # size K ~ n/500 so cluster sizes (and the pairwise stage) stay
@@ -1614,7 +1618,7 @@ def sim_ann_index_search(spark, sf_dir):
             "vec_id",
             F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
         )
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
 
     def vecs(lo, hi):
@@ -1950,12 +1954,10 @@ def graph_pagerank(spark, sf_dir):
     per-destination aggregate — the standard Pregel/GraphX plan shape
     without the framework; the rank frame checkpoints per round
     (operators/iterate.py: RELIABLE checkpoint when the session has a
-    checkpoint dir — the cluster-safe mode — else localCheckpoint) so
+    checkpoint dir — the cluster-safe mode — else executor-local) so
     plans stay flat.  Complements the two connected-components
     operators as the graph-analytics family."""
     from pyspark.sql import Window
-
-    from ..operators.iterate import iter_checkpoint_lazy
 
     pairs = (
         load_table(spark, sf_dir, "lineitem")
@@ -1976,7 +1978,7 @@ def graph_pagerank(spark, sf_dir):
     # materializing full-scan action, so edges costs no dedicated job.
     edges = edges0.withColumn(
         "deg_src", F.count(F.lit(1)).over(Window.partitionBy("src"))
-    ).transform(iter_checkpoint_lazy)
+    ).transform(cut_lineage, eager=False)
     # nodes derive from the CHECKPOINTED edges (cached blocks), not from
     # a second lineitem scan+distinct of the edges0 lineage; consumed
     # only for n and the r0 seed
@@ -2008,7 +2010,7 @@ def graph_pagerank(spark, sf_dir):
                     + F.lit(PR_DAMP) * F.col("s").cast("double")
                 ).alias("r"),
             )
-            .transform(iter_checkpoint_lazy)
+            .transform(cut_lineage, eager=False)
         )
 
     from pyspark.sql import Window

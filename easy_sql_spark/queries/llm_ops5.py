@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..datasets import inline_frame, load_table
+from ..operators.iterate import cut_lineage
 from . import query
 
 try:  # generated by tools/gen_independent_oracles.py (committed artifact)
@@ -22,6 +23,22 @@ except ImportError:  # pragma: no cover - pre-generation bootstrap only
 #: emb_pca_project corpus scope (vec_id bound) — shared with the oracle
 #: generator so both sides see the identical vector set.
 PCA_SCOPE = 500
+
+
+def _orders_cents(spark, sf_dir, max_key, *extra_cols):
+    """The lakehouse queries' seed: ``orders`` up to ``max_key`` as
+    ``(k, cents)`` plus ``extra_cols``, cut once because each query
+    writes several files or commits from it and then checks them."""
+    return cut_lineage(
+        load_table(spark, sf_dir, "orders")
+        .where(F.col("o_orderkey") <= max_key)
+        .select(
+            F.col("o_orderkey").alias("k"),
+            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+            *extra_cols,
+        ),
+        eager=True,
+    )
 
 
 @query(
@@ -130,7 +147,8 @@ def snapshot_branch_lifecycle(spark, sf_dir):
         .unionByName(one("src_rows", src.row_count()))
         .unionByName(sums[1])
     )
-    return out.orderBy("metric").localCheckpoint(eager=True)
+    # materialize the result: later actions skip the temp table's files
+    return cut_lineage(out.orderBy("metric"), eager=True)
 
 
 def _messy_urls(spark, sf_dir):
@@ -743,7 +761,8 @@ def sim_mmr_rerank(spark, sf_dir):
         )
         .orderBy(F.col("rel").desc(), "vec_id")
         .limit(pool_n)
-        .localCheckpoint(eager=True)
+        # two consumers: both sides of the pairwise cross join
+        .transform(cut_lineage, eager=True)
     )
     right = pool.select(
         F.col("vec_id").alias("b_id"), F.col("v").alias("bv")
@@ -972,7 +991,8 @@ def delta_interop_read(spark, sf_dir):
             F.col("o_totalprice").alias("price"),
             (F.col("o_orderkey") % 3).cast("string").alias("pt"),
         )
-        .localCheckpoint(eager=True)
+        # one staged file per partition value reads it
+        .transform(cut_lineage, eager=True)
     )
 
     import json as _json
@@ -1235,7 +1255,8 @@ def delta_interop_read(spark, sf_dir):
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)
-    return out.orderBy("version", "pt").localCheckpoint(eager=True)
+    # materialize the result: later actions skip the temp table's files
+    return cut_lineage(out.orderBy("version", "pt"), eager=True)
 
 
 @query(
@@ -1282,15 +1303,7 @@ def iceberg_interop_read(spark, sf_dir):
     from ..sources.iceberg_meta import read_iceberg
 
     t = tempfile.mkdtemp(prefix="ice_q_") + "/tbl"
-    seed = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 900)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    seed = _orders_cents(spark, sf_dir, 900)
 
     def stage(df, rel):
         df.coalesce(1).write.parquet(t + "/_s")
@@ -1422,7 +1435,8 @@ def iceberg_interop_read(spark, sf_dir):
     out = outs[0]
     for o in outs[1:]:
         out = out.unionByName(o)
-    return out.orderBy("snap").localCheckpoint(eager=True)
+    # materialize the result: later actions skip the temp table's files
+    return cut_lineage(out.orderBy("snap"), eager=True)
 
 
 @query(
@@ -1658,7 +1672,8 @@ def snapshot_dv_delete(spark, sf_dir):
         F.sum("k").cast("bigint").alias("sum_k"),
     ).select(F.lit("d_after_compact_cow").alias("stage"), "n", "sum_k")
     out = s1.unionByName(s2).unionByName(s3).unionByName(s4)
-    return out.orderBy("stage").localCheckpoint(eager=True)
+    # materialize the result: later actions skip the temp table's files
+    return cut_lineage(out.orderBy("stage"), eager=True)
 
 
 @query(
@@ -1704,15 +1719,7 @@ def hudi_mor_interop_read(spark, sf_dir):
     from ..sources.hudi_meta import read_hudi
 
     t = _tempfile.mkdtemp(prefix="hudi_q_") + "/tbl"
-    seed = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 600)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    seed = _orders_cents(spark, sf_dir, 600)
 
     # --- base file slice at instant 001 (commit), meta cols populated
     base = seed.selectExpr(
@@ -1783,7 +1790,8 @@ def hudi_mor_interop_read(spark, sf_dir):
     ]
     return (
         outs[0].unionByName(outs[1]).orderBy("snap")
-        .localCheckpoint(eager=True)
+        # materialize the result: later actions skip the temp table's files
+        .transform(cut_lineage, eager=True)
     )
 
 
@@ -1827,15 +1835,7 @@ def hudi_export_roundtrip(spark, sf_dir):
     from ..runtime.snapshots import SnapshotTable
     from ..sources.hudi_meta import export_snapshot_to_hudi, read_hudi
 
-    seed = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 800)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    seed = _orders_cents(spark, sf_dir, 800)
     root = tempfile.mkdtemp(prefix="hudi_exp_") + "/tbl"
     t = SnapshotTable(spark, root)
     t.create(seed)
@@ -1862,5 +1862,6 @@ def hudi_export_roundtrip(spark, sf_dir):
     ]
     return (
         outs[0].unionByName(outs[1]).orderBy("snap")
-        .localCheckpoint(eager=True)
+        # materialize the result: later actions skip the temp table's files
+        .transform(cut_lineage, eager=True)
     )

@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..datasets import SPREAD_MODERATE, inline_frame, load_table, spread
+from ..operators.iterate import cut_lineage
 from . import query
+from .llm_ops5 import _orders_cents
 
 #: The portable tokenizer every cross-engine text query in this repo
 #: uses: lowercase alpha runs (identical regex semantics in Spark and
@@ -169,7 +171,7 @@ def text_dsir_weights(spark, sf_dir):
     Feature space: 256 md5-prefix buckets (the repo's portable-hash
     discipline — Spark's murmur hash and DuckDB's differ, md5 doesn't).
     Plan: ONE tokenize pass folded into a (doc_id, bucket) count
-    aggregate that is MATERIALIZED once (localCheckpoint — the
+    aggregate that is MATERIALIZED once (``cut_lineage`` — the
     minhash_bands recipe; Spark's ReuseExchange does not fire across
     the three consumers, measured 6 duplicate scans without it), then
     read back by the 256-row weight table, its 1-row total, and the
@@ -197,7 +199,7 @@ def dsir_weight_frame(docs, target_lang: str = "en"):
         # lazy: all three consumers live inside the ONE final action
         # (the bucket-stats broadcast build is the materializing full
         # scan), so the eager form's dedicated job was pure constant
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     # 256-row bucket stats: raw and target counts in ONE aggregate
     bkstats = per.groupBy("bk").agg(
@@ -293,7 +295,7 @@ def text_bm25_topk(spark, sf_dir):
         # lazy: every consumer lives inside the one final action (the
         # small-side broadcast build is the materializing full scan), so
         # the eager form's dedicated job was pure scheduler constant
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     stats = d.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -437,7 +439,7 @@ def mixture_weight_frame(docs, budget_frac: float = 0.5):
         # one row per SOURCE — checkpointed so its two consumers (the
         # budget total and the final select) tokenize the corpus once;
         # lazy: the total's broadcast build is the materializing scan
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     tot = per.agg(F.sum("n_tokens").alias("t"), F.count("*").alias("k"))
     # zero-token sources take rate 1.0 explicitly — dividing would raise
@@ -577,7 +579,7 @@ def tokenizer_oov_rate(spark, sf_dir):
         # lazy: every consumer lives inside the one final action (the
         # small-side broadcast build is the materializing full scan), so
         # the eager form's dedicated job was pure scheduler constant
-        .localCheckpoint(eager=False)
+        .transform(cut_lineage, eager=False)
     )
     wc = per.groupBy("w").agg(F.sum("cnt").alias("c"))
     vocab = (
@@ -649,7 +651,7 @@ def text_minhash_containment(spark, sf_dir):
         .select("doc_id", F.expr(sh).alias("shs"))
         # bounded candidate set, consumed as BOTH join sides —
         # materialize once instead of shingling twice
-        .localCheckpoint(eager=True)
+        .transform(cut_lineage, eager=True)
     )
     a, b = sets.alias("a"), sets.alias("b")
     inter = F.size(F.array_intersect(F.col("a.shs"), F.col("b.shs"))).cast(
@@ -710,15 +712,7 @@ def hudi_export_mor_roundtrip(spark, sf_dir):
     from ..runtime.snapshots import SnapshotTable
     from ..sources.hudi_meta import export_snapshot_to_hudi_mor, read_hudi
 
-    seed = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 800)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    seed = _orders_cents(spark, sf_dir, 800)
     root = tempfile.mkdtemp(prefix="hudi_mor_exp_") + "/tbl"
     t = SnapshotTable(spark, root)
     t.create(seed)
@@ -748,7 +742,8 @@ def hudi_export_mor_roundtrip(spark, sf_dir):
         state(1, rep1["instant"])
         .unionByName(state(2, rep2["instant"]))
         .orderBy("snap")
-        .localCheckpoint(eager=True)
+        # materialize the result: later actions skip the temp table's files
+        .transform(cut_lineage, eager=True)
     )
 
 
@@ -795,15 +790,7 @@ def hudi_mor_kryo_delete_read(spark, sf_dir):
 
     t = _tempfile.mkdtemp(prefix="hudi_kryo_q_") + "/tbl"
     _os.makedirs(t)
-    seed = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 500)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    seed = _orders_cents(spark, sf_dir, 500)
 
     base = seed.selectExpr(
         "'001' as _hoodie_commit_time",
@@ -854,7 +841,8 @@ def hudi_mor_kryo_delete_read(spark, sf_dir):
     return (
         outs[0].unionByName(outs[1]).unionByName(outs[2])
         .orderBy("snap")
-        .localCheckpoint(eager=True)
+        # materialize the result: later actions skip the temp table's files
+        .transform(cut_lineage, eager=True)
     )
 
 
@@ -903,15 +891,7 @@ def hudi_mor_parquet_block_read(spark, sf_dir):
 
     t = _tempfile.mkdtemp(prefix="hudi_pqblk_q_") + "/tbl"
     _os.makedirs(t)
-    seed = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 400)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    seed = _orders_cents(spark, sf_dir, 400)
 
     base = seed.selectExpr(
         "'001' as _hoodie_commit_time",
@@ -985,7 +965,8 @@ def hudi_mor_parquet_block_read(spark, sf_dir):
     return (
         outs[0].unionByName(outs[1]).unionByName(outs[2])
         .orderBy("snap")
-        .localCheckpoint(eager=True)
+        # materialize the result: later actions skip the temp table's files
+        .transform(cut_lineage, eager=True)
     )
 
 
@@ -1054,15 +1035,7 @@ def hudi_cdc_block_read(spark, sf_dir):
 
     t = _tempfile.mkdtemp(prefix="hudi_cdc_q_") + "/tbl"
     _os.makedirs(t)
-    seed = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 300)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    seed = _orders_cents(spark, sf_dir, 300)
 
     base = seed.selectExpr(
         "'001' as _hoodie_commit_time",
@@ -1198,9 +1171,8 @@ def hudi_cdc_block_read(spark, sf_dir):
         F.lit(None).cast("bigint").alias("sum_before"),
         F.sum("cents").cast("bigint").alias("sum_after"),
     ).select(F.lit("snapshot").alias("kind"), "n", "sum_before", "sum_after")
-    return (
-        cdc_agg.unionByName(snap).orderBy("kind").localCheckpoint(eager=True)
-    )
+    # materialize the result: later actions skip the temp table's files
+    return cut_lineage(cdc_agg.unionByName(snap).orderBy("kind"), eager=True)
 
 
 @query(
@@ -1240,15 +1212,8 @@ def iceberg_export_dv_partitioned(spark, sf_dir):
     from ..runtime.snapshots import SnapshotTable
     from ..sources.iceberg_meta import export_snapshot_to_iceberg, read_iceberg
 
-    seed = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 600)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-            F.col("o_orderstatus").alias("part"),
-        )
-        .localCheckpoint(eager=True)
+    seed = _orders_cents(
+        spark, sf_dir, 600, F.col("o_orderstatus").alias("part")
     )
     root = tempfile.mkdtemp(prefix="ice_dvp_") + "/tbl"
     t = SnapshotTable(spark, root)
@@ -1264,7 +1229,8 @@ def iceberg_export_dv_partitioned(spark, sf_dir):
             F.sum("cents").cast("bigint").alias("sum_cents"),
         )
         .orderBy("part")
-        .localCheckpoint(eager=True)
+        # materialize the result: later actions skip the temp table's files
+        .transform(cut_lineage, eager=True)
     )
 
 
@@ -1315,15 +1281,7 @@ def iceberg_v3_dv_read(spark, sf_dir):
     t = _tempfile.mkdtemp(prefix="ice_v3dv_q_") + "/tbl"
     _os.makedirs(_os.path.join(t, "data"))
     _os.makedirs(_os.path.join(t, "metadata"))
-    seed = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 400)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    seed = _orders_cents(spark, sf_dir, 400)
 
     def data_file(name, df):
         """One sorted single-file parquet; returns (path, sorted keys)."""
@@ -1453,7 +1411,8 @@ def iceberg_v3_dv_read(spark, sf_dir):
             F.sum("cents").cast("bigint").alias("sum_cents"),
         )
         .orderBy("bucket")
-        .localCheckpoint(eager=True)
+        # materialize the result: later actions skip the temp table's files
+        .transform(cut_lineage, eager=True)
     )
 
 
@@ -1513,15 +1472,7 @@ def hudi_hfile_block_read(spark, sf_dir):
 
     t = _tempfile.mkdtemp(prefix="hudi_hfblk_q_") + "/tbl"
     _os.makedirs(t)
-    seed = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 350)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    seed = _orders_cents(spark, sf_dir, 350)
 
     base = seed.selectExpr(
         "'001' as _hoodie_commit_time",
@@ -1601,7 +1552,8 @@ def hudi_hfile_block_read(spark, sf_dir):
     return (
         outs[0].unionByName(outs[1]).unionByName(outs[2])
         .orderBy("snap")
-        .localCheckpoint(eager=True)
+        # materialize the result: later actions skip the temp table's files
+        .transform(cut_lineage, eager=True)
     )
 
 
@@ -1646,15 +1598,11 @@ def iceberg_partition_evolution_read(spark, sf_dir):
 
     t = _tempfile.mkdtemp(prefix="ice_pe_q_") + "/tbl"
     _os.makedirs(t + "/metadata")
-    seed = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderkey") <= 240)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
-            F.concat(F.lit("p"), (F.col("o_orderkey") % 3).cast("string")).alias("pt"),
-        )
-        .localCheckpoint(eager=True)
+    seed = _orders_cents(
+        spark,
+        sf_dir,
+        240,
+        F.concat(F.lit("p"), (F.col("o_orderkey") % 3).cast("string")).alias("pt"),
     )
 
     def land(df, rel):
@@ -1782,7 +1730,8 @@ def iceberg_partition_evolution_read(spark, sf_dir):
             F.sum("cents").cast("bigint").alias("sum_cents"),
         )
         .orderBy("pt")
-        .localCheckpoint(eager=True)
+        # materialize the result: later actions skip the temp table's files
+        .transform(cut_lineage, eager=True)
     )
 
 
@@ -1901,5 +1850,6 @@ def hudi_metadata_table_read(spark, sf_dir):
             ).cast("bigint").alias("n_deleted"),
         )
         .orderBy("key")
-        .localCheckpoint(eager=True)
+        # materialize the result: later actions skip the temp table's files
+        .transform(cut_lineage, eager=True)
     )

@@ -9,7 +9,7 @@ Re-expresses the reference's Spark backend behaviors
   Hive-workaround the reference carries for Spark 2 (spark.py:267-293)
 - auto table creation as parquet CTAS (spark.py:158-185)
 - column alignment + schema verification (spark.py:187-220, 271-279)
-- read-write-same-table lineage break via localCheckpoint (spark.py:295-309)
+- read-write-same-table lineage cut via ``cut_lineage`` (spark.py:295-309)
 - temp-view lifecycle cleanup (spark.py:116-121, 324-328)
 
 All data movement is declarative SQL/DataFrame — Catalyst owns the physical
@@ -24,6 +24,8 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.iterate import cut_lineage
 
 
 @dataclass
@@ -419,7 +421,7 @@ class SparkBackend:
             aligned.write.insertInto(table.name, overwrite=overwrite)
         except Exception as e:  # read-write same table: break lineage, retry
             if "Cannot overwrite" in str(e) or "is also being read" in str(e):
-                aligned.localCheckpoint(eager=True).write.insertInto(
+                cut_lineage(aligned, eager=True).write.insertInto(
                     table.name, overwrite=overwrite
                 )
             else:
@@ -447,8 +449,8 @@ class SparkBackend:
         precombine: str | None = None,
     ) -> DataFrame:
         """Build the merged frame for a keyed SCD1 upsert and eagerly
-        localCheckpoint it (the target is both read and overwritten — the
-        checkpoint breaks that lineage once, before the write starts).
+        cut its lineage (the target is both read and overwritten — the
+        cut breaks that lineage once, before the write starts).
 
         Partition-pruned copy-on-write: only partitions TOUCHED by the batch
         are read back and rewritten — touched = partitions present in the
@@ -501,7 +503,7 @@ class SparkBackend:
             key_counts = (
                 incoming.groupBy(*keys)
                 .agg(F.count(F.lit(1)).alias("__kn"))
-                .localCheckpoint(eager=False)
+                .transform(cut_lineage, eager=False)
             )
             n_dup = key_counts.where(F.col("__kn") > 1).count()
             if n_dup:
@@ -514,7 +516,8 @@ class SparkBackend:
             target, incoming, inc_keys, keys, table.partition_cols()
         )
         kept = scoped.join(inc_keys, keys, "left_anti")
-        return kept.unionByName(incoming).localCheckpoint(eager=True)
+        # the target is read here and then overwritten by the caller
+        return cut_lineage(kept.unionByName(incoming), eager=True)
 
     @staticmethod
     def _scope_touched_partitions(
@@ -562,7 +565,7 @@ class SparkBackend:
 
             zdf = hilbert_value(aligned, zorder_cols).withColumnRenamed(
                 "__hvalue", "__zvalue"
-            ).localCheckpoint(eager=True)
+            )
         elif curve not in ("zorder", "hilbert"):
             raise ValueError(f"unknown layout curve {curve!r}")
         else:
@@ -570,7 +573,10 @@ class SparkBackend:
             # morton handles any dimension count
             from ..operators.zorder import zorder_value
 
-            zdf = zorder_value(aligned, zorder_cols).localCheckpoint(eager=True)
+            zdf = zorder_value(aligned, zorder_cols)
+        # the range-bound sampling job and the write both read the curve
+        # values: compute them once
+        zdf = cut_lineage(zdf, eager=True)
         part_cols = table.partition_cols()
         # floor the range-partition count: with very few z-ranges a single
         # range regularly crosses a Morton quadrant boundary and its
@@ -747,7 +753,7 @@ class SparkBackend:
             hist_rows.unionByName(stay)
             .unionByName(closed)
             .unionByName(inserts)
-            .localCheckpoint(eager=True)
+            .transform(cut_lineage, eager=True)  # target is read and overwritten
         )
 
     # ------------------------------------------------------------ compaction
@@ -808,7 +814,8 @@ class SparkBackend:
                     "files_after": total["files"],
                 }
             n_out = max(1, -(-total["bytes"] // target_bytes))
-            compacted = df.repartition(n_out).localCheckpoint(eager=True)
+            # target is read and overwritten
+            compacted = cut_lineage(df.repartition(n_out), eager=True)
             compacted.write.insertInto(table_name, overwrite=True)
             spark.sql(f"REFRESH TABLE {table_name}")
             return {
@@ -842,7 +849,7 @@ class SparkBackend:
         scoped = (
             df.alias("t")
             .join(F.broadcast(sel), cond, "left_semi")
-            .localCheckpoint(eager=True)  # target is read and overwritten
+            .transform(cut_lineage, eager=True)  # target is read and overwritten
         )
         advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
         prev = spark.conf.get(advisory, None)
@@ -877,7 +884,8 @@ class SparkBackend:
         meta = TableMeta.parse(
             table_name, [Partition(field=c) for c in part_cols]
         )
-        df = self.spark.table(table_name).localCheckpoint(eager=True)
+        # target is read and overwritten
+        df = cut_lineage(self.spark.table(table_name), eager=True)
         n = df.count()
         clustered = self._zorder_for_insert(df, meta, zorder_cols, curve=curve)
         clustered.write.insertInto(table_name, overwrite=True)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..core.config import EtlConfig
 from ..core.context import FuncRunner, TemplatesContext, VarsContext
 from ..core.step import IncludeResolver, Step, parse_steps
+from ..operators.iterate import cut_lineage
 from .backend import Partition, SparkBackend, TableMeta
 from .report import RunReport, StepStatus
 
@@ -562,9 +563,9 @@ class SqlProcessor:
             from pyspark.sql import functions as F
 
             flag = F.coalesce(F.expr(str(q_pred)), F.lit(True))
-            # checkpoint once so the good/bad split sees one consistent
+            # cut once so the good/bad split sees one consistent
             # evaluation of the step query
-            df = df.localCheckpoint(eager=True)
+            df = cut_lineage(df, eager=True)
             bad = df.where(flag)
             q_table = TableMeta.parse(str(q_dst), [])
             self.backend.save_table(

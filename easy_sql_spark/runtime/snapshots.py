@@ -54,6 +54,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..operators.iterate import cut_lineage
+
 _MANIFEST_FMT = "v%08d.json"
 _RETRIES = 5
 # vacuum parks legacy per-stream batch state here before deleting the
@@ -1241,10 +1243,10 @@ class SnapshotTable:
                 .where(F.col("__pc_rn") == 1)
                 .drop("__pc_rn")
             )
-            source = source.localCheckpoint(eager=True)
-            src_keys = (
-                source.select(*keys).distinct().localCheckpoint(eager=True)
-            )
+            # the deduplicated source and its key set have several
+            # consumers, and the key count picks the join strategy
+            source = cut_lineage(source, eager=True)
+            src_keys = cut_lineage(source.select(*keys).distinct(), eager=True)
             n_keys = src_keys.count()
             key_lits = None
         else:
@@ -1255,11 +1257,11 @@ class SnapshotTable:
             # AND a count (5 scheduler jobs of guards before any real
             # work).  Lazy checkpoints materialize inside the one
             # full-scan stats aggregate.
-            source = source.localCheckpoint(eager=False)
+            source = cut_lineage(source, eager=False)
             key_counts = (
                 source.groupBy(*keys)
                 .agg(F.count(F.lit(1)).alias("__kn"))
-                .localCheckpoint(eager=False)
+                .transform(cut_lineage, eager=False)
             )
             key_lits = None
             if len(keys) == 1:
@@ -1395,7 +1397,7 @@ class SnapshotTable:
                 .where(F.col(precombine) > F.col("__src_pc"))
                 .select(*keys)
                 .distinct()
-                .localCheckpoint(eager=True)
+                .transform(cut_lineage, eager=True)  # two consumers below
             )
             stale_side = (
                 F.broadcast(stale_keys) if n_keys <= 5_000_000 else stale_keys
@@ -1980,7 +1982,7 @@ class SnapshotTable:
         dv_df = matched.select(
             F.col("__snap_fp").alias("file_path"),
             F.col("__snap_ri").alias("pos"),
-        ).localCheckpoint(eager=True)
+        ).transform(cut_lineage, eager=True)  # counted, then written
         n_deleted = dv_df.count()
         if n_deleted == 0:
             # nothing matched: an empty-target DV entry would persist

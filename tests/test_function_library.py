@@ -142,6 +142,8 @@ def test_data_profiling_report(spark, tmp_path):
     the ydata-shaped JSON keys."""
     import json
 
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     spark.sql(
         "select id, cast(id as decimal(10,2)) as amount, "
         "array(id, id+1) as arr, "
@@ -154,6 +156,8 @@ def test_data_profiling_report(spark, tmp_path):
         fn("profile_t", "id < 50", str(tmp_path), "1000", "true", "html,json")
         is True
     )
+    # the sampled frame is not left registered in the session's cache
+    assert cache_manager.isEmpty()
     with open(tmp_path / "profile_t.json") as f:
         rep = json.load(f)
     assert set(rep) >= {"analysis", "table", "variables", "correlations"}

@@ -523,35 +523,42 @@ def test_semantic_dedup_pairwise_kernel_exact(spark):
     assert got == want and len(got) > 0
 
 
-def test_iter_checkpoint_reliable_mode(spark, tmp_path):
-    """iter_checkpoint (operators/iterate.py) picks RELIABLE
+def test_cut_lineage_reliable_mode(spark, tmp_path):
+    """cut_lineage (operators/iterate.py) picks RELIABLE
     DataFrame.checkpoint when the session has a checkpoint dir (the
-    cluster-safe mode — executor loss cannot kill an iteration) and
+    cluster-safe mode — executor loss cannot kill a job past a cut) and
     localCheckpoint otherwise; both truncate lineage and preserve
-    content.  Iterative operators must keep working in reliable mode."""
+    content.  Iterative operators and the step language's write path
+    must keep working in reliable mode."""
     from easy_sql_spark.operators.components import connected_components_star
-    from easy_sql_spark.operators.iterate import iter_checkpoint
+    from easy_sql_spark.operators.iterate import cut_lineage
+    from easy_sql_spark.runtime.processor import SqlProcessor
 
     import os
 
-    df = spark.createDataFrame([(i,) for i in range(10)], "x int")
-    out = iter_checkpoint(df.selectExpr("x * 2 as y"))
-    assert {r.y for r in out.collect()} == {i * 2 for i in range(10)}
-
-    sc = spark.sparkContext
-    assert not sc.getCheckpointDir()
     ckpt = str(tmp_path / "ckpt")
-    sc.setCheckpointDir(ckpt)
-    try:
-        rel = iter_checkpoint(df.selectExpr("x + 1 as y"))
-        assert {r.y for r in rel.collect()} == {i + 1 for i in range(10)}
-        # reliable mode actually wrote checkpoint data to the dir
-        found = [
+
+    def ckpt_files():
+        return [
             os.path.join(cur, n)
             for cur, _d, files in os.walk(ckpt)
             for n in files
         ]
-        assert found, "no reliable checkpoint files written"
+
+    df = spark.createDataFrame([(i,) for i in range(10)], "x int")
+    out = cut_lineage(df.selectExpr("x * 2 as y"), eager=True)
+    assert {r.y for r in out.collect()} == {i * 2 for i in range(10)}
+
+    sc = spark.sparkContext
+    assert not sc.getCheckpointDir()
+    sc.setCheckpointDir(ckpt)
+    try:
+        rel = cut_lineage(df.selectExpr("x + 1 as y"), eager=True)
+        assert {r.y for r in rel.collect()} == {i + 1 for i in range(10)}
+        lazy = cut_lineage(df.selectExpr("x + 2 as y"), eager=False)
+        assert {r.y for r in lazy.collect()} == {i + 2 for i in range(10)}
+        # reliable mode actually wrote checkpoint data to the dir
+        assert ckpt_files(), "no reliable checkpoint files written"
         # an iterative operator end-to-end in reliable mode
         edges = spark.createDataFrame(
             [(1, 2), (2, 3), (10, 11)], "u long, v long"
@@ -561,6 +568,27 @@ def test_iter_checkpoint_reliable_mode(spark, tmp_path):
             for r in connected_components_star(edges).collect()
         }
         assert comp == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+
+        # a non-iterative cut: the upsert output step's merged frame
+        setup = """-- prepare-sql: drop database if exists ckptu cascade
+-- prepare-sql: create database ckptu
+-- prepare-sql: create table ckptu.t (id int, val string) using parquet
+
+-- target=output.ckptu.t
+select * from (values (1, 'a'), (2, 'b')) as v(id, val)
+"""
+        SqlProcessor(spark, setup, logger=lambda m: None).run()
+        before = set(ckpt_files())
+        merge = """-- target=variables
+select 'upsert' as __save_mode__, 'id' as __merge_keys__
+
+-- target=output.ckptu.t
+select * from (values (2, 'B'), (3, 'c')) as v(id, val)
+"""
+        SqlProcessor(spark, merge, logger=lambda m: None).run()
+        assert set(ckpt_files()) - before, "upsert cut not reliable"
+        rows = {(r.id, r.val) for r in spark.table("ckptu.t").collect()}
+        assert rows == {(1, "a"), (2, "B"), (3, "c")}
     finally:
         # tests share one session: truly UNSET so later suites stay in
         # localCheckpoint mode (no public unset API; scala setter)
@@ -568,6 +596,7 @@ def test_iter_checkpoint_reliable_mode(spark, tmp_path):
             sc._jvm.scala.Option.apply(None)
         )
         assert not sc.getCheckpointDir()
+        spark.sql("drop database if exists ckptu cascade")
 
 
 def test_local_non_min_ids_matches_union_find(spark):

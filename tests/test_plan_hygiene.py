@@ -122,3 +122,29 @@ def test_no_driver_collect_in_query_or_operator_sources():
                     if any(b in code for b in banned):
                         hits.append(f"{sub}/{fname}:{no}: {line.strip()}")
     assert not hits, "driver-side access in declarative modules:\n" + "\n".join(hits)
+
+
+def test_every_lineage_cut_goes_through_cut_lineage():
+    """One materialization policy: every lineage cut in the package calls
+    ``operators.iterate.cut_lineage``, so setting a checkpoint dir makes
+    all of them reliable.  A direct ``localCheckpoint(`` / ``.checkpoint(``
+    anywhere else would silently stay executor-local on a cluster."""
+    import os
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "easy_sql_spark",
+    )
+    helper = os.path.join(root, "operators", "iterate.py")
+    hits = []
+    for cur, _dirs, files in os.walk(root):
+        for fname in sorted(files):
+            path = os.path.join(cur, fname)
+            if not fname.endswith(".py") or path == helper:
+                continue
+            with open(path, encoding="utf-8") as f:
+                for no, line in enumerate(f, 1):
+                    if "localCheckpoint(" in line or ".checkpoint(" in line:
+                        rel = os.path.relpath(path, root)
+                        hits.append(f"{rel}:{no}: {line.strip()}")
+    assert not hits, "lineage cuts outside cut_lineage:\n" + "\n".join(hits)

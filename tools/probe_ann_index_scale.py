@@ -40,6 +40,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import statistics
 import sys
 import tempfile
@@ -95,29 +96,33 @@ def main() -> None:
             # (see module docstring) and the lloyd build is O(n x K)
             regimes.append(("scaled", scaled_k))
         for regime, k in regimes:
-            idx = IVFIndex(spark, tempfile.mkdtemp(prefix="ivf_probe_"))
-            t0 = time.time()
-            idx.create(vecs, k=k, iters=2)
-            build_s = time.time() - t0
-
-            search_s = []
-            for _ in range(RUNS):
+            root = tempfile.mkdtemp(prefix="ivf_probe_")
+            try:
+                idx = IVFIndex(spark, root)
                 t0 = time.time()
-                idx.search(queries, topk=10, nprobe=NPROBE) \
-                    .write.format("noop").mode("overwrite").save()
-                search_s.append(time.time() - t0)
-            t0 = time.time()
-            idx.ingest(batch, batch_id=2)
-            ingest_s = time.time() - t0
-            print(json.dumps({
-                "probe": "ivf_search_fixed_queries",
-                "sf_dir": sf_dir, "n_vectors": n, "regime": regime,
-                "k": k, "nprobe": NPROBE, "n_queries": QUERIES_N,
-                "build_s": round(build_s, 2),
-                "search_median_s": round(statistics.median(search_s), 2),
-                "search_min_s": round(min(search_s), 2),
-                "ingest_1k_s": round(ingest_s, 2),
-            }), flush=True)
+                idx.create(vecs, k=k, iters=2)
+                build_s = time.time() - t0
+
+                search_s = []
+                for _ in range(RUNS):
+                    t0 = time.time()
+                    idx.search(queries, topk=10, nprobe=NPROBE) \
+                        .write.format("noop").mode("overwrite").save()
+                    search_s.append(time.time() - t0)
+                t0 = time.time()
+                idx.ingest(batch, batch_id=2)
+                ingest_s = time.time() - t0
+                print(json.dumps({
+                    "probe": "ivf_search_fixed_queries",
+                    "sf_dir": sf_dir, "n_vectors": n, "regime": regime,
+                    "k": k, "nprobe": NPROBE, "n_queries": QUERIES_N,
+                    "build_s": round(build_s, 2),
+                    "search_median_s": round(statistics.median(search_s), 2),
+                    "search_min_s": round(min(search_s), 2),
+                    "ingest_1k_s": round(ingest_s, 2),
+                }), flush=True)
+            finally:
+                shutil.rmtree(root, ignore_errors=True)
 
         # SemDeDup production path: K ∝ n (paper sizing)
         sd_k = max(8, n // 500)
