@@ -160,10 +160,10 @@ def control_timings(spark, sf_dir) -> dict[str, float]:
     - ``ctl_scan_agg``: a pinned parquet scan + global agg over
       lineitem — sensitive to IO + JVM scheduling pressure.
 
-    Reading a BENCH_r{N}: if the controls at start/end sit inside their
-    BENCH_LOCAL.md bands, query movement is code; if the controls are
-    inflated too, the run was load-contaminated and per-query deltas
-    are environmental.
+    Reading a BENCH_r{N}: if the controls at start/end sit near those
+    of earlier artifacts from the same host, query movement is code; if
+    the controls are inflated too, the run was load-contaminated and
+    per-query deltas are environmental.
     """
     import time as _t
 

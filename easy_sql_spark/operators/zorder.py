@@ -59,7 +59,7 @@ def _bucket_expr(col: str, boundaries: list[float]) -> F.Column:
 #: the boundary probe samples large inputs down to roughly this many
 #: file bytes before sketching (fraction clamped to >= 1%): GK-sketch
 #: per-row updates dominate the probe (measured 1.04s full vs 0.33s at
-#: a 10% sample over sf0.1 lineitem, zero-steal window), and a sampled
+#: a 10% sample over sf0.1 lineitem, host steal unknown), and a sampled
 #: quantile's rank error (~1/sqrt(sampled_rows): 2 MB of parquet is
 #: >= ~20k rows -> ~0.7%) is the same ballpark as the sketch's own
 #: accuracy-200 error (0.5%) — boundaries only need to be roughly

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.iterate import cut_lineage
+from .snapshots import latest_per_key
 
 
 @dataclass
@@ -62,6 +63,14 @@ class TableMeta:
 
     def static_partitions(self) -> list[Partition]:
         return [p for p in self.partitions if not p.is_dynamic]
+
+    def with_static_partitions(self, df: DataFrame) -> DataFrame:
+        """``df`` plus a literal column for each static partition value
+        it lacks (reference spark.py:269-284)."""
+        for p in self.static_partitions():
+            if p.field not in df.columns:
+                df = df.withColumn(p.field, F.lit(p.value))
+        return df
 
     def partition_cols(self) -> list[str]:
         return [p.field for p in self.partitions]
@@ -365,9 +374,7 @@ class SparkBackend:
                     "(the natural/business key, e.g. id or id|region)"
                 )
             df = self._augment_scd2(df, scd2 or {})
-        for p in table.static_partitions():
-            if p.field not in df.columns:
-                df = df.withColumn(p.field, F.lit(p.value))
+        df = table.with_static_partitions(df)
 
         if not self.table_exists(table):
             if not create_table:
@@ -378,9 +385,6 @@ class SparkBackend:
             self.create_table_like_query(df, table)
         else:
             self.refresh_table_partitions(table)
-            for p in table.static_partitions():
-                if p.field not in df.columns:
-                    df = df.withColumn(p.field, F.lit(p.value))
             if merge_schema:
                 self.evolve_schema(df, table)
         self.verify_schema(df, table)
@@ -478,19 +482,7 @@ class SparkBackend:
         keys = list(merge_keys)
 
         if precombine:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*keys).orderBy(
-                F.col(precombine).desc(),
-                F.md5(F.concat_ws("\x00", *[
-                    F.col(c).cast("string") for c in incoming.columns
-                ])),
-            )
-            incoming = (
-                incoming.withColumn("__pc_rn", F.row_number().over(w))
-                .where(F.col("__pc_rn") == 1)
-                .drop("__pc_rn")
-            )
+            incoming = latest_per_key(incoming, keys, precombine)
             inc_keys = incoming.select(*keys).distinct()
         else:
             # ONE key-grouped pass serves both the duplicate guard and
@@ -652,8 +644,6 @@ class SparkBackend:
         ts order per key (the standard SCD2 loader contract); out-of-order
         history requires a rebuild, not a merge.  Same partition-pruned
         copy-on-write scoping as the SCD1 upsert."""
-        from pyspark.sql import Window
-
         _, start, end, cur = self._scd2_cols(scd2)
         target = self.spark.table(table.name)
         meta = {start, end, cur}
@@ -675,19 +665,7 @@ class SparkBackend:
         incoming = df.select(*target.columns)
 
         # collapse intra-batch duplicates to the latest version per key
-        w = Window.partitionBy(*keys).orderBy(
-            F.col(start).desc(),
-            F.md5(
-                F.concat_ws(
-                    "\x00", *[F.col(c).cast("string") for c in incoming.columns]
-                )
-            ),
-        )
-        incoming = (
-            incoming.withColumn("__scd2_rn", F.row_number().over(w))
-            .where(F.col("__scd2_rn") == 1)
-            .drop("__scd2_rn")
-        )
+        incoming = latest_per_key(incoming, keys, start)
 
         attr_cols = [c for c in target.columns if c not in meta and c not in keys]
         part_cols = table.partition_cols()

@@ -383,12 +383,7 @@ class SqlProcessor:
                 f"CREATE OR REPLACE TEMPORARY VIEW {name} AS\n{sql}"
             )
         elif t == "output":
-            mode = str(
-                self.vars_context.get_var(
-                    "__save_mode__",
-                    self.vars_context.get_var("save_mode", "overwrite"),
-                )
-            ).lower()
+            mode = self._save_mode().lower()
             verb = {
                 "append": "INSERT INTO",
                 "upsert": "MERGE INTO",
@@ -397,6 +392,22 @@ class SqlProcessor:
             self.sql_collector.append(f"{verb} {name}\n{sql}")
         else:  # variables/list_variables/log/check: the bare query
             self.sql_collector.append(f"-- {t}.{name or ''}\n{sql}")
+
+    def _save_mode(self) -> str:
+        """``__save_mode__``, else the reference's bare ``save_mode``."""
+        return str(
+            self.vars_context.get_var(
+                "__save_mode__", self.vars_context.get_var("save_mode", "overwrite")
+            )
+        )
+
+    def _pipe_list(self, name: str) -> list[str] | None:
+        """A ``|``-separated list variable, items stripped and blanks
+        dropped; None when the variable is unset or empty."""
+        value = self.vars_context.get_var(name)
+        if not value:
+            return None
+        return [c.strip() for c in str(value).split("|") if c.strip()]
 
     @staticmethod
     def _stringify(v: Any) -> Any:
@@ -474,11 +485,7 @@ class SqlProcessor:
                     Partition(field=m.group(1), value=value or None)
                 )
         table = TableMeta.parse(step.target_name, partitions)
-        save_mode = str(
-            self.vars_context.get_var(
-                "__save_mode__", self.vars_context.get_var("save_mode", "overwrite")
-            )
-        )
+        save_mode = self._save_mode()
         create_table = self.vars_context.is_truthy(
             "__create_output_table__"
         ) or self.vars_context.is_truthy("__create_hive_table__")
@@ -501,38 +508,24 @@ class SqlProcessor:
 
         # scale extension: __bucket_by__ / __bucket_count__ write the output
         # as a bucketed+sorted table (shuffle-free joins on the bucket key)
-        bucket_by = self.vars_context.get_var("__bucket_by__")
-        if bucket_by and not dry_run:
-            from pyspark.sql import functions as F
-
+        bucket_by = self._pipe_list("__bucket_by__")
+        if bucket_by is not None and not dry_run:
             # static partition values must land in the written table here
             # too, not only in save_table's path
-            for p in table.static_partitions():
-                if p.field not in df.columns:
-                    df = df.withColumn(p.field, F.lit(p.value))
-            cols = [c.strip() for c in str(bucket_by).split("|") if c.strip()]
+            df = table.with_static_partitions(df)
             n = int(self.vars_context.get_var("__bucket_count__", "8"))
-            self.backend.create_bucketed_table(df, table, cols, n, save_mode)
+            self.backend.create_bucketed_table(df, table, bucket_by, n, save_mode)
             return
 
         if dry_run:
-            from pyspark.sql import functions as F
-
-            for p in table.static_partitions():
-                if p.field not in df.columns:
-                    df = df.withColumn(p.field, F.lit(p.value))
+            df = table.with_static_partitions(df)
             view = f"{table.db}_{table.table}_{uuid.uuid4().hex}_output"
             self.backend.create_temp_view(df, view)
             self._output_views[table.name] = view
             return
         # keyed upsert/MERGE (reference CDC/Hudi semantics): |-separated
         # merge keys, optional precombine column for intra-batch dedup
-        merge_keys_var = self.vars_context.get_var("__merge_keys__")
-        merge_keys = (
-            [c.strip() for c in str(merge_keys_var).split("|") if c.strip()]
-            if merge_keys_var
-            else None
-        )
+        merge_keys = self._pipe_list("__merge_keys__")
         precombine = self.vars_context.get_var("__upsert_precombine__")
         # SCD2 history-keeping merge: __scd2_ts__ names the effective-ts
         # column; metadata column names are overridable
@@ -546,12 +539,7 @@ class SqlProcessor:
             }
         # parquet bloom filters on listed columns: `col` or `col:ndv`,
         # |-separated (point-lookup pushdown for unsorted key columns)
-        bloom_var = self.vars_context.get_var("__bloom_filter_cols__")
-        bloom_cols = (
-            [c.strip() for c in str(bloom_var).split("|") if c.strip()]
-            if bloom_var
-            else None
-        )
+        bloom_cols = self._pipe_list("__bloom_filter_cols__")
         # row-level quarantine: rows matching __quarantine_when__ divert
         # (append) into __quarantine_to__ instead of failing the batch or
         # polluting the target — the write-clean/divert-bad DQ pattern.
@@ -573,12 +561,7 @@ class SqlProcessor:
             )
             df = df.where(~flag)
 
-        zorder_var = self.vars_context.get_var("__zorder_by__")
-        zorder_cols = (
-            [c.strip() for c in str(zorder_var).split("|") if c.strip()]
-            if zorder_var
-            else None
-        )
+        zorder_cols = self._pipe_list("__zorder_by__")
         layout_curve = str(
             self.vars_context.get_var("__layout_curve__") or "zorder"
         )

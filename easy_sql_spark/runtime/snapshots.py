@@ -50,11 +50,29 @@ from __future__ import annotations
 import json
 import uuid as _uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..operators.iterate import cut_lineage
+
+
+def latest_per_key(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
+    """One row per ``keys``: the row with the greatest ``order_col``,
+    ties broken by the smallest md5 of the whole row (every column cast
+    to string, NUL-joined), so the winner does not depend on input
+    order.  The precombine of upserts and MERGE, the SCD2 intra-batch
+    collapse and the CDC sink's first commit all keep this row."""
+    w = Window.partitionBy(*keys).orderBy(
+        F.col(order_col).desc(),
+        F.md5(F.concat_ws("\x00", *[F.col(c).cast("string") for c in df.columns])),
+    )
+    return (
+        df.withColumn("__latest_rn", F.row_number().over(w))
+        .where(F.col("__latest_rn") == 1)
+        .drop("__latest_rn")
+    )
+
 
 _MANIFEST_FMT = "v%08d.json"
 _RETRIES = 5
@@ -1230,19 +1248,7 @@ class SnapshotTable:
         self._check_schema_evolution(parent0, payload)
 
         if precombine:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*keys).orderBy(
-                F.col(precombine).desc(),
-                F.md5(F.concat_ws("\x00", *[
-                    F.col(c).cast("string") for c in source.columns
-                ])),
-            )
-            source = (
-                source.withColumn("__pc_rn", F.row_number().over(w))
-                .where(F.col("__pc_rn") == 1)
-                .drop("__pc_rn")
-            )
+            source = latest_per_key(source, keys, precombine)
             # the deduplicated source and its key set have several
             # consumers, and the key count picks the join strategy
             source = cut_lineage(source, eager=True)

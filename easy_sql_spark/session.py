@@ -42,6 +42,10 @@ SESSION_DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+    # reliable checkpoints (cut_lineage with a checkpoint dir) are
+    # deleted once their frame is garbage-collected; off by default, so
+    # each cut would otherwise stay on the distributed FS for good
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
 }
 
 # Conf keys that are safe to set on a live session.

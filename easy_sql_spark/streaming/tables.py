@@ -220,7 +220,7 @@ class StreamingTables:
         ``partition_by`` (first commit only)."""
         from pyspark.sql import functions as F
 
-        from ..runtime.snapshots import SnapshotTable
+        from ..runtime.snapshots import SnapshotTable, latest_per_key
 
         if not sink.path:
             raise ValueError(f"snapshot_cdc sink {sink.name} needs `path`")
@@ -246,15 +246,12 @@ class StreamingTables:
                 # first-ever commit: seed from the batch's net upserts
                 # (latest change per key, deletes dropped), recording the
                 # batch id in the SAME manifest — a restart before the
-                # stream checkpoint lands must not re-apply batch 0
-                from pyspark.sql import Window
-
-                w = Window.partitionBy(*keys).orderBy(F.col(precombine).desc())
+                # stream checkpoint lands must not re-apply batch 0.  The
+                # winner per key is the one apply_changes would pick.
                 seed = (
-                    batch_df.withColumn("__cdc_rn", F.row_number().over(w))
-                    .where(F.col("__cdc_rn") == 1)
+                    latest_per_key(batch_df, keys, precombine)
                     .where(F.col("__op") != "delete")
-                    .drop("__cdc_rn", "__op")
+                    .drop("__op")
                 )
                 table.overwrite(seed, partition_by=pby, extra=extra)
                 return

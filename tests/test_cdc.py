@@ -203,6 +203,40 @@ def test_snapshot_cdc_sink_end_to_end(spark):
     assert t.latest_version() == v_before
 
 
+def test_snapshot_cdc_first_commit_breaks_ties_like_apply_changes(spark):
+    """The sink's first commit seeds the table from the batch's latest
+    change per key.  On a precombine tie it must keep the same row that
+    apply_changes keeps for that batch on every later commit: the one
+    with the smallest md5 of the whole decoded row, whatever the input
+    order."""
+    import hashlib
+
+    root = tempfile.mkdtemp(prefix="cdc_tie_")
+    in_dir, table, ck = f"{root}/in", f"{root}/mirror", f"{root}/ck"
+
+    def row_md5(val):
+        # the decoded row: id, val, __op, __ts_ms, __seq
+        return hashlib.md5("\x00".join(["1", val, "upsert", "7", "7"]).encode()).hexdigest()
+
+    # input order is the reverse of md5 order: the tie-break winner comes last
+    loser, winner = sorted(("p", "q"), key=row_md5, reverse=True)
+    lines = [env("u", after={"id": 1, "val": v}, ts=7, lsn=7) for v in (loser, winner)]
+    _write_changelog(in_dir, "b1.json", lines)
+    st = StreamingTables(spark, _cdc_config(in_dir, table, ck))
+    st.register_sources()
+    st.start_insert(spark.table("orders_cdc"), "cdc.orders_mirror").awaitTermination(60)
+    seeded = {(r["id"], r["val"]) for r in SnapshotTable(spark, table).read().collect()}
+
+    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="cdc_tie_ac_") + "/t")
+    t.create(spark.createDataFrame(
+        [(2, "other", 0, 0)], "id int, val string, __ts_ms long, __seq long"))
+    t.apply_changes(_decode(spark, lines), ["id"], precombine="__seq")
+    applied = {(r["id"], r["val"]) for r in t.read().where("id = 1").collect()}
+
+    assert applied == {(1, winner)}
+    assert seeded == applied
+
+
 def _replay_by_seq(events):
     """Replay (op, id, val, seq) in SEQ order with stale-drop: the state
     a WAL consumer converges to regardless of arrival order."""

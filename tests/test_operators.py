@@ -529,12 +529,15 @@ def test_cut_lineage_reliable_mode(spark, tmp_path):
     cluster-safe mode — executor loss cannot kill a job past a cut) and
     localCheckpoint otherwise; both truncate lineage and preserve
     content.  Iterative operators and the step language's write path
-    must keep working in reliable mode."""
+    must keep working in reliable mode, and a cut's files must go once
+    its frame is garbage-collected."""
     from easy_sql_spark.operators.components import connected_components_star
     from easy_sql_spark.operators.iterate import cut_lineage
     from easy_sql_spark.runtime.processor import SqlProcessor
 
+    import gc
     import os
+    import time
 
     ckpt = str(tmp_path / "ckpt")
 
@@ -545,11 +548,22 @@ def test_cut_lineage_reliable_mode(spark, tmp_path):
             for n in files
         ]
 
+    def rdd_dirs():
+        return {
+            os.path.join(cur, d)
+            for cur, dirs, _f in os.walk(ckpt)
+            for d in dirs
+            if d.startswith("rdd-")
+        }
+
     df = spark.createDataFrame([(i,) for i in range(10)], "x int")
     out = cut_lineage(df.selectExpr("x * 2 as y"), eager=True)
     assert {r.y for r in out.collect()} == {i * 2 for i in range(10)}
 
     sc = spark.sparkContext
+    # the session build sets it: the cleaner deletes a reliable cut's
+    # files when the JVM collects the cut's RDD
+    assert sc.getConf().get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
     assert not sc.getCheckpointDir()
     sc.setCheckpointDir(ckpt)
     try:
@@ -559,6 +573,17 @@ def test_cut_lineage_reliable_mode(spark, tmp_path):
         assert {r.y for r in lazy.collect()} == {i + 2 for i in range(10)}
         # reliable mode actually wrote checkpoint data to the dir
         assert ckpt_files(), "no reliable checkpoint files written"
+        cut_dirs = rdd_dirs()
+        assert len(cut_dirs) == 2, cut_dirs
+        # drop the frames: the Python GC releases the JVM objects, a JVM
+        # GC queues the RDDs' weak references to the cleaner
+        del rel, lazy
+        deadline = time.time() + 60
+        while rdd_dirs() & cut_dirs and time.time() < deadline:
+            gc.collect()
+            sc._jvm.System.gc()
+            time.sleep(0.5)
+        assert not rdd_dirs() & cut_dirs, "cut files outlived their frames"
         # an iterative operator end-to-end in reliable mode
         edges = spark.createDataFrame(
             [(1, 2), (2, 3), (10, 11)], "u long, v long"

@@ -148,3 +148,25 @@ def test_every_lineage_cut_goes_through_cut_lineage():
                         rel = os.path.relpath(path, root)
                         hits.append(f"{rel}:{no}: {line.strip()}")
     assert not hits, "lineage cuts outside cut_lineage:\n" + "\n".join(hits)
+
+
+def test_tools_keep_no_private_job_counter_or_steal_reader():
+    """One measurement harness: perfbench counts jobs per pass, phase
+    and query and reads host steal, so no script under ``tools/`` keeps
+    its own job counter or steal reader."""
+    import os
+
+    tools = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+    )
+    banned = ("statusTracker(", "getJobIdsForGroup(", "setJobGroup(", "/proc/stat")
+    hits = []
+    for fname in sorted(os.listdir(tools)):
+        path = os.path.join(tools, fname)
+        if not os.path.isfile(path):
+            continue
+        with open(path, encoding="utf-8") as f:
+            for no, line in enumerate(f, 1):
+                if any(b in line for b in banned):
+                    hits.append(f"tools/{fname}:{no}: {line.strip()}")
+    assert not hits, "private measurement code in tools/:\n" + "\n".join(hits)

@@ -1,36 +1,44 @@
 #!/bin/bash
-# Interleaved A/B bench: two trees alternating in ONE window, so host
-# contention hits both; per-slot /proc/stat steal ticks + loadavg are
-# recorded so any contaminated slot can be discarded.  This is the
-# standard tree-vs-tree wall protocol on this host (VERDICT r14 #2):
-# raw walls across epochs are environmental, same-window alternation
-# plus controls is what adjudicates.
+# Interleaved A/B of two checkouts through the benchmark; the protocol
+# and its decision rule are in README.md, "Measuring a change".
 #
-# Usage: tools/ab_interleave.sh TREE_A TREE_B [ROUNDS] [OUT_DIR]
-#   TREE_A/TREE_B  repo roots to bench (e.g. a git worktree of the
-#                  previous round's close vs /root/repo)
-#   ROUNDS         alternating rounds (default 3)
-#   OUT_DIR        artifact dir (default /tmp/ab_$(date +%s) -- commit
-#                  the per-run JSON lines under plans/r{N}/ab/)
-# Env: BENCH_RUNS (default 2), SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
-# Analyze with: python tools/ab_analyze.py OUT_DIR
+# Usage: tools/ab_interleave.sh TREE_A TREE_B [PAIRS] [OUT]
+#   TREE_A, TREE_B  checkouts of the parent commit and of the change
+#   PAIRS           pairs per workload (default 10): pair i runs seed i
+#                   on both trees, tree A first when i is odd
+#   OUT             output directory (default: a new one under $TMPDIR)
+#
+# Runs every workload of TREE_A's BENCHMARK.json with --trace 0.  Keeps
+# each run's stdout and stderr as OUT/<workload>.<a|b>.<pair>.{out,err}
+# and its start, end and exit status in OUT/slots.log.
+# Then: python3 tools/ab_analyze.py OUT
 set -u
-A=${1:?tree A}; B=${2:?tree B}; ROUNDS=${3:-3}
-OUT=${4:-/tmp/ab_$(date +%s)}
+A=$(cd "${1:?TREE_A}" && pwd) || exit 1
+B=$(cd "${2:?TREE_B}" && pwd) || exit 1
+PAIRS=${3:-10}
+OUT=${4:-$(mktemp -d -t ab.XXXXXX)}
 mkdir -p "$OUT"
-export SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
-export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
-export BENCH_RUNS=${BENCH_RUNS:-2}
-steal() { awk '/^cpu /{print $9}' /proc/stat; }
-for i in $(seq 1 "$ROUNDS"); do
-  for tree in "$A" "$B"; do
-    name=$(basename "$tree")
-    s0=$(steal); t0=$(date +%s)
-    echo "=== round $i tree $name start $(date +%H:%M:%S) steal0 $s0 loadavg $(cut -d' ' -f1-3 /proc/loadavg)" >> "$OUT/ab_meta.log"
-    (cd "$tree" && python3 bench.py 2>"$OUT/ab_${name}_r${i}.err" | tail -1 > "$OUT/ab_${name}_r${i}.json")
-    s1=$(steal); t1=$(date +%s)
-    echo "=== round $i tree $name end $(date +%H:%M:%S) steal1 $s1 wall $((t1-t0))s steal_ticks $((s1-s0))" >> "$OUT/ab_meta.log"
+read -r RUN_S WORKLOADS < <(python3 -c '
+import json, sys
+spec = json.load(open(sys.argv[1]))
+print(spec["run_seconds"], *[w["name"] for w in spec["workloads"]])
+' "$A/BENCHMARK.json")
+
+slot() {  # TREE SIDE WORKLOAD PAIR
+  local base="$OUT/$3.$2.$4"
+  echo "$(date +%T) start $3 $2 pair $4" >> "$OUT/slots.log"
+  (cd "$1" && python3 perfbench/run.py --workload "$3" --seed "$4" \
+    --seconds "$RUN_S" --trace 0) > "$base.out" 2> "$base.err"
+  echo "$(date +%T) end $3 $2 pair $4 exit $?" >> "$OUT/slots.log"
+}
+
+for p in $(seq 1 "$PAIRS"); do
+  for w in $WORKLOADS; do
+    if [ $((p % 2)) -eq 1 ]; then
+      slot "$A" a "$w" "$p"; slot "$B" b "$w" "$p"
+    else
+      slot "$B" b "$w" "$p"; slot "$A" a "$w" "$p"
+    fi
   done
 done
-echo AB_DONE >> "$OUT/ab_meta.log"
 echo "$OUT"
