@@ -171,37 +171,16 @@ class MinHashDedupIndex:
 
     def _index_bytes(self) -> int:
         """On-disk size of the live index dirs — a PURE manifest-metadata
-        read when the manifest carries per-dir byte totals (recorded at
-        commit time, ``SnapshotTable._merge_stats``); only dirs a legacy
-        manifest lacks totals for fall back to one recursive FS walk
-        each, once, because the result is memoized per table version
-        (manifests are immutable).  On HDFS the old always-walk was a
-        recursive NameNode ``getContentSummary`` per live dir per
-        version — an O(live dirs) driver stall re-paid after every
-        commit."""
+        read of the per-dir byte totals recorded at commit time
+        (``SnapshotTable._merge_stats``), memoized per table version
+        (manifests are immutable)."""
         v = self.table.latest_version()
         cached = getattr(self, "_size_cache", None)
         if cached and cached[0] == v:
             return cached[1]
         m = self.table.manifest(v)
-        bmap = m.get("bytes") or {}
-        total = sum(bmap[d] for d in m["live"] if d in bmap)
-        missing = [d for d in m["live"] if d not in bmap]
-        if missing:
-            total += self._walk_bytes(missing)
+        total = sum(m["bytes"][d] for d in m["live"])
         self._size_cache = (v, total)
-        return total
-
-    def _walk_bytes(self, dirs: list[str]) -> int:
-        """Legacy-manifest fallback: recursive FS size per dir."""
-        fs = self.table.fs
-        jvm = fs._jvm
-        total = 0
-        for d in dirs:
-            p = jvm.org.apache.hadoop.fs.Path(f"{self.table.data_dir}/{d}")
-            total += (
-                p.getFileSystem(fs._conf).getContentSummary(p).getLength()
-            )
         return total
 
     def _batch_committed_docs(self, batch_id: int) -> DataFrame | None:

@@ -43,6 +43,18 @@ Design decisions, chosen for 100 TB behavior:
   the foreachBatch batch id in the manifest; a replayed batch (restart
   from checkpoint) is detected by scanning committed ids for the same
   stream key and skipped — the standard idempotent-sink contract.
+
+Manifest format.  ``SnapshotTable.manifest()`` is the one reader of a
+``vN.json`` and refuses one that lacks a required key.  Required:
+``version``, ``parent``, ``operation``, ``ts``, ``schema``,
+``partition_cols``, ``live``, ``added``, ``removed``, ``stats_cols``,
+``stats`` (per live dir and stats column: ``[min, max, null_count]``),
+``rows`` and ``bytes`` (per live dir: row count and on-disk bytes) and
+``streams`` (per stream key: the last committed batch id, carried
+through every commit).  Optional: ``external`` (shallow-clone dirs →
+their data base), ``dvs`` (live deletion vectors), ``constraints``,
+``batch_id`` / ``batch_ids`` / ``stream_key`` (the streaming commit
+that wrote the version), plus whatever ``extra`` a caller records.
 """
 
 from __future__ import annotations
@@ -74,11 +86,112 @@ def latest_per_key(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
     )
 
 
+def bounds_exclude(mn, mx, op: str, val, nulls=None, rows=None) -> bool:
+    """True when a file or dir whose column values lie in [``mn``,
+    ``mx``], ``nulls`` of its ``rows`` NULL, provably holds no row with
+    ``column op val`` (op: <, <=, >, >=, =, ``in`` with a list,
+    ``is_null``, ``not_null``) — the skipping rule of the snapshot,
+    Delta and Iceberg readers.  A None bound or count, or a value of
+    another type, proves nothing.  A NaN bound is unknown: Spark orders
+    NaN above every value, so a NaN max (scan) or a max widened to NaN
+    (footer) leaves only the min to prune on."""
+    import decimal as _dec
+    import math as _math
+
+    if op == "is_null":
+        return nulls == 0
+    if op == "not_null":
+        return nulls is not None and rows is not None and nulls >= rows > 0
+    if mn is None or mx is None or (isinstance(mn, float) and _math.isnan(mn)):
+        return False
+    if isinstance(mx, float) and _math.isnan(mx) and op not in ("<", "<="):
+        return False
+    vals = val if op == "in" and isinstance(val, (list, tuple, set)) else [val]
+    vals = [float(v) if isinstance(v, _dec.Decimal) else v for v in vals]
+    if any(
+        isinstance(mn, str) != isinstance(v, str)
+        or isinstance(mn, bool) != isinstance(v, bool)
+        for v in vals
+    ):
+        return False
+    if op == "in":
+        return not any(mn <= v <= mx for v in vals)
+    v = vals[0]
+    if op == "=":
+        return not mn <= v <= mx
+    if op in ("<", "<="):
+        return not (mn < v or (op == "<=" and mn <= v))
+    if op in (">", ">="):
+        return not (mx > v or (op == ">=" and mx >= v))
+    return False
+
+
+def check_change_range(
+    manifest, existing, v0: int, v1: int, allow_rewrites: bool, applies_dvs: bool
+) -> tuple[dict, dict]:
+    """The change-feed range rule of ``SnapshotTable.changes`` and the
+    ``snapshot_cdf`` stream: return the endpoint manifests of (``v0``,
+    ``v1``] (``v0`` 0: before the first commit), or refuse a range with
+    a vacuumed endpoint; without ``allow_rewrites``, a vacuumed or
+    ``compact`` version inside; a ``delete_dv`` commit inside, or a dir
+    live at both ends whose deletion vectors differ; and, when the
+    reader cannot apply the endpoints' deletion vectors (``applies_dvs``
+    false), a changed dir one of them targets."""
+    gone = [v for v in (v0, v1) if v and v not in existing]
+    if gone:
+        raise ValueError(
+            f"version(s) {gone} have been vacuumed; the change feed needs "
+            "both endpoint manifests (restart a stream with "
+            "starting_version at a surviving manifest)"
+        )
+    inside = range(v0 + 1, v1 + 1)
+    if not allow_rewrites:
+        vacuumed = [v for v in inside if v not in existing]
+        if vacuumed:
+            raise ValueError(
+                f"range crosses vacuumed version(s) {vacuumed}: rewrite "
+                "detection is impossible without their manifests; pass "
+                "allow_rewrites=True to diff the surviving endpoints anyway"
+            )
+    ops = {v: manifest(v)["operation"] for v in inside if v in existing}
+    m0 = manifest(v0) if v0 else {"live": []}
+    m1 = manifest(v1)
+    frm, to = set(m0["live"]), set(m1["live"])
+
+    def targets(m: dict) -> set[tuple[str, str]]:
+        return {(dv["dir"], t) for dv in m.get("dvs") or [] for t in dv["targets"]}
+
+    t0, t1 = targets(m0), targets(m1)
+    touched = {t for _, t in t0 ^ t1 if t in frm & to}
+    if not applies_dvs:
+        touched |= {t for _, t in t0 if t in frm - to}
+        touched |= {t for _, t in t1 if t in to - frm}
+    dv_commits = [v for v, op in ops.items() if op == "delete_dv"]
+    why = [f"crosses deletion-vector commit(s) {dv_commits}"] if dv_commits else []
+    if touched:
+        why.append(f"changes dir(s) {sorted(touched)} that deletion vectors target")
+    if why:
+        raise ValueError(
+            f"range {' and '.join(why)}: the dir-level feed cannot express "
+            "sub-file deletes — compact() first (applies and clears DVs)"
+        )
+    rewriters = [v for v, op in ops.items() if op == "compact"]
+    if rewriters and not allow_rewrites:
+        raise ValueError(
+            f"range crosses compact commit(s) {rewriters}: rewrites "
+            "are not data changes; pass allow_rewrites=True to see "
+            "them as delete+insert anyway"
+        )
+    return m0, m1
+
+
 _MANIFEST_FMT = "v%08d.json"
+_MANIFEST_KEYS = (
+    "version", "parent", "operation", "ts", "schema", "partition_cols",
+    "live", "added", "removed", "stats_cols", "stats", "rows", "bytes",
+    "streams",
+)
 _RETRIES = 5
-# vacuum parks legacy per-stream batch state here before deleting the
-# manifests that carried it (new-format manifests make it redundant)
-_STREAMS_SIDECAR = "_streams_carry.json"
 # Delta-style default retention for dirs no surviving manifest has ever
 # referenced: they are indistinguishable from a CONCURRENT writer's
 # staged-but-uncommitted commit dir, so deleting them young corrupts the
@@ -243,7 +356,16 @@ class SnapshotTable:
         return max(self.existing_versions(), default=0)
 
     def manifest(self, version: int) -> dict:
-        return json.loads(self.fs.read_bytes(self._manifest_path(version)))
+        """Version ``version``'s manifest; ``ValueError`` when it lacks a
+        required key (see "Manifest format" in the module docstring)."""
+        m = json.loads(self.fs.read_bytes(self._manifest_path(version)))
+        missing = [k for k in _MANIFEST_KEYS if k not in m]
+        if missing:
+            raise ValueError(
+                f"snapshot manifest v{version} at {self.root} lacks "
+                f"required keys {missing}"
+            )
+        return m
 
     def history(self) -> list[dict]:
         """Version log, newest first (op, timestamp, live-dir count).
@@ -566,14 +688,16 @@ class SnapshotTable:
             )
         rows = scan.groupBy(dir_expr.alias("__dir")).agg(*aggs).collect()
 
-        out: dict[str, dict] = {}
-        counts: dict[str, int] = {}
+        # a dir holding only 0-row files yields no group: it records 0
+        # rows and no bounds, as the footer path does
+        out: dict[str, dict] = {
+            d: {c: [None, None, 0] for c in stats_cols} for d in commit_dirs
+        }
+        counts: dict[str, int] = dict.fromkeys(commit_dirs, 0)
         for r in rows:
             counts[r["__dir"]] = int(r["__rows"])
             # third element: the column's NULL count in this dir — powers
-            # IS NULL / IS NOT NULL dir pruning; 2-element entries from
-            # older manifests stay readable (pruning treats a missing
-            # null count as unknown)
+            # IS NULL / IS NOT NULL dir pruning
             out[r["__dir"]] = {
                 c: [
                     self._plain_stat(r[f"__mn_{c}"], -1),
@@ -653,79 +777,43 @@ class SnapshotTable:
         m["streams"] = streams
         return m
 
-    def _streams_state(self, parent: dict | None) -> dict[str, int]:
-        """The per-stream last-committed batch ids as of ``parent``.
-        New-format manifests carry the cumulative ``streams`` map; a
-        legacy table (no map) falls back to scanning surviving manifests
-        merged with the vacuum sidecar (where vacuum parks batch state
-        from manifests it deletes)."""
-        if parent is not None and "streams" in parent:
-            return parent["streams"]
-        out: dict[str, int] = {}
-        sidecar = f"{self.manifest_dir}/{_STREAMS_SIDECAR}"
-        if self.fs.exists(sidecar):
-            out.update(
-                {k: int(v) for k, v in json.loads(self.fs.read_bytes(sidecar)).items()}
-            )
-        if parent is None:
-            return out
-        for v in self.existing_versions():
-            if v > parent["version"]:
-                break
-            m = self.manifest(v)
-            if m.get("stream_key") is not None and m.get("batch_id") is not None:
-                k = str(m["stream_key"])
-                out[k] = max(int(m["batch_id"]), out.get(k, -(1 << 62)))
-        return out
+    @staticmethod
+    def _streams_state(parent: dict | None) -> dict[str, int]:
+        """The per-stream last-committed batch ids as of ``parent``."""
+        return parent["streams"] if parent else {}
 
     def _merge_stats(
         self, m: dict, parent: dict | None, staged_dirs: list[str]
     ) -> None:
         """Manifest per-dir metadata: parent's entries for still-live
-        dirs carry forward (stats, row counts, external-base mappings
-        from shallow clones); staged dirs get ONE small agg job over the
-        fresh files."""
-        cols = m.get("stats_cols") or []
+        dirs carry forward (stats, row counts, byte totals, external-base
+        mappings from shallow clones); staged dirs get their statistics
+        from the fresh files' footers (or one small agg job)."""
         live = set(m["live"])
-        stats, counts = self._stage_stats(
-            staged_dirs, cols, m["partition_cols"], m.get("schema")
-        )
-        if cols:
-            carried = {
-                d: s
-                for d, s in ((parent or {}).get("stats", {})).items()
-                if d in live
+
+        def carried(key: str) -> dict:
+            return {
+                d: x for d, x in ((parent or {}).get(key) or {}).items() if d in live
             }
-            carried.update(stats)
-            m["stats"] = carried
-        rows = {
-            d: n
-            for d, n in ((parent or {}).get("rows", {})).items()
-            if d in live
-        }
-        rows.update(counts)
-        m["rows"] = rows
-        # per-dir on-disk byte totals: parent entries carry forward for
-        # still-live dirs; staged dirs get one listStatus each while the
-        # commit's listing is warm.  Size consumers (e.g.
+
+        stats, counts = self._stage_stats(
+            staged_dirs, m["stats_cols"], m["partition_cols"], m["schema"]
+        )
+        if m["stats_cols"]:
+            m["stats"] = {**carried("stats"), **stats}
+        m["rows"] = {**carried("rows"), **counts}
+        # per-dir on-disk byte totals: staged dirs get one listStatus each
+        # while the commit's listing is warm.  Size consumers (e.g.
         # MinHashDedupIndex._index_bytes) then read table size as pure
-        # manifest metadata — no per-read FS walk, which on HDFS would be
-        # a recursive NameNode getContentSummary per live dir.
-        nbytes = {
-            d: b
-            for d, b in ((parent or {}).get("bytes", {})).items()
-            if d in live
+        # manifest metadata — no per-read FS walk.
+        m["bytes"] = {
+            **carried("bytes"),
+            **{
+                d: sum(sz for _, sz in self.fs.list_files(f"{self.data_dir}/{d}"))
+                for d in staged_dirs
+            },
         }
-        for d in staged_dirs:
-            nbytes[d] = sum(
-                sz for _, sz in self.fs.list_files(f"{self.data_dir}/{d}")
-            )
-        m["bytes"] = nbytes
-        ext = {
-            d: b
-            for d, b in ((parent or {}).get("external", {})).items()
-            if d in live
-        }
+        ext = carried("external")
         if ext:
             m["external"] = ext
         # deletion vectors carry forward with target-dir bookkeeping: a
@@ -735,13 +823,11 @@ class SnapshotTable:
         # row_count falls back to a scan instead of overcounting
         dvs = []
         for dv in (parent or {}).get("dvs", []):
-            alive = [t for t in dv.get("targets", []) if t in live]
+            alive = [t for t in dv["targets"] if t in live]
             if not alive:
-                # all target dirs died (rewritten/overwritten) — or a
-                # legacy empty-target entry, which can delete nothing
                 continue
             entry = dict(dv)
-            if len(alive) < len(dv.get("targets", [])):
+            if len(alive) < len(dv["targets"]):
                 entry["rows"] = None
             dvs.append(entry)
         if dvs:
@@ -927,57 +1013,51 @@ class SnapshotTable:
         file is listed, no byte of data is read: the 100 TB count is a
         driver-side sum over the live set.  ``partitions`` restricts to
         matching partition dirs (same spec filter as :meth:`read`).
-        Falls back to one Spark count ONLY when a live dir predates
-        row-count manifests (legacy table) — exactness is never
-        sacrificed."""
+        With deletion vectors whose row counts are not all trusted, or a
+        partition spec over a table with any, it is one Spark count of
+        the DV-applied read."""
         v = version or self.latest_version()
         if not v:
             raise ValueError(f"no committed versions at {self.root}")
         m = self.manifest(v)
-        live = m["live"]
-        if partitions:
-            bad = [c for c in partitions if c not in m["partition_cols"]]
-            if bad:
-                raise ValueError(f"not partition columns: {bad}")
-            wanted = {c: {str(x) for x in vs} for c, vs in partitions.items()}
-
-            def keep(d: str) -> bool:
-                segs = dict(
-                    s.split("=", 1) for s in d.split("/")[1:] if "=" in s
-                )
-                return all(segs.get(c) in vals for c, vals in wanted.items())
-
-            live = [d for d in live if keep(d)]
-        rows = m.get("rows") or {}
+        live = self._partition_dirs(m, m["live"], partitions)
         dvs = m.get("dvs") or []
-        if dvs:
-            if partitions is None and all(
-                dv.get("rows") is not None for dv in dvs
-            ):
-                base = sum(rows[d] for d in live if d in rows)
-                if all(d in rows for d in live):
-                    return base - sum(int(dv["rows"]) for dv in dvs)
-            # partition-scoped or untrusted DV counts: exact via scan
+        if dvs and (
+            partitions is not None or any(dv["rows"] is None for dv in dvs)
+        ):
             return self.read(version=v, partitions=partitions).count()
-        missing = [d for d in live if d not in rows]
-        if missing:
-            schema = StructType.fromJson(json.loads(m["schema"]))
-            scanned = self._read_dirs(
-                missing, schema, m["partition_cols"], m.get("external")
-            ).count()
-            return scanned + sum(rows[d] for d in live if d in rows)
-        return sum(rows[d] for d in live)
+        return sum(m["rows"][d] for d in live) - sum(int(dv["rows"]) for dv in dvs)
+
+    @staticmethod
+    def _partition_dirs(
+        m: dict, dirs: list[str], partitions: dict[str, list] | None
+    ) -> list[str]:
+        """``dirs`` whose partition-path segments match the spec
+        ``partitions`` ({col: [values…]}, values compared as strings);
+        all of them with no spec."""
+        if not partitions:
+            return dirs
+        bad = [c for c in partitions if c not in m["partition_cols"]]
+        if bad:
+            raise ValueError(f"not partition columns: {bad}")
+        wanted = {c: {str(x) for x in vs} for c, vs in partitions.items()}
+
+        def keep(d: str) -> bool:
+            segs = dict(s.split("=", 1) for s in d.split("/")[1:] if "=" in s)
+            return all(segs.get(c) in vals for c, vals in wanted.items())
+
+        return [d for d in dirs if keep(d)]
 
     # ------------------------------------------------------------- cloning
     def clone_to(self, target_root: str, version: int | None = None) -> "SnapshotTable":
         """Shallow CLONE (Delta semantics): a NEW snapshot table whose v1
         references this table's data files in place — zero data copied,
         O(manifest) work regardless of table size.  Schema, partitioning,
-        stats, row counts and constraints all carry over; subsequent
-        writes to the clone land in the clone's own ``data/`` dir and
-        never touch the source.  ``compact()`` on the clone rewrites the
-        live set locally — the documented way to materialize it into a
-        self-contained (deep) copy.
+        stats, row counts, byte totals and constraints all carry over;
+        subsequent writes to the clone land in the clone's own ``data/``
+        dir and never touch the source.  ``compact()`` on the clone
+        rewrites the live set locally — the documented way to materialize
+        it into a self-contained (deep) copy.
 
         Caveat (same as Delta's shallow clone): VACUUM on the SOURCE can
         delete files a clone still references; clones are for
@@ -990,7 +1070,7 @@ class SnapshotTable:
         if target.latest_version():
             raise ValueError(f"snapshot table already exists at {target_root}")
         src_ext = src.get("external") or {}
-        src_dv_dirs = [dv["dir"] for dv in src.get("dvs", [])]
+        src_dv_dirs = [dv["dir"] for dv in src.get("dvs") or []]
         external = {
             d: src_ext.get(d, self.data_dir)
             for d in list(src["live"]) + src_dv_dirs
@@ -1005,9 +1085,10 @@ class SnapshotTable:
             "live": list(src["live"]),
             "added": list(src["live"]),
             "removed": [],
-            "stats_cols": src.get("stats_cols", []),
-            "stats": dict(src.get("stats") or {}),
-            "rows": dict(src.get("rows") or {}),
+            "stats_cols": src["stats_cols"],
+            "stats": dict(src["stats"]),
+            "rows": dict(src["rows"]),
+            "bytes": dict(src["bytes"]),
             "streams": {},
         }
         if external:
@@ -1034,27 +1115,56 @@ class SnapshotTable:
             df, partition_by=partition_by, stats_cols=stats_cols
         )
 
-    def append(self, df: DataFrame, extra: dict | None = None) -> dict:
-        """Add the batch's rows; prior files stay live.  Rebases cleanly
-        on commit races (an append commutes with any other commit)."""
+    def _commit_staged(
+        self,
+        op: str,
+        df: DataFrame,
+        replaces,
+        extra: dict | None = None,
+        partition_by: list[str] | None = None,
+        base: int | None = None,
+        additive: bool = True,
+    ) -> dict:
+        """The one stage-and-publish path of the data-writing commits:
+        stage ``df`` once (reused across retries), re-audit it for
+        constraints added concurrently, then publish the parent's live
+        set minus ``replaces(parent, staged_dirs, staged_on_version)``
+        plus the staged dirs.  ``base``: the version a serializable
+        commit computed ``df`` against (any other parent conflicts).
+        ``additive``: the commit may add columns but not drop one."""
         staged: dict = {}
 
         def build(parent, version):
-            pby = self._resolve_partition_by(parent, None)
-            self._check_schema_evolution(parent, df)
-            if "dirs" not in staged:  # stage once, reuse across retries
+            if base is not None and parent["version"] != base:
+                raise SnapshotConflictError(
+                    f"{op} computed against v{base} but v{parent['version']} "
+                    "committed concurrently; retry on the new table state"
+                )
+            pby = self._resolve_partition_by(parent, partition_by)
+            if additive:
+                self._check_schema_evolution(parent, df)
+            if "dirs" not in staged:
                 staged["constraints"] = dict((parent or {}).get("constraints") or {})
-                staged["dirs"] = self._stage(
-                    df, pby, version, staged["constraints"]
-                )[1]
+                staged["dirs"] = self._stage(df, pby, version, staged["constraints"])[1]
+                staged["on"] = parent["version"] if parent else 0
             self._recheck_constraints(staged, parent, df.schema, pby)
-            m = self._base_manifest(version, parent, "append", df, pby, extra)
+            removed = replaces(parent, staged["dirs"], staged["on"])
+            gone = set(removed)
+            m = self._base_manifest(version, parent, op, df, pby, extra)
             m["added"] = staged["dirs"]
-            m["live"] = (parent["live"] if parent else []) + staged["dirs"]
+            m["removed"] = removed
+            m["live"] = [
+                d for d in (parent["live"] if parent else []) if d not in gone
+            ] + staged["dirs"]
             self._merge_stats(m, parent, staged["dirs"])
             return m
 
         return self._commit_loop(build)
+
+    def append(self, df: DataFrame, extra: dict | None = None) -> dict:
+        """Add the batch's rows; prior files stay live.  Rebases cleanly
+        on commit races (an append commutes with any other commit)."""
+        return self._commit_staged("append", df, lambda *_: [], extra)
 
     def overwrite(
         self,
@@ -1068,26 +1178,16 @@ class SnapshotTable:
         overwrite) declares the columns whose per-dir min/max ride every
         manifest from then on — the data-skipping index ``read(where=…)``
         prunes with."""
-        staged: dict = {}
-
-        def build(parent, version):
-            pby = self._resolve_partition_by(parent, partition_by)
-            if "dirs" not in staged:
-                staged["constraints"] = dict((parent or {}).get("constraints") or {})
-                staged["dirs"] = self._stage(
-                    df, pby, version, staged["constraints"]
-                )[1]
-            self._recheck_constraints(staged, parent, df.schema, pby)
-            m = self._base_manifest(version, parent, "overwrite", df, pby, extra)
-            if stats_cols is not None:
-                m["stats_cols"] = list(stats_cols)
-            m["added"] = staged["dirs"]
-            m["live"] = list(staged["dirs"])
-            m["removed"] = parent["live"] if parent else []
-            self._merge_stats(m, parent, staged["dirs"])
-            return m
-
-        return self._commit_loop(build)
+        if stats_cols is not None:
+            extra = {**(extra or {}), "stats_cols": list(stats_cols)}
+        return self._commit_staged(
+            "overwrite",
+            df,
+            lambda parent, *_: parent["live"] if parent else [],
+            extra,
+            partition_by=partition_by,
+            additive=False,
+        )
 
     def overwrite_partitions(self, df: DataFrame, extra: dict | None = None) -> dict:
         """Dynamic-partition overwrite: only the partitions PRESENT in the
@@ -1101,30 +1201,18 @@ class SnapshotTable:
         other's partitions live), while an OVERLAPPING writer raises
         ``SnapshotConflictError`` deterministically instead of silently
         last-writer-winning the shared partition."""
+        latest = self.latest_version()
+        if not latest or not self.manifest(latest)["partition_cols"]:
+            raise ValueError(
+                "overwrite_partitions requires a partitioned snapshot table"
+            )
 
-        staged: dict = {}
-
-        def build(parent, version):
-            pby = self._resolve_partition_by(parent, None)
-            if not pby:
-                raise ValueError(
-                    "overwrite_partitions requires a partitioned snapshot table"
-                )
-            self._check_schema_evolution(parent, df)
-            if "dirs" not in staged:
-                staged["constraints"] = dict((parent or {}).get("constraints") or {})
-                staged["dirs"] = self._stage(
-                    df, pby, version, staged["constraints"]
-                )[1]
-                staged["base"] = parent["version"] if parent else 0
-            self._recheck_constraints(staged, parent, df.schema, pby)
-            new_dirs = staged["dirs"]
+        def replaces(parent, new_dirs, staged_on):
             # partition spec = the path suffix past the commit dir
             new_specs = {d.split("/", 1)[1] for d in new_dirs}
             # rebase: conflict iff an intervening commit touched one of
             # OUR partitions (its added/removed specs intersect ours)
-            parent_v = parent["version"] if parent else 0
-            for v in range(staged["base"] + 1, parent_v + 1):
+            for v in range(staged_on + 1, parent["version"] + 1):
                 m_i = self.manifest(v)
                 touched = {
                     d.split("/", 1)[1]
@@ -1138,18 +1226,9 @@ class SnapshotTable:
                         f"partition(s) {sorted(hit)} this overwrite_partitions "
                         "also writes; retry on the new table state"
                     )
-            m = self._base_manifest(
-                version, parent, "overwrite_partitions", df, pby, extra
-            )
-            prior = parent["live"] if parent else []
-            dead = [d for d in prior if d.split("/", 1)[1] in new_specs]
-            m["added"] = new_dirs
-            m["removed"] = dead
-            m["live"] = [d for d in prior if d not in set(dead)] + new_dirs
-            self._merge_stats(m, parent, new_dirs)
-            return m
+            return [d for d in parent["live"] if d.split("/", 1)[1] in new_specs]
 
-        return self._commit_loop(build)
+        return self._commit_staged("overwrite_partitions", df, replaces, extra)
 
     def apply_changes(
         self,
@@ -1420,33 +1499,40 @@ class SnapshotTable:
                 )
         merged = survivors.select(*upserts.columns).unionByName(upserts)
 
-        staged: dict = {}
-        op_name = "apply_changes" if op_col else "merge"
+        return self._commit_staged(
+            "apply_changes" if op_col else "merge",
+            merged,
+            lambda *_: hit_dirs,
+            extra,
+            base=latest,
+        )
 
-        def build(parent, version):
-            if parent["version"] != latest:
-                raise SnapshotConflictError(
-                    f"merge computed against v{latest} but v"
-                    f"{parent['version']} committed concurrently; retry "
-                    "on the new table state"
-                )
-            pby = self._resolve_partition_by(parent, None)
-            if "dirs" not in staged:
-                staged["dirs"] = self._stage(
-                    merged, pby, version, parent.get("constraints")
-                )[1]
-            m = self._base_manifest(
-                version, parent, op_name, merged, pby, extra
-            )
-            m["added"] = staged["dirs"]
-            m["removed"] = hit_dirs
-            m["live"] = [
-                d for d in parent["live"] if d not in set(hit_dirs)
-            ] + staged["dirs"]
-            self._merge_stats(m, parent, staged["dirs"])
-            return m
+    def _delete_scope(self, where: list[tuple]):
+        """The shared front of both DELETEs: validate ``where``
+        ([(col, op, value), …], op in <, <=, >, >=, =) and return the
+        latest version, its manifest and schema, the live dirs whose
+        stats do not exclude the predicate, and the predicate as one
+        Column (the AND of the conditions)."""
+        import operator as _op
 
-        return self._commit_loop(build)
+        conds = {"<": _op.lt, "<=": _op.le, ">": _op.gt, ">=": _op.ge, "=": _op.eq}
+        for _, op, _v in where:
+            if op not in conds:
+                raise ValueError(f"unsupported delete op {op!r}")
+        latest = self.latest_version()
+        if not latest:
+            raise ValueError(f"no committed versions at {self.root}")
+        parent0 = self.manifest(latest)
+        schema0 = StructType.fromJson(json.loads(parent0["schema"]))
+        candidates = [
+            d for d in parent0["live"]
+            if self._dir_survives(parent0["stats"].get(d), where, parent0["rows"].get(d))
+        ]
+        pred = None
+        for col, op, val in where:
+            cond = conds[op](F.col(col), F.lit(val))
+            pred = cond if pred is None else (pred & cond)
+        return latest, parent0, schema0, candidates, pred
 
     def delete_where(
         self, where: list[tuple], extra: dict | None = None
@@ -1463,56 +1549,13 @@ class SnapshotTable:
 
         Concurrency: serializable like :meth:`merge` — intervening
         commits raise :class:`SnapshotConflictError`."""
-        ops = {"<", "<=", ">", ">=", "="}
-        for _, op, _v in where:
-            if op not in ops:
-                raise ValueError(f"unsupported delete op {op!r}")
-        latest = self.latest_version()
-        if not latest:
-            raise ValueError(f"no committed versions at {self.root}")
-        parent0 = self.manifest(latest)
-        schema0 = StructType.fromJson(json.loads(parent0["schema"]))
-        stats = parent0.get("stats", {})
-        candidates = [
-            d for d in parent0["live"]
-            if self._dir_survives(stats.get(d), where)
-        ]
-        pred = None
-        for col, op, val in where:
-            c = F.col(col)
-            cond = {
-                "<": c < F.lit(val), "<=": c <= F.lit(val),
-                ">": c > F.lit(val), ">=": c >= F.lit(val),
-                "=": c == F.lit(val),
-            }[op]
-            pred = cond if pred is None else (pred & cond)
+        latest, parent0, schema0, candidates, pred = self._delete_scope(where)
         survivors = self._read_state(parent0, candidates, schema0).where(
             ~F.coalesce(pred, F.lit(False))
         )
-
-        staged: dict = {}
-
-        def build(parent, version):
-            if parent["version"] != latest:
-                raise SnapshotConflictError(
-                    f"delete computed against v{latest} but v"
-                    f"{parent['version']} committed concurrently; retry"
-                )
-            pby = self._resolve_partition_by(parent, None)
-            if "dirs" not in staged:
-                staged["dirs"] = self._stage(survivors, pby, version)[1]
-            m = self._base_manifest(
-                version, parent, "delete", survivors, pby, extra
-            )
-            m["added"] = staged["dirs"]
-            m["removed"] = list(candidates)
-            m["live"] = [
-                d for d in parent["live"] if d not in set(candidates)
-            ] + staged["dirs"]
-            self._merge_stats(m, parent, staged["dirs"])
-            return m
-
-        return self._commit_loop(build)
+        return self._commit_staged(
+            "delete", survivors, lambda *_: list(candidates), extra, base=latest
+        )
 
     def write_audit_publish(
         self,
@@ -1692,73 +1735,13 @@ class SnapshotTable:
     def _dir_survives(
         stats: dict | None, where: list[tuple], rows: int | None = None
     ) -> bool:
-        """Conservative stats pruning: drop a dir only when its stats
-        PROVABLY exclude the predicate; missing stats keep it.  Entries
-        are [min, max] or [min, max, null_count] (newer manifests);
-        ``is_null``/``not_null`` ops prune on the null count (with the
-        dir row count for the not_null side)."""
-        import decimal as _dec
-        import math as _math
-
-        # a NaN bound means "unknown": Spark orders NaN above every
-        # value, so a scan max of NaN (NaN rows present) or a footer
-        # max widened to NaN (NaN absence unprovable) gives no upper
-        # bound to prune on; any comparison against it proves nothing
-        def known(v):
-            return not (isinstance(v, float) and _math.isnan(v))
-
-        if not stats:
-            return True
+        """Conservative stats pruning: drop a dir only when its
+        ``[min, max, null_count]`` entries PROVABLY exclude the predicate
+        (:func:`bounds_exclude`, with the dir row count for the
+        ``not_null`` side); missing stats keep it."""
         for col, op, val in where:
-            rng = stats.get(col)
-            if rng is None:
-                continue
-            nc = rng[2] if len(rng) > 2 else None
-            if op == "is_null":
-                if nc == 0:
-                    return False
-                continue
-            if op == "not_null":
-                if nc is not None and rows is not None and nc >= rows > 0:
-                    return False
-                continue
-            if rng[0] is None or rng[1] is None:
-                continue
-            mn, mx = rng[0], rng[1]
-            # ops needing only the min (<, <=) survive a NaN max;
-            # everything else needs both bounds to prove exclusion
-            if not known(mn):
-                continue
-            if not known(mx) and op not in ("<", "<="):
-                continue
-            if op == "in":
-                vals = [
-                    float(v) if isinstance(v, _dec.Decimal) else v
-                    for v in (val if isinstance(val, (list, tuple, set)) else [val])
-                ]
-                comparable = [
-                    v for v in vals
-                    if isinstance(mn, str) == isinstance(v, str)
-                    and isinstance(mn, bool) == isinstance(v, bool)
-                ]
-                if len(comparable) < len(vals):
-                    continue  # incomparable member: cannot prove exclusion
-                if not any(mn <= v <= mx for v in comparable):
-                    return False
-                continue
-            if isinstance(val, _dec.Decimal):
-                val = float(val)
-            # mixed-type ranges (str stats vs numeric predicate or vice
-            # versa) are incomparable — never prune on them
-            if isinstance(mn, str) != isinstance(val, str) or isinstance(
-                mn, bool
-            ) != isinstance(val, bool):
-                continue
-            if (
-                (op == "=" and not (mn <= val <= mx))
-                or (op in ("<", "<=") and not (mn < val or (op == "<=" and mn <= val)))
-                or (op in (">", ">=") and not (mx > val or (op == ">=" and mx >= val)))
-            ):
+            mn, mx, nulls = (stats or {}).get(col) or (None, None, None)
+            if bounds_exclude(mn, mx, op, val, nulls, rows):
                 return False
         return True
 
@@ -1787,45 +1770,24 @@ class SnapshotTable:
         if not latest:
             raise ValueError(f"no committed versions at {self.root}")
         if as_of is not None:
-            version = max(
-                (v for v in self.existing_versions() if self.manifest(v)["ts"] <= as_of),
-                default=None,
-            )
-            if version is None:
-                raise ValueError(f"no version at or before ts={as_of}")
+            version = self.version_at(as_of)
         version = version or latest
         m = self.manifest(version)
         schema = StructType.fromJson(json.loads(m["schema"]))
         live = m["live"]
         if where:
-            unknown = [c for c, _, _ in where if c not in (m.get("stats_cols") or [])]
+            unknown = [c for c, _, _ in where if c not in m["stats_cols"]]
             if unknown:
                 raise ValueError(
                     f"no manifest stats for columns {unknown}; declare them "
                     "via stats_cols on create/overwrite"
                 )
-            stats = m.get("stats", {})
-            rows_map = m.get("rows") or {}
             live = [
                 d
                 for d in live
-                if self._dir_survives(stats.get(d), where, rows_map.get(d))
+                if self._dir_survives(m["stats"].get(d), where, m["rows"].get(d))
             ]
-        if partitions:
-            bad = [c for c in partitions if c not in m["partition_cols"]]
-            if bad:
-                raise ValueError(f"not partition columns: {bad}")
-            wanted = {c: {str(v) for v in vs} for c, vs in partitions.items()}
-
-            def keep(d: str) -> bool:
-                segs = dict(
-                    s.split("=", 1) for s in d.split("/")[1:] if "=" in s
-                )
-                return all(
-                    segs.get(c) in vals for c, vals in wanted.items()
-                )
-
-            live = [d for d in live if keep(d)]
+        live = self._partition_dirs(m, live, partitions)
         return self._read_state(m, live, schema)
 
     def _read_dirs(
@@ -1950,30 +1912,7 @@ class SnapshotTable:
                 "delete_where_dv requires at least one (col, op, value) "
                 "condition; an unconditional delete should use overwrite"
             )
-        ops = {"<", "<=", ">", ">=", "="}
-        for _, op, _v in where:
-            if op not in ops:
-                raise ValueError(f"unsupported delete op {op!r}")
-        latest = self.latest_version()
-        if not latest:
-            raise ValueError(f"no committed versions at {self.root}")
-        parent0 = self.manifest(latest)
-        schema0 = StructType.fromJson(json.loads(parent0["schema"]))
-        stats = parent0.get("stats", {})
-        rows_map = parent0.get("rows") or {}
-        candidates = [
-            d for d in parent0["live"]
-            if self._dir_survives(stats.get(d), where, rows_map.get(d))
-        ]
-        pred = None
-        for col, op, val in where:
-            c = F.col(col)
-            cond = {
-                "<": c < F.lit(val), "<=": c <= F.lit(val),
-                ">": c > F.lit(val), ">=": c >= F.lit(val),
-                "=": c == F.lit(val),
-            }[op]
-            pred = cond if pred is None else (pred & cond)
+        latest, parent0, schema0, candidates, pred = self._delete_scope(where)
         # matched rows' positions, with any EXISTING DVs already applied
         # (double-deleting a row would corrupt counts)
         dv_prev = self._dv_frame(parent0)
@@ -2022,12 +1961,9 @@ class SnapshotTable:
             )
             # schema must stay the TABLE schema, not the DV schema
             m["schema"] = parent["schema"]
-            m["added"] = []
-            m["removed"] = []
             m["live"] = list(parent["live"])
             self._merge_stats(m, parent, [])
-            m.setdefault("dvs", [])
-            m["dvs"] = list(m.get("dvs") or []) + [
+            m["dvs"] = m.get("dvs", []) + [
                 {
                     "dir": staged["dir"],
                     "rows": int(n_deleted),
@@ -2061,54 +1997,15 @@ class SnapshotTable:
         crossing one would surface the rewrite as delete+insert noise,
         so it raises unless ``allow_rewrites=True`` (Delta's
         dataChange=false semantics, enforced instead of silently
-        polluting the feed)."""
+        polluting the feed).  A range whose deletion vectors change
+        raises too (see :func:`check_change_range`)."""
         to_version = to_version or self.latest_version()
-        if from_version > to_version:
-            raise ValueError("from_version must be <= to_version")
-        existing = set(self.existing_versions())
-        gone_endpoints = [v for v in (from_version, to_version) if v not in existing]
-        if gone_endpoints:
-            raise ValueError(
-                f"version(s) {gone_endpoints} have been vacuumed; the change "
-                "feed needs both endpoint manifests"
-            )
-        if not allow_rewrites:
-            vacuumed = [
-                v
-                for v in range(from_version + 1, to_version)
-                if v not in existing
-            ]
-            if vacuumed:
-                raise ValueError(
-                    f"range crosses vacuumed version(s) {vacuumed}: rewrite "
-                    "detection is impossible without their manifests; pass "
-                    "allow_rewrites=True to diff the surviving endpoints anyway"
-                )
-            dv_commits = [
-                v
-                for v in range(from_version + 1, to_version + 1)
-                if v in existing
-                and self.manifest(v)["operation"] == "delete_dv"
-            ]
-            if dv_commits:
-                raise ValueError(
-                    f"range crosses deletion-vector commit(s) {dv_commits}: "
-                    "the dir-level feed cannot express sub-file deletes — "
-                    "compact() first (applies and clears DVs)"
-                )
-            rewriters = [
-                v
-                for v in range(from_version + 1, to_version + 1)
-                if self.manifest(v)["operation"] == "compact"
-            ]
-            if rewriters:
-                raise ValueError(
-                    f"range crosses compact commit(s) {rewriters}: rewrites "
-                    "are not data changes; pass allow_rewrites=True to see "
-                    "them as delete+insert anyway"
-                )
-        m_frm = self.manifest(from_version)
-        m_to = self.manifest(to_version)
+        if not 1 <= from_version <= to_version:
+            raise ValueError("from_version must be >= 1 and <= to_version")
+        m_frm, m_to = check_change_range(
+            self.manifest, set(self.existing_versions()), from_version,
+            to_version, allow_rewrites, applies_dvs=True,
+        )
         frm = set(m_frm["live"])
         to = set(m_to["live"])
         schema = StructType.fromJson(json.loads(m_to["schema"]))
@@ -2137,8 +2034,9 @@ class SnapshotTable:
         than the retained window (latest ``retain_versions`` versions
         stay time-travelable), plus orphaned commit dirs from failed
         commits.  Old manifests for dropped versions are deleted too;
-        any per-stream batch state they carry is merged into the sidecar
-        first, so exactly-once streaming replay protection survives.
+        every manifest carries the cumulative per-stream batch ids, so
+        exactly-once streaming replay protection survives.
+        ``retain_versions`` must be at least 1.
 
         Two distinct delete classes, guarded differently:
 
@@ -2155,6 +2053,11 @@ class SnapshotTable:
         ``dry_run=True`` reports exactly what WOULD go (counts + paths)
         without touching anything — run it before the real vacuum, the
         operational habit every destructive maintenance op deserves."""
+        if retain_versions < 1:
+            raise ValueError(
+                f"retain_versions must be >= 1 (got {retain_versions}); "
+                "the latest manifest is the table"
+            )
         existing = self.existing_versions()
         latest = max(existing, default=0)
         keep_from = max(1, latest - retain_versions + 1)
@@ -2196,25 +2099,7 @@ class SnapshotTable:
                             self.fs.delete(f"{cpath}/{leaf}")
                         deleted_dirs += 1
 
-        # park batch state from manifests about to be deleted: new-format
-        # manifests already carry the cumulative ``streams`` map forward,
-        # but a legacy table's ids live ONLY in the old manifests
         doomed = [v for v in existing if v < keep_from]
-        carry: dict[str, int] = {}
-        sidecar = f"{self.manifest_dir}/{_STREAMS_SIDECAR}"
-        if self.fs.exists(sidecar):
-            carry.update(
-                {k: int(x) for k, x in json.loads(self.fs.read_bytes(sidecar)).items()}
-            )
-        for v in doomed:
-            m = self.manifest(v)
-            if m.get("stream_key") is not None and m.get("batch_id") is not None:
-                k = str(m["stream_key"])
-                carry[k] = max(int(m["batch_id"]), carry.get(k, -(1 << 62)))
-        if carry and not dry_run:
-            self.fs.delete(sidecar)
-            self.fs.create_atomic(sidecar, json.dumps(carry).encode())
-
         removed_manifests = 0
         for v in doomed:
             if not dry_run:

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..runtime.snapshots import bounds_exclude
+
 _LOG = "_delta_log"
 
 
@@ -459,9 +461,9 @@ def delta_history(path: str) -> list[dict]:
 def _add_survives(add: dict, where: list[tuple]) -> bool:
     """Conservative file skipping on the add action's ``stats`` JSON
     (minValues/maxValues, as Delta writers record): drop a file only
-    when its range PROVABLY excludes the predicate; missing stats or
-    incomparable types keep it — the same superset guarantee as the
-    snapshot layer's manifest pruning."""
+    when its range PROVABLY excludes the predicate — the snapshot
+    layer's rule (:func:`bounds_exclude`), so missing stats, NaN bounds
+    or incomparable types keep it."""
     stats = add.get("stats")
     if not stats:
         return True
@@ -472,21 +474,10 @@ def _add_survives(add: dict, where: list[tuple]) -> bool:
             return True
     mins = stats.get("minValues") or {}
     maxs = stats.get("maxValues") or {}
-    for col, op, val in where:
-        mn, mx = mins.get(col), maxs.get(col)
-        if mn is None or mx is None:
-            continue
-        if isinstance(mn, str) != isinstance(val, str) or isinstance(
-            mn, bool
-        ) != isinstance(val, bool):
-            continue
-        if (
-            (op == "=" and not (mn <= val <= mx))
-            or (op in ("<", "<=") and not (mn < val or (op == "<=" and mn <= val)))
-            or (op in (">", ">=") and not (mx > val or (op == ">=" and mx >= val)))
-        ):
-            return False
-    return True
+    return not any(
+        bounds_exclude(mins.get(col), maxs.get(col), op, val)
+        for col, op, val in where
+    )
 
 
 def read_delta(

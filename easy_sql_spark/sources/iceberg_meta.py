@@ -40,6 +40,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..runtime.snapshots import bounds_exclude
 from .avro_lite import read_avro_file
 
 
@@ -1426,7 +1427,8 @@ def _file_survives(
 ) -> bool:
     """Conservative per-file skipping on lower_bounds/upper_bounds
     (field-id keyed): drop only when the range PROVABLY excludes the
-    predicate; missing/undecodable bounds keep the file."""
+    predicate — the snapshot layer's rule (:func:`bounds_exclude`), so
+    missing, undecodable or NaN bounds keep the file."""
     lowers = df_entry.get("lower_bounds") or {}
     uppers = df_entry.get("upper_bounds") or {}
     for col, op, val in where:
@@ -1435,15 +1437,7 @@ def _file_survives(
         fid, ice_type = field_ids[col]
         lo = _decode_bound(ice_type, lowers.get(str(fid)))
         hi = _decode_bound(ice_type, uppers.get(str(fid)))
-        if lo is None or hi is None:
-            continue
-        if isinstance(lo, str) != isinstance(val, str):
-            continue
-        if (
-            (op == "=" and not (lo <= val <= hi))
-            or (op in ("<", "<=") and not (lo < val or (op == "<=" and lo <= val)))
-            or (op in (">", ">=") and not (hi > val or (op == ">=" and hi >= val)))
-        ):
+        if bounds_exclude(lo, hi, op, val):
             return False
     return True
 

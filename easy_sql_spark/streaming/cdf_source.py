@@ -22,9 +22,12 @@ Design:
   dir path (the same Hive layout the writer produced).  The root must
   therefore be on a posix-visible filesystem (local/NFS/fuse); the
   batch-side ``SnapshotTable.changes`` covers any Hadoop FS.
-- ``compact`` commits rewrite data without changing it; a range crossing
-  one raises unless option ``allow_rewrites`` is true (same contract as
-  the batch change feed).
+- a range is refused by the same rule as the batch change feed
+  (``runtime.snapshots.check_change_range``): ``compact`` commits rewrite
+  data without changing it, so a range crossing one raises unless option
+  ``allow_rewrites`` is true; and since ``read`` cannot apply deletion
+  vectors, a range crossing a ``delete_dv`` commit, or changing a dir a
+  deletion vector targets, always raises.
 
 Register once per session::
 
@@ -63,16 +66,19 @@ def _read_manifest(root: str, version: int) -> dict:
         return json.load(f)
 
 
-def _latest_version(root: str) -> int:
+def _existing_versions(root: str) -> set[int]:
     d = os.path.join(root, "_manifests")
     if not os.path.isdir(d):
-        return 0
-    vs = [
+        return set()
+    return {
         int(n[1:9])
         for n in os.listdir(d)
         if n.startswith("v") and n.endswith(".json")
-    ]
-    return max(vs, default=0)
+    }
+
+
+def _latest_version(root: str) -> int:
+    return max(_existing_versions(root), default=0)
 
 
 class _CDFPartition(InputPartition):
@@ -129,28 +135,13 @@ class SnapshotCDFStreamReader(DataSourceStreamReader):
         self._committed = max(self._committed, v0)
         if v1 <= v0:
             return []
-        if not self.allow_rewrites:
-            rewriters = [
-                v
-                for v in range(v0 + 1, v1 + 1)
-                if os.path.exists(_manifest_path(self.root, v))
-                and _read_manifest(self.root, v)["operation"] == "compact"
-            ]
-            if rewriters:
-                raise ValueError(
-                    f"snapshot_cdf range crosses compact commit(s) "
-                    f"{rewriters}; set allow_rewrites=true to stream the "
-                    "rewrite as delete+insert"
-                )
-        for v in (x for x in (v0, v1) if x):
-            if not os.path.exists(_manifest_path(self.root, v)):
-                raise ValueError(
-                    f"snapshot_cdf offset v{v} has been vacuumed; restart "
-                    "the stream with starting_version at a surviving "
-                    "manifest (or re-snapshot the consumer)"
-                )
-        m0 = _read_manifest(self.root, v0) if v0 else {"live": []}
-        m1 = _read_manifest(self.root, v1)
+        # the executor-side pyarrow read cannot apply deletion vectors
+        from ..runtime.snapshots import check_change_range
+
+        m0, m1 = check_change_range(
+            lambda v: _read_manifest(self.root, v), _existing_versions(self.root),
+            v0, v1, self.allow_rewrites, applies_dvs=False,
+        )
         frm, to = set(m0["live"]), set(m1["live"])
         parts = []
         for d in sorted(to - frm):

@@ -288,3 +288,25 @@ def test_cdf_bounded_backlog_survives_checkpointed_restart(spark, root, tmp_path
         assert len(got) > len(prev), "restarted stream failed to advance"
         prev = got
     assert {i for i, _v in prev} == set(range(1, 8))
+
+
+def test_cdf_stream_refuses_deletion_vector_ranges(spark, root, tmp_path):
+    """The executor-side read cannot apply deletion vectors, so the stream
+    refuses a range crossing a ``delete_dv`` commit (it would emit the
+    deleted row as an insert) and a range removing a dir that a deletion
+    vector live at the start version targets (it would emit the deleted
+    row as a delete).  The batch ``changes()`` applies endpoint DVs, so it
+    serves the second range exactly."""
+    spark.dataSource.register(SnapshotChangeFeedDataSource)
+    t = SnapshotTable(spark, root)
+    t.create(_df(spark, [(1, "a", "x"), (2, "b", "x"), (3, "c", "x")]), ["p"])
+    t.delete_where_dv([("id", "=", 2)])
+    assert sorted(r.id for r in t.read().collect()) == [1, 3]
+    with pytest.raises(Exception, match="compact"):
+        _drain(spark, root, tmp_path / "o1", tmp_path / "c1", starting_version=0)
+
+    t.overwrite_partitions(_df(spark, [(4, "d", "x")]))
+    assert {(r.id, r._change_type) for r in t.changes(2, 3).collect()} == {
+        (1, "delete"), (3, "delete"), (4, "insert")}
+    with pytest.raises(Exception, match="compact"):
+        _drain(spark, root, tmp_path / "o2", tmp_path / "c2", starting_version=2)

@@ -170,3 +170,28 @@ def test_tools_keep_no_private_job_counter_or_steal_reader():
                 if any(b in line for b in banned):
                     hits.append(f"tools/{fname}:{no}: {line.strip()}")
     assert not hits, "private measurement code in tools/:\n" + "\n".join(hits)
+
+
+def test_snapshot_layer_keeps_no_legacy_manifest_fallback():
+    """One manifest format: ``SnapshotTable.manifest()`` refuses a
+    manifest without its per-stream, row and byte maps, so no code keeps
+    the streams sidecar or walks the filesystem for sizes."""
+    import os
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "easy_sql_spark",
+    )
+    banned = ("_STREAMS_SIDECAR", "_streams_carry", "getContentSummary")
+    hits = []
+    for cur, _dirs, files in os.walk(root):
+        for fname in sorted(files):
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(cur, fname)
+            with open(path, encoding="utf-8") as f:
+                for no, line in enumerate(f, 1):
+                    if any(b in line for b in banned):
+                        rel = os.path.relpath(path, root)
+                        hits.append(f"{rel}:{no}: {line.strip()}")
+    assert not hits, "legacy-manifest fallbacks:\n" + "\n".join(hits)

@@ -6,6 +6,7 @@ The reference reaches these semantics through Hudi sinks
 over plain parquet — see runtime/snapshots.py for the design."""
 
 import shutil
+from decimal import Decimal
 
 import pytest
 
@@ -483,27 +484,43 @@ def test_index_bytes_is_pure_manifest_metadata(spark, root):
     assert set(m["bytes"]) == set(m["live"])
     assert all(b > 0 for b in m["bytes"].values())
 
-    idx2 = MinHashDedupIndex(spark, root)  # fresh instance: cold memo
-    idx2._walk_bytes = lambda dirs: (_ for _ in ()).throw(
-        AssertionError(f"FS walk on a warm table: {dirs}")
-    )
-    total = idx2._index_bytes()
+    # fresh instance (cold memo) over unreadable data: the size is
+    # answered from the manifest alone
+    idx2 = MinHashDedupIndex(spark, root)
+    data = f"{root}/data"
+    shutil.move(data, data + ".hidden")
+    try:
+        total = idx2._index_bytes()
+    finally:
+        shutil.move(data + ".hidden", data)
     assert total == sum(m["bytes"].values()) > 0
 
-    # legacy manifest (no byte totals): falls back to the walk, once
-    legacy = dict(m)
-    legacy.pop("bytes")
-    idx3 = MinHashDedupIndex(spark, root)
-    idx3.table.manifest = lambda v: legacy
-    walked = []
-    real_walk = MinHashDedupIndex._walk_bytes
-    idx3._walk_bytes = lambda dirs: walked.append(list(dirs)) or real_walk(
-        idx3, dirs
+
+def test_dedup_index_over_shallow_clone(spark, root):
+    """A shallow clone carries the per-dir byte totals, so a dedup index
+    over it sizes itself from the manifest (the clone's live dirs sit
+    under the SOURCE's data root) and probes the source's bands."""
+    from easy_sql_spark.operators.dedup_index import MinHashDedupIndex
+
+    src = MinHashDedupIndex(spark, root)
+    src.ingest(
+        spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog")],
+            "doc_id long, text string",
+        )
     )
-    assert idx3._index_bytes() == total
-    assert walked == [m["live"]]
-    idx3._index_bytes()  # memoized: no second walk
-    assert len(walked) == 1
+    clone = src.table.clone_to(root + "_clone")
+    idx = MinHashDedupIndex(spark, clone.root)
+    admitted = idx.ingest(
+        spark.createDataFrame(
+            [(2, "the quick brown fox jumps over the lazy dog"),
+             (3, "completely novel content never seen before today")],
+            "doc_id long, text string",
+        )
+    )
+    assert {r.doc_id for r in admitted.collect()} == {3}
+    assert clone.manifest(1)["bytes"] == src.table.manifest(1)["bytes"]
+    assert src.table.latest_version() == 1  # the source is untouched
 
 
 def test_compact_collapses_commit_dirs(spark, root):
@@ -655,33 +672,6 @@ def test_vacuum_preserves_streaming_replay_protection(spark, root):
     assert t.commit_batch(3, _df(spark, [(99, "dup")]), stream_key="s") is None
     assert t.commit_batch(4, _df(spark, [(14, "y")]), stream_key="s") is not None
     assert sorted(r.id for r in t.read().collect()) == [1, 11, 12, 13, 14]
-
-
-def test_vacuum_sidecar_carries_legacy_batch_state(spark, root):
-    """A pre-upgrade table whose manifests lack the cumulative streams
-    map: vacuum parks the doomed manifests' batch ids in the sidecar and
-    replay protection still holds."""
-    import json as _json
-    import os
-
-    t = SnapshotTable(spark, root)
-    t.overwrite(_df(spark, [(1, "a")]), extra={"batch_id": 7, "stream_key": "s"})
-    t.append(_df(spark, [(2, "b")]))
-    # simulate legacy manifests: strip the streams map
-    mdir = os.path.join(root, "_manifests")
-    for n in sorted(os.listdir(mdir)):
-        if not (n.startswith("v") and n.endswith(".json")):
-            continue  # hadoop .crc sidecars, ts probes
-        p = os.path.join(mdir, n)
-        os.remove(os.path.join(mdir, f".{n}.crc")) if os.path.exists(
-            os.path.join(mdir, f".{n}.crc")) else None
-        m = _json.loads(open(p).read())
-        m.pop("streams", None)
-        open(p, "w").write(_json.dumps(m))
-    t.vacuum(retain_versions=1, min_age_seconds=0)
-    assert t.last_committed_batch("s") == 7
-    assert t.commit_batch(7, _df(spark, [(9, "dup")]), stream_key="s") is None
-    assert t.commit_batch(8, _df(spark, [(3, "c")]), stream_key="s") is not None
 
 
 def test_vacuum_spares_young_unreferenced_commit_dirs(spark, root):
@@ -1142,16 +1132,6 @@ def test_row_count_metadata_only(spark, root):
     finally:
         shutil.move(data + ".hidden", data)
 
-    # legacy manifest without per-dir rows falls back to one scan
-    import json as _json
-
-    p = t._manifest_path(t.latest_version())
-    m = _json.loads(t.fs.read_bytes(p))
-    m.pop("rows")
-    t.fs.delete(p)
-    t.fs.create_atomic(p, _json.dumps(m).encode())
-    assert t.row_count() == 24
-
 
 def test_shallow_clone_independence_and_materialize(spark, root):
     t = SnapshotTable(spark, root)
@@ -1338,8 +1318,7 @@ def test_streaming_commit_batch_enforces_constraints(spark, root, tmp_path):
 def test_null_count_stats_pruning(spark, root):
     """IS NULL / IS NOT NULL dir pruning on the manifest's per-dir null
     counts: the dir that provably cannot match is never scanned —
-    proven by corrupting its files; legacy 2-element stats entries
-    (no null count) stay readable and are never pruned on null ops."""
+    proven by corrupting its files."""
     t = SnapshotTable(spark, root)
     t.create(
         spark.range(10).selectExpr("id", "cast(id as string) v"),
@@ -1378,27 +1357,6 @@ def test_null_count_stats_pruning(spark, root):
                 f.write(b"broken")
     got2 = {r.id for r in t2.read(where=[("v", "is_null", None)]).collect()}
     assert got2 == {10, 11, 12, 13, 14}
-
-    # legacy manifests (2-element entries): null ops keep every dir
-    import json as _json
-
-    p = t2._manifest_path(t2.latest_version())
-    legacy = _json.loads(t2.fs.read_bytes(p))
-    legacy["stats"] = {
-        d: {c: e[:2] for c, e in cols.items()}
-        for d, cols in legacy["stats"].items()
-    }
-    t2.fs.delete(p)
-    t2.fs.create_atomic(p, _json.dumps(legacy).encode())
-    live = [
-        d
-        for d in legacy["live"]
-        if SnapshotTable._dir_survives(
-            legacy["stats"].get(d), [("v", "is_null", None)],
-            (legacy.get("rows") or {}).get(d),
-        )
-    ]
-    assert sorted(live) == sorted(legacy["live"])
 
 
 def test_deletion_vector_delete_end_to_end(spark, root):
@@ -1507,3 +1465,120 @@ def test_deletion_vector_vacuum_protects_referenced_dv(spark, root):
     # clone carries the DV (external-resolved) and reads identically
     c = t.clone_to(root + "_c")
     assert sorted(r.id for r in c.read().collect()) == list(range(40))
+
+
+@pytest.mark.parametrize("key", ["streams", "rows", "bytes"])
+def test_manifest_lacking_a_required_key_is_refused(spark, root, key):
+    """One manifest format: a manifest without ``streams``, ``rows`` or
+    ``bytes`` is refused by every reader with an error naming the
+    version and the key — no fallback guesses the missing state."""
+    import json as _json
+
+    t = SnapshotTable(spark, root)
+    t.create(_df(spark, [(1, "a")]))
+    p = t._manifest_path(1)
+    m = _json.loads(t.fs.read_bytes(p))
+    del m[key]
+    t.fs.delete(p)
+    t.fs.create_atomic(p, _json.dumps(m).encode())
+    for call in (
+        t.read,
+        lambda: t.append(_df(spark, [(2, "b")])),
+        t.last_committed_batch,
+    ):
+        with pytest.raises(ValueError, match=rf"v1 .*\['{key}'\]"):
+            call()
+
+
+def test_vacuum_refuses_to_drop_the_latest_manifest(spark, root):
+    t = SnapshotTable(spark, root)
+    t.create(_df(spark, [(1, "a")]))
+    with pytest.raises(ValueError, match="retain_versions"):
+        t.vacuum(retain_versions=0, min_age_seconds=0)
+    assert t.existing_versions() == [1]
+
+
+def test_scan_stats_path_records_empty_dirs(spark, root, monkeypatch):
+    """With footers unusable (the distributed scan path), an empty append
+    still records its dir: 0 rows and empty bounds, exactly what the
+    footer path records, so ``row_count()`` stays metadata-only."""
+    empty = spark.range(0).selectExpr("id", "cast(id as string) v")
+    ref = SnapshotTable(spark, root + "_footer")
+    ref.create(spark.range(3).selectExpr("id", "cast(id as string) v"), stats_cols=["id"])
+    ref.append(empty)
+    want = ref.manifest(2)
+
+    monkeypatch.setattr(SnapshotTable, "_footer_stats", lambda *a, **k: None)
+    t = SnapshotTable(spark, root)
+    t.create(spark.range(3).selectExpr("id", "cast(id as string) v"), stats_cols=["id"])
+    t.append(empty)
+    m = t.manifest(2)
+    (new,) = m["added"]
+    assert len(m["live"]) == 2 and set(m["rows"]) == set(m["live"])
+    assert m["rows"][new] == want["rows"][want["added"][0]] == 0
+    assert m["stats"][new] == want["stats"][want["added"][0]]
+
+    data = f"{root}/data"
+    shutil.move(data, data + ".hidden")
+    try:
+        assert t.row_count() == 3
+    finally:
+        shutil.move(data + ".hidden", data)
+
+
+_NAN = float("nan")
+# (iceberg type, min, max, op, value, a file with these bounds survives)
+_BOUND_CASES = [
+    ("long", 1, 10, "=", 11, False),
+    ("long", 1, 10, "=", 5, True),
+    ("long", 1, 10, "<", 1, False),
+    ("long", 1, 10, "<=", 1, True),
+    ("long", 1, 10, ">", 10, False),
+    ("long", 1, 10, ">=", 10, True),
+    ("long", 1, 10, "in", [0, 11], False),
+    ("long", 1, 10, "in", [0, 5], True),
+    ("long", 1, 10, "=", "5", True),  # incomparable types never prune
+    ("double", 1.0, 2.0, "=", Decimal("3.5"), False),
+    ("double", 0.0, _NAN, ">", 4.5, True),  # NaN max: no upper bound
+    ("double", 0.0, _NAN, "<", -1.0, False),  # ... but the min prunes
+    ("string", "b", "d", "=", "a", False),
+    ("string", "b", "d", "in", ["c"], True),
+]
+
+
+@pytest.mark.parametrize("case", _BOUND_CASES, ids=lambda c: f"{c[0]}{c[3]}{c[4]}")
+def test_one_bounds_rule_for_snapshot_delta_iceberg(case):
+    """The snapshot, Delta and Iceberg readers skip on the same min/max
+    rule; each only decodes its own bound encoding."""
+    import json as _json
+
+    from easy_sql_spark.sources.delta_log import _add_survives
+    from easy_sql_spark.sources.iceberg_meta import _encode_bound, _file_survives
+
+    ice_type, mn, mx, op, val, survives = case
+    where = [("x", op, val)]
+    assert SnapshotTable._dir_survives({"x": [mn, mx, 0]}, where) == survives
+    stats = _json.dumps({"minValues": {"x": mn}, "maxValues": {"x": mx}})
+    assert _add_survives({"stats": stats}, where) == survives
+    entry = {
+        "lower_bounds": {"1": _encode_bound(ice_type, mn)},
+        "upper_bounds": {"1": _encode_bound(ice_type, mx)},
+    }
+    assert _file_survives(entry, where, {"x": (1, ice_type)}) == survives
+
+
+def test_iceberg_export_nan_upper_bound_keeps_files(spark, root):
+    """A double stats column's footer max is widened to NaN; exported as
+    the Iceberg upper bound it must read as unknown, not prune the file."""
+    from easy_sql_spark.sources.iceberg_meta import (
+        export_snapshot_to_iceberg,
+        read_iceberg,
+    )
+
+    t = SnapshotTable(spark, root)
+    t.create(spark.range(10).selectExpr("cast(id as double) x"), stats_cols=["x"])
+    where = [("x", ">", 4.5)]
+    assert t.read(where=where).count() == 10
+    export_snapshot_to_iceberg(t)
+    got = read_iceberg(spark, t.root, where=where)
+    assert sorted(r.x for r in got.where("x > 4.5").collect()) == [5.0, 6.0, 7.0, 8.0, 9.0]
