@@ -28,32 +28,44 @@ Trino) prunes without knowing the layout exists.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..datasets import input_file_lengths
 
 
-def _bucket_tree(x: F.Column, boundaries: list[float], offset: int) -> F.Column:
+def _double_sql(v: float) -> str:
+    """SQL literal for the double ``v``, bit-exact: ``repr`` is the
+    shortest string that round-trips, and the ``D`` suffix keeps Spark
+    from parsing it as a decimal."""
+    v = float(v)
+    return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+
+
+def _bucket_tree(x: str, boundaries: list[float], offset: int) -> str:
     """Balanced CASE-WHEN binary search over sorted boundary literals —
     log2(n) comparisons per row inside whole-stage codegen, where the
     array-filter formulation (a higher-order function) runs interpreted
-    and was measured ~10× slower on the sf0.1 write bench."""
+    and was measured ~10× slower on the sf0.1 write bench.  Built as
+    SQL text: one parse per column instead of a Column-API call per
+    node."""
     if not boundaries:
-        return F.lit(offset)
+        return str(offset)
     mid = len(boundaries) // 2
-    return F.when(
-        x < F.lit(float(boundaries[mid])),
-        _bucket_tree(x, boundaries[:mid], offset),
-    ).otherwise(_bucket_tree(x, boundaries[mid + 1 :], offset + mid + 1))
+    return (
+        f"CASE WHEN {x} < {_double_sql(boundaries[mid])} "
+        f"THEN {_bucket_tree(x, boundaries[:mid], offset)} "
+        f"ELSE {_bucket_tree(x, boundaries[mid + 1 :], offset + mid + 1)} END"
+    )
 
 
 def _bucket_expr(col: str, boundaries: list[float]) -> F.Column:
     """Rank-bucket index of ``col`` against sorted boundary literals:
     count of boundaries <= value (NULLs sink to bucket 0)."""
-    x = F.col(col).cast("double")
-    return F.when(x.isNull(), F.lit(0)).otherwise(
-        _bucket_tree(x, sorted(boundaries), 0)
-    )
+    x = "CAST(`{}` AS DOUBLE)".format(col.replace("`", "``"))
+    tree = _bucket_tree(x, sorted(boundaries), 0)
+    return F.expr(f"CASE WHEN {x} IS NULL THEN 0 ELSE {tree} END")
 
 
 #: the boundary probe samples large inputs down to roughly this many

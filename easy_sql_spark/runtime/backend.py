@@ -24,6 +24,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..operators.iterate import cut_lineage
 from .snapshots import latest_per_key
@@ -461,15 +462,19 @@ class SparkBackend:
         incoming rows ∪ partitions holding a matched key (keys may move
         between partitions; discovering those costs one column-pruned scan
         of (merge keys + partition cols) semi-joined against the batch's
-        distinct keys, the parquet-level analogue of Hudi's index lookup).
-        Under ``partitionOverwriteMode=dynamic`` the final insert then
-        rewrites exactly the touched partitions; a 100 TB table with a
-        1-partition batch reads and writes one partition, not the table.
+        keys, the parquet-level analogue of Hudi's index lookup).  Under
+        ``partitionOverwriteMode=dynamic`` the final insert then rewrites
+        exactly the touched partitions; a 100 TB table with a 1-partition
+        batch reads and writes one partition, not the table.  The scoped
+        target streams past the batch's keys in a (broadcast) anti-join,
+        so a NULL key never matches a target row.
 
         Incoming batches must be unique per merge key; ``precombine``
         (a column name) resolves duplicates by keeping the row with the
         greatest precombine value (ties broken by a row hash) — the Hudi
-        precombine-field contract.  Without it, duplicate keys raise.
+        precombine-field contract.  Without it, a per-key count over the
+        written batch rows raises inside the eager cut, so a batch with
+        duplicate keys fails before anything is written.
         """
         target = self.spark.table(table.name)
         for k in merge_keys:
@@ -478,32 +483,20 @@ class SparkBackend:
                     f"merge key {k!r} missing from "
                     f"{'target' if k not in target.columns else 'source'}"
                 )
-        incoming = df.select(*target.columns)
         keys = list(merge_keys)
-
+        batch = df.select(*target.columns)
+        dup_msg = (
+            f"upsert batch has duplicate rows per merge key {keys}; "
+            "set __upsert_precombine__ to resolve them"
+        )
         if precombine:
-            incoming = latest_per_key(incoming, keys, precombine)
-            inc_keys = incoming.select(*keys).distinct()
+            incoming = latest_per_key(batch, keys, precombine)
         else:
-            # ONE key-grouped pass serves both the duplicate guard and
-            # the key set the scoping/anti joins probe: the old shape
-            # paid a full groupBy for the guard and then re-derived
-            # distinct keys inside every consumer.  Lazy checkpoint +
-            # full-scan count as the materializing action (the
-            # components.py idiom — a limit-style action could leave
-            # checkpoint partitions unmaterialized).
-            key_counts = (
-                incoming.groupBy(*keys)
-                .agg(F.count(F.lit(1)).alias("__kn"))
-                .transform(cut_lineage, eager=False)
-            )
-            n_dup = key_counts.where(F.col("__kn") > 1).count()
-            if n_dup:
-                raise ValueError(
-                    f"upsert batch has duplicate rows per merge key {keys}; "
-                    "set __upsert_precombine__ to resolve them"
-                )
-            inc_keys = key_counts.select(*keys)
+            dup = F.count(F.lit(1)).over(Window.partitionBy(*keys)) > 1
+            k0 = F.when(dup, F.raise_error(dup_msg)).otherwise(F.col(keys[0]))
+            incoming = batch.withColumn(keys[0], k0)
+        # probed by semi/anti joins only, so duplicates need no distinct
+        inc_keys = batch.select(*keys)
         scoped = self._scope_touched_partitions(
             target, incoming, inc_keys, keys, table.partition_cols()
         )
@@ -637,7 +630,16 @@ class SparkBackend:
           re-running the same batch is idempotent and history never
           churns on no-change loads;
         - historical (non-current) rows are never read back for matching
-          and survive untouched.
+          and survive untouched;
+        - a key with any NULL part never matches: its latest batch row
+          inserts and its current target rows stay.
+
+        Plan: ONE ``Window.partitionBy(*keys)`` over the scoped target's
+        current rows and the raw batch, so one shuffle on the keys.  Its
+        row 1 is the batch row ``latest_per_key`` keeps; the window hands
+        that row's start and hash to the key's current row (close or
+        stay) and the current row's hash to it (insert or not; a key has
+        at most one current row).  Historical rows skip the window.
 
         Attribute comparison is a null-safe md5 over every non-key,
         non-metadata column.  Batches are assumed to arrive in effective-
@@ -662,77 +664,72 @@ class SparkBackend:
                     "through an scd2 save with __create_output_table__"
                 )
         keys = list(merge_keys)
-        incoming = df.select(*target.columns)
-
-        # collapse intra-batch duplicates to the latest version per key
-        incoming = latest_per_key(incoming, keys, start)
+        batch = df.select(*target.columns)
 
         attr_cols = [c for c in target.columns if c not in meta and c not in keys]
         part_cols = table.partition_cols()
         attr_cols = [c for c in attr_cols if c not in part_cols] + [
             c for c in attr_cols if c in part_cols
         ]
-
-        def attr_hash(prefix_cols: list[str]) -> F.Column:
-            return F.md5(
-                F.concat_ws(
-                    "\x1f",
-                    *[
-                        F.coalesce(F.col(c).cast("string"), F.lit("\x00<null>"))
-                        for c in prefix_cols
-                    ],
-                )
+        attr_hash = F.md5(
+            F.concat_ws(
+                "\x1f",
+                *[
+                    F.coalesce(F.col(c).cast("string"), F.lit("\x00<null>"))
+                    for c in attr_cols
+                ],
             )
+        )
 
-        inc_keys = incoming.select(*keys).distinct()
         scoped = self._scope_touched_partitions(
-            target, incoming, inc_keys, keys, part_cols
+            target, batch, batch.select(*keys), keys, part_cols
         )
-        cur_rows = scoped.where(F.coalesce(F.col(cur), F.lit(False)))
-        hist_rows = scoped.where(~F.coalesce(F.col(cur), F.lit(False)))
+        is_cur = F.coalesce(F.col(cur), F.lit(False))
+        hist_rows = scoped.where(~is_cur)
 
-        inc_info = incoming.select(
-            *keys,
-            F.col(start).alias("__new_start"),
-            attr_hash(attr_cols).alias("__new_hash"),
+        side = F.col("__side")
+        # the row order of latest_per_key, behind every batch row
+        row_md5 = F.md5(
+            F.concat_ws("\x00", *[F.col(c).cast("string") for c in target.columns])
         )
-        j = cur_rows.withColumn("__cur_hash", attr_hash(attr_cols)).join(
-            inc_info, keys, "left"
+        by_key = Window.partitionBy(*keys).orderBy(
+            side.desc(), F.col(start).desc(), row_md5
         )
-        changed = F.col("__new_hash").isNotNull() & (
-            F.col("__new_hash") != F.col("__cur_hash")
+        whole_key = by_key.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
         )
-        closed = j.where(changed).select(
-            *[
-                F.col("__new_start").alias(c)
-                if c == end
-                else F.lit(False).alias(c)
-                if c == cur
-                else F.col(c)
-                for c in target.columns
-            ]
+        h = F.col("__hash")
+        ranked = (
+            scoped.where(is_cur)
+            .withColumn("__side", F.lit(0))
+            .unionByName(batch.withColumn("__side", F.lit(1)))
+            .withColumn("__hash", attr_hash)
+            .select(
+                "*",
+                F.row_number().over(by_key).alias("__rn"),
+                F.first(F.when(side == 1, h)).over(whole_key).alias("__new_hash"),
+                F.first(start).over(whole_key).alias("__new_start"),
+                F.max(F.when(side == 0, h)).over(whole_key).alias("__cur_hash"),
+            )
         )
-        stay = j.where(~changed).select(*target.columns)
-
+        null_key = F.lit(False)
+        for k in keys:
+            null_key = null_key | F.col(k).isNull()
+        cur_hash = F.col("__cur_hash")
+        closes = (side == 0) & ~null_key & (F.col("__new_hash") != h)
         inserts = (
-            incoming.join(
-                cur_rows.select(*keys, attr_hash(attr_cols).alias("__t_hash")),
-                keys,
-                "left",
-            )
-            .where(
-                F.col("__t_hash").isNull()
-                | (F.col("__t_hash") != attr_hash(attr_cols))
-            )
-            .drop("__t_hash")
+            (side == 1)
+            & (F.col("__rn") == 1)
+            & (null_key | cur_hash.isNull() | (cur_hash != h))
+        )
+        merged = (
+            ranked.where((side == 0) | inserts)
+            .withColumn(end, F.when(closes, F.col("__new_start")).otherwise(F.col(end)))
+            .withColumn(cur, F.when(closes, F.lit(False)).otherwise(F.col(cur)))
             .select(*target.columns)
         )
-        return (
-            hist_rows.unionByName(stay)
-            .unionByName(closed)
-            .unionByName(inserts)
-            .transform(cut_lineage, eager=True)  # target is read and overwritten
-        )
+        # target is read and overwritten
+        return cut_lineage(hist_rows.unionByName(merged), eager=True)
 
     # ------------------------------------------------------------ compaction
     def table_file_stats(self, table_name: str) -> dict[str, dict]:

@@ -1576,16 +1576,17 @@ class SnapshotTable:
         ``checks``: SQL boolean expressions every row must satisfy,
         e.g. ``["id is not null", "amount >= 0"]``.  Cost: the staged
         write plus ONE aggregate scan of the staged files (all checks
-        counted in a single pass)."""
+        counted in a single pass).  Like every staged commit, the
+        publish re-audits the staged files for CHECK constraints added
+        since the stage."""
         latest = self.latest_version()
         parent = self.manifest(latest) if latest else None
         pby = self._resolve_partition_by(parent, None)
         self._check_schema_evolution(parent, df)
-        commit, dirs = self._stage(
-            df, pby, latest + 1, (parent or {}).get("constraints")
-        )
-        staged = self._read_dirs(dirs, df.schema, pby) if dirs else df.limit(0)
-        counts = staged.agg(
+        constraints = dict((parent or {}).get("constraints") or {})
+        commit, dirs = self._stage(df, pby, latest + 1, constraints)
+        audited = self._read_dirs(dirs, df.schema, pby) if dirs else df.limit(0)
+        counts = audited.agg(
             *[
                 F.sum(
                     F.when(~F.coalesce(F.expr(c), F.lit(False)), 1).otherwise(0)
@@ -1601,7 +1602,10 @@ class SnapshotTable:
             self.fs.delete(f"{self.data_dir}/{commit}")
             raise ValueError(f"write_audit_publish rejected: {bad}")
 
+        staged = {"dirs": dirs, "constraints": constraints}
+
         def build(parent_m, version):
+            self._recheck_constraints(staged, parent_m, df.schema, pby)
             m = self._base_manifest(
                 version, parent_m, f"wap_{mode}", df, pby, extra
             )

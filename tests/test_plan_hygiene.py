@@ -195,3 +195,38 @@ def test_snapshot_layer_keeps_no_legacy_manifest_fallback():
                         rel = os.path.relpath(path, root)
                         hits.append(f"{rel}:{no}: {line.strip()}")
     assert not hits, "legacy-manifest fallbacks:\n" + "\n".join(hits)
+
+
+def test_keyed_merges_run_no_driver_action():
+    """The SCD2 and upsert merges build one plan that the eager cut
+    runs: no ``.count()``, ``.first()`` or ``.collect()`` (a DataFrame
+    action, so an extra job) inside either merge."""
+    import ast
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "easy_sql_spark",
+        "runtime",
+        "backend.py",
+    )
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    merges = {
+        node.name: node
+        for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef)
+        and node.name in ("_merge_scd2_frame", "_merge_upsert_frame")
+    }
+    assert sorted(merges) == ["_merge_scd2_frame", "_merge_upsert_frame"]
+    hits = [
+        f"{name}:{call.lineno}: .{call.func.attr}()"
+        for name, fn in merges.items()
+        for call in ast.walk(fn)
+        if isinstance(call, ast.Call)
+        and isinstance(call.func, ast.Attribute)
+        and call.func.attr in ("count", "first", "collect")
+        and not call.args
+        and not call.keywords
+    ]
+    assert not hits, "driver actions inside the keyed merges:\n" + "\n".join(hits)

@@ -8,6 +8,7 @@ fail before any benchmark notices.
 
 import contextlib
 import io
+import uuid
 
 import pytest
 
@@ -400,3 +401,62 @@ def test_runtime_bloom_filter_prunes_big_probe_join(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
         spark.conf.set(thr, old_thr)
+
+
+def _save_jobs(spark, save) -> int:
+    """Spark jobs launched by ``save()``, counted under a job group."""
+    sc = spark.sparkContext
+    group = f"save-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_keyed_merges_run_in_few_jobs(spark):
+    """A keyed merge into an existing table costs its eager cut plus the
+    insert.  SCD2 shuffles the current rows and the batch once for one
+    key-partitioned window (7 jobs when it collapsed the batch and then
+    ran two joins); the upsert's duplicate guard raises inside the cut
+    (6 jobs when the guard ran its own count)."""
+    from easy_sql_spark.runtime.backend import SparkBackend, TableMeta
+
+    backend = SparkBackend(spark)
+    spark.sql("create database if not exists mj")
+    dim, fact = TableMeta.parse("mj.dim"), TableMeta.parse("mj.fact")
+    names = (dim.name, fact.name, "mj.src")
+    try:
+        for name in names:
+            spark.sql(f"drop table if exists {name}")
+        spark.range(50).write.saveAsTable("mj.src")
+
+        def batch(ts: int, mod: int):
+            return spark.table("mj.src").selectExpr(
+                "id as k", f"cast(id % {mod} as string) as val", f"{ts} as ts"
+            )
+
+        scd2 = {"ts": "ts"}
+        backend.save_table(batch(1, 3), dim, "scd2", True, ["k"], scd2=scd2)
+        jobs = _save_jobs(
+            spark,
+            lambda: backend.save_table(
+                batch(2, 4), dim, "scd2", False, ["k"], scd2=scd2
+            ),
+        )
+        assert jobs <= 3, jobs
+        changed = sum(1 for k in range(50) if k % 3 != k % 4)
+        assert spark.table(dim.name).count() == 50 + changed
+
+        backend.save_table(batch(1, 3), fact, "upsert", True, ["k"])
+        jobs = _save_jobs(
+            spark,
+            lambda: backend.save_table(batch(2, 4), fact, "upsert", False, ["k"]),
+        )
+        assert jobs <= 4, jobs
+        assert {r.val for r in spark.table(fact.name).collect()} == {"0", "1", "2", "3"}
+    finally:
+        for name in names:
+            spark.sql(f"drop table if exists {name}")

@@ -536,6 +536,56 @@ select * from (values (1, 'x', 10), (1, 'y', 20), (2, 'z', 5)) as v(id, val, ts)
     assert rows == {(1, "y", 20), (2, "z", 5)}
 
 
+def test_output_upsert_null_keys_never_match(spark):
+    """A NULL merge key matches no target row: the target's NULL-key row
+    survives and the batch's NULL-key row inserts next to it."""
+    etl = """-- prepare-sql: drop database if exists unull cascade
+-- prepare-sql: create database unull
+
+-- target=variables
+select true as __create_output_table__, 'upsert' as __save_mode__,
+       'id' as __merge_keys__
+
+-- target=output.unull.t
+select * from (values (1, 'a'), (cast(null as int), 'n1')) as v(id, val)
+
+-- target=output.unull.t
+select * from (values (1, 'b'), (cast(null as int), 'n2')) as v(id, val)
+"""
+    SqlProcessor(spark, etl, logger=lambda m: None).run()
+    rows = {(r.id, r.val) for r in spark.table("unull.t").collect()}
+    assert rows == {(1, "b"), (None, "n1"), (None, "n2")}
+
+
+def test_output_upsert_rejected_duplicates_write_nothing(spark):
+    """The duplicate-key guard fails the merge before the insert: the
+    target keeps its rows and its files."""
+    setup = """-- prepare-sql: drop database if exists urej cascade
+-- prepare-sql: create database urej
+
+-- target=variables
+select true as __create_output_table__, 'upsert' as __save_mode__,
+       'id' as __merge_keys__
+
+-- target=output.urej.t
+select * from (values (1, 'a'), (2, 'b')) as v(id, val)
+"""
+    SqlProcessor(spark, setup, logger=lambda m: None).run()
+    before = sorted(map(tuple, spark.table("urej.t").collect()))
+    files = sorted(spark.table("urej.t").inputFiles())
+    dup = """-- target=variables
+select 'upsert' as __save_mode__, 'id' as __merge_keys__
+
+-- target=output.urej.t
+select * from (values (2, 'x'), (2, 'y'), (3, 'c')) as v(id, val)
+"""
+    with pytest.raises(Exception, match="duplicate rows per merge key"):
+        SqlProcessor(spark, dup, logger=lambda m: None).run()
+    spark.sql("refresh table urej.t")
+    assert sorted(map(tuple, spark.table("urej.t").collect())) == before
+    assert sorted(spark.table("urej.t").inputFiles()) == files
+
+
 def test_output_upsert_requires_merge_keys(spark):
     etl = """-- prepare-sql: drop database if exists unokey cascade
 -- prepare-sql: create database unokey
@@ -651,6 +701,44 @@ select * from (values (2, cast(null as string), 30)) as v(id, val, ts)
         for r in spark.table("scd2b.dim").collect()
     }
     assert rows == {(1, "v2", 20, True), (2, None, 30, True)}
+
+
+def test_output_scd2_null_keys_never_match(spark):
+    """A merge key with any NULL part matches no target row: its current
+    row stays open and the batch row inserts as current, even with
+    identical attributes.  Fully keyed rows merge as usual."""
+    etl = """-- prepare-sql: drop database if exists scd2n cascade
+-- prepare-sql: create database scd2n
+
+-- target=variables
+select true as __create_output_table__, 'scd2' as __save_mode__,
+       'k|r' as __merge_keys__, 'ts' as __scd2_ts__
+
+-- target=output.scd2n.dim
+select * from (values
+    (1, 'x', 'a', 1), (1, cast(null as string), 'a', 1),
+    (cast(null as int), cast(null as string), 'a', 1)
+) as v(k, r, val, ts)
+
+-- target=output.scd2n.dim
+select * from (values
+    (1, 'x', 'b', 2), (1, cast(null as string), 'b', 2),
+    (cast(null as int), cast(null as string), 'a', 2)
+) as v(k, r, val, ts)
+"""
+    SqlProcessor(spark, etl, logger=lambda m: None).run()
+    rows = {
+        (r.k, r.r, r.val, r["__start_at"], r["__end_at"], r["__is_current"])
+        for r in spark.table("scd2n.dim").collect()
+    }
+    assert rows == {
+        (1, "x", "a", 1, 2, False),
+        (1, "x", "b", 2, None, True),
+        (1, None, "a", 1, None, True),
+        (1, None, "b", 2, None, True),
+        (None, None, "a", 1, None, True),
+        (None, None, "a", 2, None, True),
+    }
 
 
 def test_output_scd2_partitioned_untouched_partitions_survive(spark):

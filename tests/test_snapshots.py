@@ -1017,6 +1017,32 @@ def test_write_audit_publish(spark, root):
         )
 
 
+def test_write_audit_publish_rechecks_constraints_added_after_stage(
+    spark, root, monkeypatch
+):
+    """A CHECK constraint that lands between the WAP stage and its
+    publish is audited over the staged files, as in every staged commit:
+    the violating batch is refused and the table is unchanged."""
+    from easy_sql_spark.runtime.snapshots import SnapshotConstraintError
+
+    t = SnapshotTable(spark, root)
+    t.create(_df(spark, [(1, "a")]))
+    stage = SnapshotTable._stage
+
+    def stage_then_race(self, *args, **kwargs):
+        out = stage(self, *args, **kwargs)
+        SnapshotTable(spark, root).add_constraint("pos", "id > 0")
+        return out
+
+    monkeypatch.setattr(SnapshotTable, "_stage", stage_then_race)
+    with pytest.raises(SnapshotConstraintError, match="pos"):
+        t.write_audit_publish(_df(spark, [(-5, "bad")]), checks=["v <> ''"])
+    monkeypatch.undo()
+    assert t.latest_version() == 2  # the constraint, no batch after it
+    assert t.manifest(2)["operation"] == "add_constraint_pos"
+    assert [r.id for r in t.read().collect()] == [1]
+
+
 def test_read_where_in_pruning(spark, root):
     t = SnapshotTable(spark, root)
     t.create(spark.sql("select 1 id, 5 k"), stats_cols=["k"])
