@@ -688,7 +688,7 @@ class SparkBackend:
         hist_rows = scoped.where(~is_cur)
 
         side = F.col("__side")
-        # the row order of latest_per_key, behind every batch row
+        # latest_per_key's order, with every batch row ahead of the current row
         row_md5 = F.md5(
             F.concat_ws("\x00", *[F.col(c).cast("string") for c in target.columns])
         )

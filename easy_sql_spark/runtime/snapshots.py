@@ -1585,8 +1585,8 @@ class SnapshotTable:
         self._check_schema_evolution(parent, df)
         constraints = dict((parent or {}).get("constraints") or {})
         commit, dirs = self._stage(df, pby, latest + 1, constraints)
-        audited = self._read_dirs(dirs, df.schema, pby) if dirs else df.limit(0)
-        counts = audited.agg(
+        staged = self._read_dirs(dirs, df.schema, pby) if dirs else df.limit(0)
+        counts = staged.agg(
             *[
                 F.sum(
                     F.when(~F.coalesce(F.expr(c), F.lit(False)), 1).otherwise(0)
@@ -1602,10 +1602,10 @@ class SnapshotTable:
             self.fs.delete(f"{self.data_dir}/{commit}")
             raise ValueError(f"write_audit_publish rejected: {bad}")
 
-        staged = {"dirs": dirs, "constraints": constraints}
-
         def build(parent_m, version):
-            self._recheck_constraints(staged, parent_m, df.schema, pby)
+            self._recheck_constraints(
+                {"dirs": dirs, "constraints": constraints}, parent_m, df.schema, pby
+            )
             m = self._base_manifest(
                 version, parent_m, f"wap_{mode}", df, pby, extra
             )
