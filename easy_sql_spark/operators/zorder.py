@@ -17,9 +17,10 @@ Pipeline (all JVM-side after one driver-side quantile probe):
 2. Per row: bucket index per column via a literal-array rank fold, then
    bit-interleave the indices into one Morton value — narrow projection,
    no shuffle, no Python.
-3. ``repartitionByRange`` on the Morton value (one range shuffle — the
-   sort-for-layout every clustering write pays) + ``sortWithinPartitions``
-   so every output file covers a compact Morton range.
+3. One hash shuffle on a token mapped from the Morton value's high
+   bits (:func:`curve_clustered` — the sort-for-layout every clustering
+   write pays, without a sampling pass) + ``sortWithinPartitions`` so
+   every output file covers a compact, contiguous Morton range.
 
 Skipping is engine-native from there: parquet stats per row group are
 tight in every z-ordered dimension, so any reader (Spark, DuckDB,
@@ -273,18 +274,17 @@ def write_zordered(
     )
 
 
-def write_curve_clustered(
+def curve_clustered(
     vdf: DataFrame,
     value_col: str,
-    path: str,
     n_files: int,
     total_bits: int,
-) -> None:
-    """Shared single-shuffle clustered write for curve-valued frames
-    (Morton here, Hilbert in operators/hilbert.py): partition by the
-    token-mapped high-bit prefix of ``value_col``, sort within
-    partitions on the full value, drop the helper column.  See
-    :func:`write_zordered` for why this replaces checkpoint +
+) -> DataFrame:
+    """Single-shuffle clustered layout for curve-valued frames (Morton
+    here, Hilbert in operators/hilbert.py): partition by the
+    token-mapped high-bit prefix of ``value_col`` (``total_bits`` wide),
+    sort within partitions on the full value, drop the helper column.
+    See :func:`write_zordered` for why this replaces checkpoint +
     ``repartitionByRange`` exactly."""
     group_bits = min(total_bits, max(1, (n_files - 1).bit_length()))
     n_groups = 1 << group_bits
@@ -300,9 +300,17 @@ def write_curve_clustered(
             F.array(*[F.lit(t) for t in tokens]), grp.cast("int") + 1
         )
         part = vdf.repartition(n_files, token)
-    (
-        part.sortWithinPartitions(value_col)
-        .drop(value_col)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    return part.sortWithinPartitions(value_col).drop(value_col)
+
+
+def write_curve_clustered(
+    vdf: DataFrame,
+    value_col: str,
+    path: str,
+    n_files: int,
+    total_bits: int,
+) -> None:
+    """Write :func:`curve_clustered`'s layout of ``vdf`` as parquet."""
+    curve_clustered(vdf, value_col, n_files, total_bits).write.mode(
+        "overwrite"
+    ).parquet(path)

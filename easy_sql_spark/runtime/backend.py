@@ -7,7 +7,8 @@ Re-expresses the reference's Spark backend behaviors
 - partition-aware saves: static/dynamic ``INSERT OVERWRITE`` with
   ``spark.sql.sources.partitionOverwriteMode=dynamic`` instead of the
   Hive-workaround the reference carries for Spark 2 (spark.py:267-293)
-- auto table creation as parquet CTAS (spark.py:158-185)
+- auto table creation as a metadata-only parquet CREATE TABLE
+  (spark.py:158-185)
 - column alignment + schema verification (spark.py:187-220, 271-279)
 - read-write-same-table lineage cut via ``cut_lineage`` (spark.py:295-309)
 - temp-view lifecycle cleanup (spark.py:116-121, 324-328)
@@ -18,16 +19,43 @@ plan; nothing here collects data to the driver.
 
 from __future__ import annotations
 
-import uuid
 from dataclasses import dataclass, field
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from ..operators.iterate import cut_lineage
 from .snapshots import latest_per_key
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and map value nullable, at every
+    nesting level — the schema a CTAS stores."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 @dataclass
@@ -218,27 +246,30 @@ class SparkBackend:
             ]
 
     def create_table_like_query(self, df: DataFrame, table: TableMeta) -> None:
-        """CTAS an empty parquet table matching the query schema
-        (+ partition columns), reference spark.py:158-185."""
+        """Create an empty parquet table with the query's schema, partition
+        columns last (reference spark.py:158-185), by a metadata-only
+        ``CREATE TABLE (<ddl>)`` that runs no job.  Every field is made
+        nullable at every nesting level, the schema a CTAS would store."""
         part_cols = table.partition_cols()
-        view = f"__schema_probe_{uuid.uuid4().hex}"
-        df.limit(0).createOrReplaceTempView(view)
-        cols = [c for c in df.columns if c not in part_cols] + part_cols
-        col_list = ", ".join(f"`{c}`" for c in cols)
+        fields = {f.name: f for f in _nullable(df.schema).fields}
+        schema = StructType(
+            [f for c, f in fields.items() if c not in part_cols]
+            + [fields[c] for c in part_cols]
+        )
         partitioned = (
-            f" PARTITIONED BY ({', '.join(f'`{c}`' for c in part_cols)})"
+            f" PARTITIONED BY ({', '.join(_quote(c) for c in part_cols)})"
             if part_cols
             else ""
         )
         try:
             self.spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {table.name} USING PARQUET"
-                f"{partitioned} AS SELECT {col_list} FROM {view} WHERE 1=0"
+                f"CREATE TABLE IF NOT EXISTS {table.name} ({schema.toDDL()}) "
+                f"USING PARQUET{partitioned}"
             )
         except Exception as e:
-            # IF NOT EXISTS checks the catalog, but CTAS validates the
-            # LOCATION separately — a creator that lost a create race (the
-            # winner registered the table between our check and our
+            # IF NOT EXISTS checks the catalog, but the create validates
+            # the LOCATION separately — a creator that lost a create race
+            # (the winner registered the table between our check and our
             # validation) surfaces LOCATION_ALREADY_EXISTS instead of the
             # intended no-op.  Honor the no-op when the table IS registered
             # by now; an unregistered stale directory stays a hard error
@@ -249,8 +280,6 @@ class SparkBackend:
                 pass
             else:
                 raise
-        finally:
-            self.spark.catalog.dropTempView(view)
 
     def evolve_schema(self, df: DataFrame, table: TableMeta) -> None:
         """Schema evolution (``__merge_schema__``): columns present in the
@@ -329,7 +358,7 @@ class SparkBackend:
         ``repartition(cols)`` can do neither).  Measured 2.2× on the
         sf0.1 partitioned-overwrite bench; a no-op hint when AQE is off."""
         target_cols = [c for c, _t in self.table_columns(table.name)[0]]
-        aligned = df.select(*[F.col(c) for c in target_cols])
+        aligned = df.select(*[F.col(_quote(c)) for c in target_cols])
         part_cols = table.partition_cols()
         if part_cols:
             aligned = aligned.hint("rebalance", *part_cols)
@@ -541,14 +570,22 @@ class SparkBackend:
         skipping; see operators/zorder.py and operators/hilbert.py —
         ``hilbert`` measures tighter boxes at the same write cost in the
         2-3-column regime, SCALE.md).  Replaces the AQE rebalance
-        ordering — for partitioned targets the range partitioning leads
-        with the partition columns, so dynamic overwrite still writes
-        one coherent file run per partition while rows WITHIN each
-        partition cluster on the curve position."""
+        ordering.
+
+        Unpartitioned targets take ``zorder.curve_clustered`` — the layout
+        ``write_zordered`` writes: one hash shuffle on the curve prefix,
+        no sampling pass and no cut.  Partitioned targets take a range
+        layout led by the partition columns, so dynamic overwrite still
+        writes one coherent file run per partition while rows WITHIN each
+        partition cluster on the curve position (a prefix hash would
+        spread each partition value over up to n files)."""
+        from ..operators.zorder import curve_clustered, zorder_value
+
+        bits = 6
         if curve == "hilbert" and len(zorder_cols) <= 2:
             from ..operators.hilbert import hilbert_value
 
-            zdf = hilbert_value(aligned, zorder_cols).withColumnRenamed(
+            zdf = hilbert_value(aligned, zorder_cols, bits).withColumnRenamed(
                 "__hvalue", "__zvalue"
             )
         elif curve not in ("zorder", "hilbert"):
@@ -556,18 +593,18 @@ class SparkBackend:
         else:
             # hilbert above 2 cols would blow the LUT at default bits;
             # morton handles any dimension count
-            from ..operators.zorder import zorder_value
-
-            zdf = zorder_value(aligned, zorder_cols)
+            zdf = zorder_value(aligned, zorder_cols, bits)
+        # floor the file count: with very few z-ranges a single range
+        # regularly crosses a Morton quadrant boundary and its min/max
+        # box degenerates to full-width in one dimension — 16+ ranges
+        # keep the boxes compact even on small clusters
+        n = max(self.spark.sparkContext.defaultParallelism, 16)
+        part_cols = table.partition_cols()
+        if not part_cols:
+            return curve_clustered(zdf, "__zvalue", n, bits * len(zorder_cols))
         # the range-bound sampling job and the write both read the curve
         # values: compute them once
         zdf = cut_lineage(zdf, eager=True)
-        part_cols = table.partition_cols()
-        # floor the range-partition count: with very few z-ranges a single
-        # range regularly crosses a Morton quadrant boundary and its
-        # min/max box degenerates to full-width in one dimension — 16+
-        # ranges keep the boxes compact even on small clusters
-        n = max(self.spark.sparkContext.defaultParallelism, 16)
         range_cols = [F.col(c) for c in part_cols] + [F.col("__zvalue")]
         return (
             zdf.repartitionByRange(n, *range_cols)
@@ -768,7 +805,8 @@ class SparkBackend:
         dynamic-partition INSERT OVERWRITE as every output step, with the
         AQE advisory partition size pinned to ``target_mb`` for the write
         so coalescing targets the requested file size.  Unpartitioned
-        tables rewrite wholesale into ``ceil(bytes/target)`` files.
+        tables rewrite wholesale into ``ceil(bytes/target)`` files by a
+        shuffle-free ``coalesce`` that keeps the files' row order.
 
         Returns ``{"partitions_compacted": n, "files_before": a,
         "files_after": b}``.  Reference has no compaction op (Hudi's
@@ -789,8 +827,10 @@ class SparkBackend:
                     "files_after": total["files"],
                 }
             n_out = max(1, -(-total["bytes"] // target_bytes))
-            # target is read and overwritten
-            compacted = cut_lineage(df.repartition(n_out), eager=True)
+            # a narrow bin-pack of the scan's splits in file order: no
+            # shuffle, and a clustered table's row order survives.  The
+            # target is read and overwritten.
+            compacted = cut_lineage(df.coalesce(n_out), eager=True)
             compacted.write.insertInto(table_name, overwrite=True)
             spark.sql(f"REFRESH TABLE {table_name}")
             return {

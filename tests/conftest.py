@@ -7,20 +7,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 @pytest.fixture(scope="session")
-def spark():
-    import shutil
-
+def spark(tmp_path_factory):
     from easy_sql_spark.session import build_session
 
-    # in-memory catalog forgets tables between sessions but their files
-    # persist — stale dirs make CREATE TABLE fail with LOCATION_ALREADY_EXISTS
-    shutil.rmtree("/tmp/easy_sql_spark_test_warehouse", ignore_errors=True)
+    # a fresh warehouse per pytest session: the in-memory catalog forgets
+    # tables between sessions but their files persist (stale dirs make
+    # CREATE TABLE fail with LOCATION_ALREADY_EXISTS), and a shared fixed
+    # dir would let two sessions on one host delete each other's tables
+    warehouse = tmp_path_factory.mktemp("warehouse")
     spark = build_session(
         "easy_sql_spark_tests",
         master="local[4]",
         shuffle_partitions=4,
         extra_conf={
-            "spark.sql.warehouse.dir": "/tmp/easy_sql_spark_test_warehouse",
+            "spark.sql.warehouse.dir": str(warehouse),
             "spark.ui.enabled": "false",
         },
     )

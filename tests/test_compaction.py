@@ -112,3 +112,45 @@ def test_compact_preserves_partition_pruning(spark):
     assert scanned.count() == 16
     files = scanned.select("id").inputFiles()
     assert files and all("dt=a" in f for f in files)
+
+
+def test_compact_keeps_zorder_runs(spark):
+    """Unpartitioned compaction bin-packs whole files in scan order: every
+    z-ordered input file's rows reappear as one contiguous run, in the
+    same (z) order, inside one output file — where a round-robin
+    repartition deals each file's rows out over every output file."""
+    import pyarrow.parquet as pq
+
+    from easy_sql_spark.runtime.backend import SparkBackend, TableMeta
+
+    spark.sql("drop database if exists cmp5 cascade")
+    spark.sql("create database cmp5")
+    backend = SparkBackend(spark)
+    # ~2.4 MB of incompressible payload: compacting at 1 MB gives 3 files
+    src = spark.range(150_000).selectExpr(
+        "cast(id % 400 as double) as x",
+        "cast(cast(id / 400 as int) as double) as y",
+        "id",
+        "rand(7) as filler",
+    )
+    backend.save_table(
+        src, TableMeta.parse("cmp5.t"), "overwrite", True, zorder_cols=["x", "y"]
+    )
+
+    def runs():
+        return [
+            pq.read_table(f.removeprefix("file:"), columns=["id"])["id"]
+            .to_pylist()
+            for f in spark.table("cmp5.t").inputFiles()
+        ]
+
+    before = runs()
+    report = backend.compact_table("cmp5.t", target_mb=1, min_files=4)
+    after = runs()
+    assert report["files_before"] == len(before) >= 4
+    assert 1 < report["files_after"] == len(after) < len(before)
+    where = {i: (f, pos) for f, ids in enumerate(after) for pos, i in enumerate(ids)}
+    for ids in before:
+        f, start = where[ids[0]]
+        assert after[f][start : start + len(ids)] == ids
+    assert sum(len(ids) for ids in after) == 150_000

@@ -461,3 +461,68 @@ def test_keyed_merges_run_in_few_jobs(spark):
     finally:
         for name in names:
             spark.sql(f"drop table if exists {name}")
+
+
+def test_output_writes_run_no_helper_jobs(spark, monkeypatch):
+    """The output path launches only jobs that write: creating a table is
+    metadata-only (the CTAS it replaced ran a write job over ``WHERE
+    1=0``), an unpartitioned z-ordered insert takes one token-hash
+    shuffle with no range-sampling job and no cut (7 jobs with both),
+    and unpartitioned compaction bin-packs without a shuffle (3 jobs
+    with its round-robin repartition)."""
+    import easy_sql_spark.runtime.backend as backend_mod
+    from easy_sql_spark.runtime.backend import SparkBackend, TableMeta
+
+    backend = SparkBackend(spark)
+    spark.sql("create database if not exists hj")
+    names = ("hj.created", "hj.zo", "hj.frag")
+    try:
+        for name in names:
+            spark.sql(f"drop table if exists {name}")
+        src = spark.range(4000).selectExpr(
+            "cast(id % 64 as double) as x",
+            "cast(cast(id / 64 as int) as double) as y",
+            "id as payload",
+        )
+        created = TableMeta.parse("hj.created")
+        jobs = _save_jobs(
+            spark, lambda: backend.create_table_like_query(src, created)
+        )
+        assert jobs == 0, jobs
+        assert spark.catalog.tableExists(created.name)
+
+        zo = TableMeta.parse("hj.zo")
+        jobs = _save_jobs(
+            spark,
+            lambda: backend.save_table(
+                src, zo, "overwrite", True, zorder_cols=["x", "y"]
+            ),
+        )
+        assert jobs <= 4, jobs
+        assert spark.table(zo.name).count() == 4000
+        plan = plan_of(backend._zorder_for_insert(src, zo, ["x", "y"]))
+        assert "rangepartitioning" not in plan.lower(), plan
+        # a cut (localCheckpoint) would surface as an ExistingRDD scan
+        assert "ExistingRDD" not in plan, plan
+
+        spark.sql("create table hj.frag (id bigint, v string) using parquet")
+        for i in range(5):
+            spark.range(i * 10, i * 10 + 10).selectExpr(
+                "id", "concat('v', id) as v"
+            ).write.insertInto("hj.frag")
+        rewrites = []
+        cut_lineage = backend_mod.cut_lineage
+
+        def spy(df, *, eager):
+            rewrites.append(df)
+            return cut_lineage(df, eager=eager)
+
+        monkeypatch.setattr(backend_mod, "cut_lineage", spy)
+        jobs = _save_jobs(spark, lambda: backend.compact_table("hj.frag"))
+        assert jobs <= 2, jobs
+        assert len(rewrites) == 1
+        assert "Exchange" not in plan_of(rewrites[0])
+        assert spark.table("hj.frag").count() == 50
+    finally:
+        for name in names:
+            spark.sql(f"drop table if exists {name}")

@@ -986,9 +986,76 @@ select 6 as id, 60.0 as amount
     assert {r.id for r in spark.table("qdb.clean").collect()} == {1, 4, 6}
 
 
+_SCHEMA_PROBE_SQL = """select
+    'p' as region,
+    7 as bucket,
+    cast(1.5 as decimal(38,18)) as dec,
+    date'2024-01-02' as d,
+    timestamp'2024-01-02 03:04:05' as ts,
+    timestamp_ntz'2024-01-02 03:04:05' as ts_ntz,
+    cast('ab' as binary) as bin,
+    array(named_struct('a', 1, 'b', 'x')) as arr_st,
+    map('k', array(1, 2)) as m,
+    named_struct('n', 1, 'o', cast(null as string)) as strict,
+    1 as `my col`,
+    'q' as `we``ird`"""
+
+
+def test_create_table_schema_matches_ctas(spark):
+    """The metadata-only create stores exactly the schema the old empty
+    CTAS stored: every type round-trips through the DDL (decimal, dates,
+    both timestamps, binary, nested arrays/maps/structs), nested
+    non-nullable fields come out nullable, quoted names survive, and
+    partition columns go last.  An output step whose query returns no
+    rows into a new table leaves a readable empty table of that schema."""
+    from easy_sql_spark.runtime.backend import (
+        Partition,
+        SparkBackend,
+        TableMeta,
+    )
+
+    spark.sql("drop database if exists schdb cascade")
+    spark.sql("create database schdb")
+    df = spark.sql(_SCHEMA_PROBE_SQL)
+    assert not df.schema["strict"].dataType["n"].nullable
+    df.createOrReplaceTempView("schema_probe_src")
+    for name, parts in (("flat", []), ("parted", ["region", "bucket"])):
+        cols = ", ".join(
+            "`" + c.replace("`", "``") + "`"
+            for c in [c for c in df.columns if c not in parts] + parts
+        )
+        partitioned = (
+            f" PARTITIONED BY ({', '.join(parts)})" if parts else ""
+        )
+        spark.sql(
+            f"CREATE TABLE schdb.ctas_{name} USING PARQUET{partitioned} AS "
+            f"SELECT {cols} FROM schema_probe_src WHERE 1=0"
+        )
+        meta = TableMeta.parse(
+            f"schdb.ddl_{name}", [Partition(field=p) for p in parts]
+        )
+        SparkBackend(spark).create_table_like_query(df, meta)
+        expected = spark.table(f"schdb.ctas_{name}").schema
+        assert spark.table(meta.name).schema == expected
+        assert SparkBackend(spark).table_columns(meta.name)[1] == parts
+
+    etl = f"""-- target=variables
+select true as __create_output_table__, '' as __partition__region, '' as __partition__bucket
+
+-- target=output.schdb.empty_out
+select * from ({_SCHEMA_PROBE_SQL}) where false
+"""
+    SqlProcessor(spark, etl, logger=lambda m: None).run()
+    out = spark.table("schdb.empty_out")
+    assert out.schema == spark.table("schdb.ctas_parted").schema
+    assert out.collect() == []
+    spark.catalog.dropTempView("schema_probe_src")
+    spark.sql("drop database if exists schdb cascade")
+
+
 def test_create_table_ctas_lost_race_is_noop(spark):
-    """CREATE TABLE IF NOT EXISTS semantics survive the CTAS location
-    race: IF NOT EXISTS checks the catalog but CTAS validates the
+    """CREATE TABLE IF NOT EXISTS semantics survive the location race:
+    IF NOT EXISTS checks the catalog but the create validates the
     LOCATION separately, so a creator that loses a concurrent create
     surfaces LOCATION_ALREADY_EXISTS instead of the intended no-op.
     create_table_like_query treats that as the no-op when the table IS
@@ -1004,7 +1071,7 @@ def test_create_table_ctas_lost_race_is_noop(spark):
     meta = TableMeta.parse("racedb.t")
 
     class RacingSession:
-        """Forwards to the real session, but the first CTAS both runs the
+        """Forwards to the real session, but the first create both runs the
         winner's create AND raises the loser's error."""
 
         def __init__(self, real):
@@ -1032,7 +1099,8 @@ def test_create_table_ctas_lost_race_is_noop(spark):
     assert spark.catalog.tableExists("racedb.t")
 
     class StaleSession(RacingSession):
-        """The stale-directory shape: CTAS fails and NOBODY registered."""
+        """The stale-directory shape: the create fails and NOBODY
+        registered."""
 
         def sql(self, q, *a, **kw):
             if q.lstrip().upper().startswith("CREATE TABLE IF NOT EXISTS"):
@@ -1047,3 +1115,29 @@ def test_create_table_ctas_lost_race_is_noop(spark):
     with pytest.raises(RuntimeError, match="LOCATION_ALREADY_EXISTS"):
         backend2.create_table_like_query(df, meta)
     spark.sql("drop database if exists racedb cascade")
+
+
+def test_create_table_on_stale_dir_is_fatal(spark):
+    """The stale-directory shape for real: files left at a managed
+    table's location with no catalog entry make the create raise
+    LOCATION_ALREADY_EXISTS rather than adopt them."""
+    import os
+    from urllib.parse import urlparse
+
+    import pytest
+
+    from easy_sql_spark.runtime.backend import SparkBackend, TableMeta
+
+    spark.sql("drop database if exists staledb cascade")
+    spark.sql("create database staledb")
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    stale = os.path.join(wh, "staledb.db", "t")
+    os.makedirs(stale)
+    with open(os.path.join(stale, "part-00000.parquet"), "w") as f:
+        f.write("orphan")
+    with pytest.raises(Exception, match="LOCATION_ALREADY_EXISTS"):
+        SparkBackend(spark).create_table_like_query(
+            spark.range(3), TableMeta.parse("staledb.t")
+        )
+    assert not spark.catalog.tableExists("staledb.t")
+    spark.sql("drop database if exists staledb cascade")

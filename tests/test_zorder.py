@@ -146,6 +146,45 @@ from range(10000)
     assert t.agg({"payload": "sum"}).first()[0] == sum(range(10000))
 
 
+def test_output_step_zorder_by_is_write_zordered_layout(spark, tmp_path):
+    """One z-order layout: an unpartitioned ``__zorder_by__`` output step
+    writes the same per-file row sets as ``write_zordered`` over the same
+    rows and file count (max(defaultParallelism, 16))."""
+    import os
+    from urllib.parse import urlparse
+
+    from easy_sql_spark.runtime.processor import SqlProcessor
+
+    query = """select cast(id % 100 as double) as x,
+       cast(cast(id / 100 as int) as double) as y,
+       id as payload
+from range(10000)"""
+    spark.sql("drop database if exists zsame cascade")
+    spark.sql("create database zsame")
+    etl = f"""-- target=variables
+select true as __create_output_table__, 'x|y' as __zorder_by__
+
+-- target=output.zsame.grid
+{query}
+"""
+    SqlProcessor(spark, etl, logger=lambda m: None).run()
+    n = max(spark.sparkContext.defaultParallelism, 16)
+    path = str(tmp_path / "zsame")
+    write_zordered(spark.sql(query), path, ["x", "y"], n_files=n)
+
+    def row_sets(pattern):
+        return sorted(
+            sorted(pq.read_table(f, columns=["payload"])["payload"].to_pylist())
+            for f in glob.glob(pattern)
+        )
+
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    step = row_sets(os.path.join(wh, "zsame.db", "grid", "part-*"))
+    assert len(step) == n
+    assert step == row_sets(path + "/part-*.parquet")
+    spark.sql("drop database if exists zsame cascade")
+
+
 def test_zorder_table_maintenance_rewrite(spark):
     """func.zorder_table: rewrite an existing (unclustered) table so its
     row groups become bounded in both listed dimensions."""
