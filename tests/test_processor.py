@@ -1124,8 +1124,6 @@ def test_create_table_on_stale_dir_is_fatal(spark):
     import os
     from urllib.parse import urlparse
 
-    import pytest
-
     from easy_sql_spark.runtime.backend import SparkBackend, TableMeta
 
     spark.sql("drop database if exists staledb cascade")
